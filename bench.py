@@ -618,7 +618,7 @@ def main() -> None:
     # map-side op (decode + features + fingerprint, shuffle only the slim
     # fp64 groupBy), so per-clip cost is scale-free; the slice keeps the
     # driver's per-round bench wall bounded while the full-table scaling
-    # evidence lives in tools/pipeline_scaling.py.  The cut is a RANGE on
+    # evidence lives in tools/pass_scaling.py.  The cut is a RANGE on
     # clip_id (ids are written in order), so parquet min/max stats prune
     # the untouched row groups — a hash-based cut would still scan every
     # byte of the binary column and understate throughput.  The slice MUST

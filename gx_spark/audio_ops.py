@@ -26,12 +26,38 @@ hashing cannot be.  A production system indexing hour-long audio would
 extend the same plumbing to landmark *pairs* (anchor→target deltas,
 Shazam-style); the Spark-side shape — decode UDF → fp → groupBy — is
 identical.
+
+One decode/encode driver runs every per-clip op; an op supplies only its
+per-clip logic:
+
+- **Payload transforms** (trim, gain, speed, window, noise, transcode,
+  resample, the repairs, reverb, tempo, denoise) give a list of kernels
+  ``kernel(pcm, sr, rid) -> (pcm' or None, sr', {column: value})`` to
+  ``_map_payloads``.  ``rid`` is the row's id_col value (None when the op
+  takes no id column); only the seeded augmentations read it.  Kernels
+  run in order on one decode; ``None`` means the clip is untouched, and
+  a clip no kernel touched keeps its ORIGINAL bytes and codec, otherwise
+  the last pcm is encoded once (pcm_s16le WAV, or transcode_audio's
+  codec).  The fused augment_pipeline / repair_pipeline are just longer
+  kernel lists, so they equal the chained ops by construction.
+- **Feature ops** give their ``compute_*_row`` (one decode inside it) to
+  ``_map_features``, which builds the pandas UDF, projects the struct out
+  as flat columns beside ``keep_cols`` and drops the binary column in the
+  same select.  Several row functions (qa_features) share one decode
+  made by the driver and passed as ``decoded=(sr, pcm)``.  The audio gate
+  expectations build their columns with the same ``_row_udf``.
+
+Error contract: a row whose decode OR kernel / row function raises
+ValueError, NotImplementedError or TypeError is nulled — null bytes, the
+original codec and null in every column the op writes (a feature op: a
+null struct).  Any other exception is a bug and fails the task.
 """
 
 from __future__ import annotations
 
 import os
-from functools import lru_cache
+import zlib
+from functools import lru_cache, partial
 from math import gcd
 from typing import Any
 
@@ -40,7 +66,202 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .audio import decode_payload
+
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# what a bad payload raises (decode, or a kernel fed by it): the row is
+# nulled instead of failing the task
+_ROW_ERRORS = (ValueError, NotImplementedError, TypeError)
+
+
+# ---------------------------------------------------------------------------
+# the decode/encode driver
+# ---------------------------------------------------------------------------
+
+
+def _on_workers(fn, *args):
+    """``fn(*args, *call_args)`` as a callable Spark ships to its Python
+    workers.  fn and args travel as one cloudpickle blob that is loaded
+    only after the repo root is on the worker's sys.path, so kernels and
+    row functions resolve even where the worker did not start in the
+    repo (the one sys.path edit of the audio ops)."""
+    from pyspark import cloudpickle
+
+    blob = cloudpickle.dumps((fn, args))
+    repo_root = _REPO_ROOT
+
+    def call(*call_args):
+        import pickle
+        import sys
+
+        if repo_root not in sys.path:
+            sys.path.insert(0, repo_root)
+        f, a = pickle.loads(blob)
+        return f(*a, *call_args)
+
+    return call
+
+
+def _pandas_dtype(dt) -> str:
+    """Nullable pandas dtype that carries Spark type ``dt`` through Arrow
+    (a plain int list with a None would turn float64)."""
+    from pyspark.sql.types import BooleanType, DoubleType, IntegerType, LongType
+
+    return {IntegerType: "Int32", LongType: "Int64", DoubleType: "float64",
+            BooleanType: "boolean"}.get(type(dt), "object")
+
+
+def _column(values: list, dtype: str):
+    return values if dtype == "object" else pd.array(values, dtype=dtype)
+
+
+def _decode(b, codec: str, decoded: Any = None):
+    """(sr, pcm) of one payload — the caller's ``decoded`` hand-off when
+    given — or None for a null or undecodable payload."""
+    if b is None:
+        return None
+    if decoded is not None:
+        return decoded
+    try:
+        return decode_payload(bytes(b), codec)
+    except (ValueError, NotImplementedError):
+        return None
+
+
+def _map_payloads(
+    df: DataFrame,
+    kernels: list,
+    *,
+    bytes_col: str,
+    codec_col: str,
+    id_col: str | None = None,
+    stats: str = "",
+    headers: tuple[str, ...] = (),
+    to_codec: str = "pcm_s16le",
+) -> DataFrame:
+    """Run ``kernels`` over every clip in one map-only mapInPandas pass.
+
+    Output schema = input + the ``stats`` DDL columns.  Kernel-returned
+    values land in the stats columns and in the ``headers`` columns
+    (sr_hz / dur_ms) present in the input; other returned keys are
+    dropped, and a column no kernel set on a row is null."""
+    from pyspark.sql.types import StructType
+
+    added = list(StructType.fromDDL(stats).fields) if stats else []
+    written = [(f.name, _pandas_dtype(f.dataType)) for f in
+               [f for f in df.schema.fields if f.name in headers] + added]
+    return df.mapInPandas(
+        _on_workers(_payload_batches, kernels, bytes_col, codec_col, id_col,
+                    written, to_codec),
+        schema=StructType(list(df.schema.fields) + added))
+
+
+def _payload_batches(kernels, bytes_col, codec_col, id_col, written,
+                     to_codec, batches):
+    from .audio import encode_payload
+
+    for pdf in batches:
+        ids = pdf[id_col] if id_col else [None] * len(pdf)
+        new_bytes: list[bytes | None] = []
+        new_codec: list[str] = []
+        vals: dict[str, list] = {k: [] for k, _ in written}
+        for rid, bb, cc in zip(ids, pdf[bytes_col], pdf[codec_col]):
+            row: dict[str, Any] = {}
+            try:
+                sr, pcm = decode_payload(bytes(bb), cc)
+                touched = False
+                for kernel in kernels:
+                    y, sr, r = kernel(pcm, sr, rid)
+                    row.update(r)
+                    if y is not None:
+                        pcm, touched = y, True
+                new_bytes.append(encode_payload(pcm, sr, to_codec)
+                                 if touched else bytes(bb))
+                new_codec.append(to_codec if touched else cc)
+            except _ROW_ERRORS:
+                row = {}
+                new_bytes.append(None)
+                new_codec.append(cc)
+            for k, v in vals.items():
+                v.append(row.get(k))
+        pdf = pdf.copy()
+        pdf[bytes_col] = new_bytes
+        pdf[codec_col] = new_codec
+        for k, dtype in written:
+            pdf[k] = _column(vals[k], dtype)
+        yield pdf
+
+
+def _row_udf(schema: str, *row_fns):
+    """pandas UDF returning ``schema`` from per-row functions.
+
+    One row function is called as ``fn(*row)`` on the UDF's input
+    columns and decodes for itself.  Several (a fused pass over (bytes,
+    codec)) share one decode made here: each is called as
+    ``fn(b, codec, decoded=(sr, pcm))`` and their dicts merge, later
+    functions winning on shared keys.  A struct schema takes dict (or
+    field-ordered tuple) results, a scalar schema the value itself."""
+    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.types import DataType, StructType
+
+    dt = DataType.fromDDL(schema)
+    fields = ([(f.name, _pandas_dtype(f.dataType)) for f in dt.fields]
+              if isinstance(dt, StructType) else None)
+    return pandas_udf(dt)(
+        _on_workers(_row_frame, row_fns, fields, _pandas_dtype(dt)))
+
+
+def _fused_row(row_fns, b, codec):
+    dec = decode_payload(bytes(b), codec)
+    out: dict[str, Any] = {}
+    for fn in row_fns:
+        out.update(fn(b, codec, decoded=dec))
+    return out
+
+
+def _row_frame(row_fns, fields, dtype, *cols):
+    fn = row_fns[0] if len(row_fns) == 1 else partial(_fused_row, row_fns)
+    rows = []
+    for vals in zip(*cols):
+        try:
+            rows.append(fn(*vals))
+        except _ROW_ERRORS:
+            rows.append(None)
+    if fields is None:
+        return pd.Series(_column(rows, dtype))
+    names = [k for k, _ in fields]
+    rows = [dict(zip(names, r)) if isinstance(r, tuple) else r or {}
+            for r in rows]
+    return pd.DataFrame({k: _column([r.get(k) for r in rows], d)
+                         for k, d in fields}, copy=False)
+
+
+def _map_features(
+    df: DataFrame,
+    schema: str,
+    row_fns: list,
+    in_cols: tuple[str, ...],
+    bytes_col: str,
+    keep_cols: list[str] | None,
+    hashed: str | None = None,
+) -> DataFrame:
+    """``keep_cols`` (default: every column but ``bytes_col``) plus the
+    row functions' ``schema`` fields as flat columns, in one projection
+    that also drops the binary column.  ``hashed`` names a signature
+    field emitted instead as its JVM-side xxhash64 ``fp64``."""
+    keep = keep_cols if keep_cols is not None else [
+        c for c in df.columns if c != bytes_col]
+    udf = _row_udf(schema, *row_fns)
+    feat = udf(*[F.col(c) for c in in_cols]).alias("_f")
+    cols = [F.col(f"_f.{k}").alias(k) for k in udf.returnType.fieldNames()
+            if k != hashed]
+    if hashed:
+        # xxhash64(NULL) returns the seed, a real value — guard so
+        # undecodable rows get a null key instead of all colliding on it
+        cols.append(F.when(F.col(f"_f.{hashed}").isNotNull(),
+                           F.xxhash64(F.col(f"_f.{hashed}"))).alias("fp64"))
+    return df.select(*keep, feat).select(*keep, *cols)
 
 AUDIO_FEATURES_SCHEMA = (
     "n_samples long, header_sr int, rms_dbfs double, peak double, "
@@ -85,20 +306,12 @@ def compute_features_row(
     pipeline computing both features and dedup keys decodes each payload
     exactly once.
     """
-    from .audio import decode_payload
-
     keys = _FEATURE_KEYS + ("fp_sig",) if fingerprint else _FEATURE_KEYS
     out: dict[str, Any] = {k: None for k in keys}
-    if b is None:
+    dec = _decode(b, codec, decoded)
+    if dec is None:
         return out
-    if decoded is not None:
-        # caller already decoded (compute_curation_row's one-decode pass)
-        sr, pcm = decoded
-    else:
-        try:
-            sr, pcm = decode_payload(bytes(b), codec)
-        except (ValueError, NotImplementedError):
-            return out
+    sr, pcm = dec
     if fingerprint:
         out["fp_sig"] = _fingerprint_from_pcm(sr, pcm)
     n = len(pcm)
@@ -141,34 +354,6 @@ def compute_features_row(
     return out
 
 
-def _features_udf(frame_ms: int, silence_dbfs: float, clip_rail: int,
-                  fingerprint: bool):
-    from pyspark.sql.functions import pandas_udf
-
-    repo_root = _REPO_ROOT
-    keys = _FEATURE_KEYS + ("fp_sig",) if fingerprint else _FEATURE_KEYS
-    schema = AUDIO_FEATURES_SCHEMA + (", fp_sig string" if fingerprint else "")
-
-    @pandas_udf(schema)
-    def audio_features(b: pd.Series, codec: pd.Series) -> pd.DataFrame:
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio_ops import compute_features_row as _cfr
-
-        cols: dict[str, list] = {k: [] for k in keys}
-        appends = [cols[k].append for k in keys]
-        for bb, cc in zip(b, codec):
-            r = _cfr(bb, cc, frame_ms=frame_ms, silence_dbfs=silence_dbfs,
-                     clip_rail=clip_rail, fingerprint=fingerprint)
-            for ap, k in zip(appends, keys):
-                ap(r[k])
-        return pd.DataFrame(cols, copy=False)
-
-    return audio_features
-
-
 def extract_audio_features(
     df: DataFrame,
     *,
@@ -190,21 +375,12 @@ def extract_audio_features(
     fingerprint=True adds an fp64 dedup-key column from the same decode
     (one scan serves both feature stats and duplicate grouping).
     """
-    keep = keep_cols if keep_cols is not None else [
-        c for c in df.columns if c != bytes_col
-    ]
-    udf = _features_udf(frame_ms, silence_dbfs, clip_rail, fingerprint)
-    feat = udf(F.col(bytes_col), F.col(codec_col)).alias("_f")
-    out_keys = list(_FEATURE_KEYS)
-    projected = df.select(*keep, feat)
-    cols = [F.col(f"_f.{k}").alias(k) for k in out_keys]
-    if fingerprint:
-        # xxhash64(NULL) returns the seed, a real value — guard so
-        # undecodable rows get a null key instead of all colliding on it
-        cols.append(
-            F.when(F.col("_f.fp_sig").isNotNull(),
-                   F.xxhash64(F.col("_f.fp_sig"))).alias("fp64"))
-    return projected.select(*keep, *cols)
+    row = partial(compute_features_row, frame_ms=frame_ms,
+                  silence_dbfs=silence_dbfs, clip_rail=clip_rail,
+                  fingerprint=fingerprint)
+    schema = AUDIO_FEATURES_SCHEMA + (", fp_sig string" if fingerprint else "")
+    return _map_features(df, schema, [row], (bytes_col, codec_col), bytes_col,
+                         keep_cols, hashed="fp_sig" if fingerprint else None)
 
 
 # ---------------------------------------------------------------------------
@@ -228,15 +404,8 @@ def compute_fingerprint_row(
     string embeds the sample rate and frame grid so clips at different
     rates never collide by accident; hashing to 64 bits happens JVM-side
     (xxhash64)."""
-    from .audio import decode_payload
-
-    if b is None:
-        return None
-    try:
-        sr, pcm = decode_payload(bytes(b), codec)
-    except (ValueError, NotImplementedError):
-        return None
-    return _fingerprint_from_pcm(sr, pcm, frame, hop)
+    dec = _decode(b, codec)
+    return None if dec is None else _fingerprint_from_pcm(*dec, frame, hop)
 
 
 def _fingerprint_from_pcm(
@@ -260,26 +429,6 @@ def _fingerprint_from_pcm(
     return f"{sr}/{frame}:{p1},{p2}|" + ",".join(map(str, peaks.tolist()))
 
 
-def _fingerprint_udf(frame: int, hop: int):
-    from pyspark.sql.functions import pandas_udf
-
-    repo_root = _REPO_ROOT
-
-    @pandas_udf("string")
-    def audio_fp(b: pd.Series, codec: pd.Series) -> pd.Series:
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio_ops import compute_fingerprint_row as _cfp
-
-        return pd.Series(
-            [_cfp(bb, cc, frame=frame, hop=hop) for bb, cc in zip(b, codec)]
-        )
-
-    return audio_fp
-
-
 def fingerprint_audio(
     df: DataFrame,
     *,
@@ -293,7 +442,8 @@ def fingerprint_audio(
 
     Output is ~16 bytes/row: only this ever shuffles.  fp64 is xxhash64
     over the signature string (computed JVM-side, not in the UDF)."""
-    udf = _fingerprint_udf(frame, hop)
+    udf = _row_udf("string", partial(compute_fingerprint_row, frame=frame,
+                                     hop=hop))
     return (
         df.select(F.col(id_col), udf(F.col(bytes_col), F.col(codec_col)).alias("_sig"))
         .where(F.col("_sig").isNotNull())
@@ -375,15 +525,10 @@ def silence_bounds_row(
     frame_ms) joins the trail if silent, else the active span.  An
     all-silent clip reports (dur, 0, 0).  (None, None, None) on decode
     failure."""
-    from .audio import decode_payload
-
-    if b is None:
+    dec = _decode(b, codec)
+    if dec is None:
         return None, None, None
-    try:
-        sr, pcm = decode_payload(bytes(b), codec)
-    except (ValueError, NotImplementedError):
-        return None, None, None
-    return _bounds_from_pcm(sr, pcm, frame_ms, silence_dbfs)
+    return _bounds_from_pcm(*dec, frame_ms, silence_dbfs)
 
 
 def _bounds_from_pcm(
@@ -430,39 +575,10 @@ def silence_bounds(
 ) -> DataFrame:
     """Per-clip dead-air analysis as flat columns; map-only, binary pruned
     in the same projection (same plan shape as extract_audio_features)."""
-    from pyspark.sql.functions import pandas_udf
-
-    keep = keep_cols if keep_cols is not None else [
-        c for c in df.columns if c != bytes_col
-    ]
-    repo_root = _REPO_ROOT
-
-    @pandas_udf(SILENCE_BOUNDS_SCHEMA)
-    def bounds(b: pd.Series, codec: pd.Series) -> pd.DataFrame:
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio_ops import silence_bounds_row as _sbr
-
-        lead, trail, active = [], [], []
-        for bb, cc in zip(b, codec):
-            lo, tr, ac = _sbr(bb, cc, frame_ms=frame_ms,
-                              silence_dbfs=silence_dbfs)
-            lead.append(lo)
-            trail.append(tr)
-            active.append(ac)
-        return pd.DataFrame(
-            {"lead_ms": lead, "trail_ms": trail, "active_ms": active},
-            copy=False)
-
-    feat = bounds(F.col(bytes_col), F.col(codec_col)).alias("_s")
-    return df.select(*keep, feat).select(
-        *keep,
-        F.col("_s.lead_ms").alias("lead_ms"),
-        F.col("_s.trail_ms").alias("trail_ms"),
-        F.col("_s.active_ms").alias("active_ms"),
-    )
+    row = partial(silence_bounds_row, frame_ms=frame_ms,
+                  silence_dbfs=silence_dbfs)
+    return _map_features(df, SILENCE_BOUNDS_SCHEMA, [row],
+                         (bytes_col, codec_col), bytes_col, keep_cols)
 
 
 def trim_silence(
@@ -479,54 +595,19 @@ def trim_silence(
     when present, like resample_audio); undecodable rows pass through with
     null bytes.  An all-silent clip trims to empty bytes (dur_ms 0) so a
     downstream `dur_ms > 0` filter drops it."""
-    out_schema = df.schema
-    repo_root = _REPO_ROOT
+    return _map_payloads(
+        df, [partial(_trim_kernel, frame_ms=frame_ms,
+                     silence_dbfs=silence_dbfs)],
+        bytes_col=bytes_col, codec_col=codec_col, headers=("sr_hz", "dur_ms"))
 
-    def _batches(it):
-        import sys
 
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import decode_payload, wav_encode
-        from gx_spark.audio_ops import _bounds_from_pcm as _bfp
-
-        for pdf in it:
-            new_bytes: list[bytes | None] = []
-            new_sr: list[int | None] = []
-            new_dur: list[int | None] = []
-            for bb, cc in zip(pdf[bytes_col], pdf[codec_col]):
-                try:
-                    sr, pcm = decode_payload(bytes(bb), cc)
-                except (ValueError, NotImplementedError, TypeError):
-                    new_bytes.append(None)
-                    new_sr.append(None)
-                    new_dur.append(None)
-                    continue
-                lo, _tr, ac = _bfp(sr, pcm, frame_ms, silence_dbfs)
-                if lo is None:
-                    new_bytes.append(None)
-                    new_sr.append(None)
-                    new_dur.append(None)
-                    continue
-                a = int(round(lo * sr / 1000.0))
-                z = a + int(round(ac * sr / 1000.0))
-                new_bytes.append(wav_encode(pcm[a:z], sr))
-                new_sr.append(sr)
-                new_dur.append(ac)
-            pdf = pdf.copy()
-            pdf[bytes_col] = new_bytes
-            if "sr_hz" in pdf.columns:
-                pdf["sr_hz"] = pd.array(new_sr, dtype="Int32")
-            if "dur_ms" in pdf.columns:
-                pdf["dur_ms"] = pd.array(new_dur, dtype="Int32")
-            if codec_col in pdf.columns:
-                pdf[codec_col] = [
-                    "pcm_s16le" if nb is not None else cc
-                    for nb, cc in zip(new_bytes, pdf[codec_col])
-                ]
-            yield pdf
-
-    return df.mapInPandas(_batches, schema=out_schema)
+def _trim_kernel(pcm, sr, _rid, *, frame_ms, silence_dbfs):
+    lo, _tr, ac = _bounds_from_pcm(sr, pcm, frame_ms, silence_dbfs)
+    if lo is None:
+        raise ValueError("no samples to trim")
+    a = int(round(lo * sr / 1000.0))
+    z = a + int(round(ac * sr / 1000.0))
+    return pcm[a:z], sr, {"sr_hz": sr, "dur_ms": ac}
 
 
 # ---------------------------------------------------------------------------
@@ -602,14 +683,10 @@ def segment_stats_row(
     included); longest_gap_ms is the longest INTERNAL silence between
     surviving segments (0 with fewer than two).  (None, None, None) on
     decode failure."""
-    from .audio import decode_payload
-
-    if b is None:
+    dec = _decode(b, codec)
+    if dec is None:
         return None, None, None
-    try:
-        sr, pcm = decode_payload(bytes(b), codec)
-    except (ValueError, NotImplementedError):
-        return None, None, None
+    sr, pcm = dec
     segs = _segments_from_pcm(sr, pcm, frame_ms, silence_dbfs, min_gap_ms)
     if segs is None:
         return None, None, None
@@ -638,39 +715,10 @@ def segment_stats(
     """Per-clip VAD segmentation summary as flat columns — the measurement
     pass of segment_audio.  Map-only, one decode per clip, binary pruned
     in the same projection (the silence_bounds plan shape)."""
-    from pyspark.sql.functions import pandas_udf
-
-    keep = keep_cols if keep_cols is not None else [
-        c for c in df.columns if c != bytes_col
-    ]
-    repo_root = _REPO_ROOT
-
-    @pandas_udf(SEGMENT_STATS_SCHEMA)
-    def seg(b: pd.Series, codec: pd.Series) -> pd.DataFrame:
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio_ops import segment_stats_row as _ssr
-
-        ns, sp, gp = [], [], []
-        for bb, cc in zip(b, codec):
-            a, s, g = _ssr(bb, cc, frame_ms=frame_ms,
-                           silence_dbfs=silence_dbfs, min_gap_ms=min_gap_ms)
-            ns.append(a)
-            sp.append(s)
-            gp.append(g)
-        return pd.DataFrame(
-            {"n_segments": ns, "speech_ms": sp, "longest_gap_ms": gp},
-            copy=False)
-
-    feat = seg(F.col(bytes_col), F.col(codec_col)).alias("_g")
-    return df.select(*keep, feat).select(
-        *keep,
-        F.col("_g.n_segments").alias("n_segments"),
-        F.col("_g.speech_ms").alias("speech_ms"),
-        F.col("_g.longest_gap_ms").alias("longest_gap_ms"),
-    )
+    row = partial(segment_stats_row, frame_ms=frame_ms,
+                  silence_dbfs=silence_dbfs, min_gap_ms=min_gap_ms)
+    return _map_features(df, SEGMENT_STATS_SCHEMA, [row],
+                         (bytes_col, codec_col), bytes_col, keep_cols)
 
 
 def segment_audio(
@@ -705,14 +753,9 @@ def segment_audio(
     out_schema = StructType(
         list(df.schema.fields) + [StructField("seg_idx", IntegerType())]
     )
-    repo_root = _REPO_ROOT
     cols = list(df.columns)
 
     def _batches(it):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
         from gx_spark.audio import decode_payload, wav_encode
         from gx_spark.audio_ops import _segments_from_pcm as _sfp
 
@@ -749,7 +792,7 @@ def segment_audio(
             pdf_out["seg_idx"] = pd.array(pdf_out["seg_idx"], dtype="Int32")
             yield pdf_out
 
-    return df.mapInPandas(_batches, schema=out_schema)
+    return df.mapInPandas(_on_workers(_batches), schema=out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -805,50 +848,15 @@ def normalize_gain(
     mapInPandas keeps payloads inside Arrow batches; map-only, no
     shuffle.
     """
-    from pyspark.sql.types import DoubleType, StructField, StructType
+    return _map_payloads(
+        df, [partial(_gain_kernel, target_dbfs=target_dbfs,
+                     peak_limit=peak_limit)],
+        bytes_col=bytes_col, codec_col=codec_col, stats="gain_db double")
 
-    out_schema = StructType(
-        list(df.schema.fields) + [StructField("gain_db", DoubleType())]
-    )
-    repo_root = _REPO_ROOT
-    cols = list(df.columns)
 
-    def _batches(it):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import decode_payload, wav_encode
-        from gx_spark.audio_ops import normalize_gain_pcm as _ngp
-
-        for pdf in it:
-            new_bytes: list[bytes | None] = []
-            new_codec: list[str] = []
-            gains: list[float | None] = []
-            for bb, cc in zip(pdf[bytes_col], pdf[codec_col]):
-                try:
-                    sr, pcm = decode_payload(bytes(bb), cc)
-                except (ValueError, NotImplementedError, TypeError):
-                    new_bytes.append(None)
-                    new_codec.append(cc)
-                    gains.append(None)
-                    continue
-                y, gdb = _ngp(pcm, target_dbfs, peak_limit)
-                if gdb == 0.0 and y is pcm:  # all-silent passthrough
-                    new_bytes.append(bytes(bb))
-                    new_codec.append(cc)
-                else:
-                    new_bytes.append(wav_encode(y, sr))
-                    new_codec.append("pcm_s16le")
-                gains.append(gdb)
-            pdf = pdf.copy()
-            pdf[bytes_col] = new_bytes
-            if codec_col in pdf.columns:
-                pdf[codec_col] = new_codec
-            pdf["gain_db"] = pd.array(gains, dtype="float64")
-            yield pdf
-
-    return df.mapInPandas(_batches, schema=out_schema)
+def _gain_kernel(pcm, sr, _rid, *, target_dbfs, peak_limit):
+    y, gdb = normalize_gain_pcm(pcm, target_dbfs, peak_limit)
+    return (None if y is pcm else y), sr, {"gain_db": gdb}
 
 
 def speed_perturb(
@@ -871,54 +879,24 @@ def speed_perturb(
     present) is recomputed from the new length.  Undecodable rows pass
     through with null bytes.  mapInPandas, map-only — payloads never
     shuffle."""
-    from pyspark.sql.types import StructType
-
     if factor <= 0:
         raise ValueError("factor must be positive")
-    out_schema = StructType(list(df.schema.fields))
-    repo_root = _REPO_ROOT
+    return _map_payloads(
+        df, [partial(_speed_kernel, factor=factor, taps=taps)],
+        bytes_col=bytes_col, codec_col=codec_col, headers=("dur_ms",))
 
-    def _batches(it):
-        import sys
 
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import decode_payload, wav_encode
-        from gx_spark.audio_ops import resample_sinc as _rs
-
-        for pdf in it:
-            new_bytes: list[bytes | None] = []
-            new_codec: list[str] = []
-            new_dur: list[int | None] = []
-            for bb, cc in zip(pdf[bytes_col], pdf[codec_col]):
-                try:
-                    sr, pcm = decode_payload(bytes(bb), cc)
-                    # resample to sr/factor worth of samples, relabel at sr
-                    n_out = int(round(len(pcm) / factor))
-                    y = _rs(pcm, sr, max(1, int(round(sr / factor))),
-                            taps=taps)
-                    # sinc grid rounding and the n/factor contract agree
-                    # except at extreme factors; trim/pad the odd sample
-                    if len(y) > n_out:
-                        y = y[:n_out]
-                    elif len(y) < n_out:
-                        y = np.pad(y, (0, n_out - len(y)))
-                    new_bytes.append(wav_encode(y, sr))
-                    new_codec.append("pcm_s16le")
-                    new_dur.append(int(round(len(y) * 1000.0 / sr)))
-                except (ValueError, NotImplementedError, TypeError):
-                    new_bytes.append(None)
-                    new_codec.append(cc)
-                    new_dur.append(None)
-            pdf = pdf.copy()
-            pdf[bytes_col] = new_bytes
-            if codec_col in pdf.columns:
-                pdf[codec_col] = new_codec
-            if "dur_ms" in pdf.columns:
-                pdf["dur_ms"] = pd.array(new_dur, dtype="Int32")
-            yield pdf
-
-    return df.mapInPandas(_batches, schema=out_schema)
+def _speed_kernel(pcm, sr, _rid, *, factor, taps):
+    # resample to sr/factor worth of samples, relabel at sr
+    n_out = int(round(len(pcm) / factor))
+    y = resample_sinc(pcm, sr, max(1, int(round(sr / factor))), taps=taps)
+    # sinc grid rounding and the n/factor contract agree except at
+    # extreme factors; trim/pad the odd sample
+    if len(y) > n_out:
+        y = y[:n_out]
+    elif len(y) < n_out:
+        y = np.pad(y, (0, n_out - len(y)))
+    return y, sr, {"dur_ms": int(round(len(y) * 1000.0 / sr))}
 
 
 def pad_or_trim(
@@ -935,48 +913,17 @@ def pad_or_trim(
     row.  Output re-encodes pcm_s16le at the original sr with dur_ms
     (when present) set to target_ms; undecodable rows pass through with
     null bytes.  mapInPandas, map-only."""
-    from pyspark.sql.types import StructType
-
     if target_ms <= 0:
         raise ValueError("target_ms must be positive")
-    out_schema = StructType(list(df.schema.fields))
-    repo_root = _REPO_ROOT
+    return _map_payloads(
+        df, [partial(_window_kernel, target_ms=target_ms)],
+        bytes_col=bytes_col, codec_col=codec_col, headers=("dur_ms",))
 
-    def _batches(it):
-        import sys
 
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import decode_payload, wav_encode
-
-        for pdf in it:
-            new_bytes: list[bytes | None] = []
-            new_codec: list[str] = []
-            new_dur: list[int | None] = []
-            for bb, cc in zip(pdf[bytes_col], pdf[codec_col]):
-                try:
-                    sr, pcm = decode_payload(bytes(bb), cc)
-                    n_t = sr * int(target_ms) // 1000
-                    if len(pcm) >= n_t:
-                        y = pcm[:n_t]
-                    else:
-                        y = np.pad(pcm, (0, n_t - len(pcm)))
-                    new_bytes.append(wav_encode(y, sr))
-                    new_codec.append("pcm_s16le")
-                    new_dur.append(int(target_ms))
-                except (ValueError, NotImplementedError, TypeError):
-                    new_bytes.append(None)
-                    new_codec.append(cc)
-                    new_dur.append(None)
-            pdf = pdf.copy()
-            pdf[bytes_col] = new_bytes
-            if codec_col in pdf.columns:
-                pdf[codec_col] = new_codec
-            if "dur_ms" in pdf.columns:
-                pdf["dur_ms"] = pd.array(new_dur, dtype="Int32")
-            yield pdf
-
-    return df.mapInPandas(_batches, schema=out_schema)
+def _window_kernel(pcm, sr, _rid, *, target_ms):
+    n_t = sr * int(target_ms) // 1000
+    y = pcm[:n_t] if len(pcm) >= n_t else np.pad(pcm, (0, n_t - len(pcm)))
+    return y, sr, {"dur_ms": int(target_ms)}
 
 
 def augment_noise_pcm(
@@ -1026,54 +973,16 @@ def augment_noise(
     bytes, and for all-silent clips, which pass through unchanged — SNR
     vs silence is undefined).  Mixed rows re-encode as pcm_s16le WAV.
     mapInPandas, map-only: payloads never enter a shuffle."""
-    import zlib
+    return _map_payloads(
+        df, [partial(_noise_kernel, snr_db=snr_db, seed=seed)],
+        bytes_col=bytes_col, codec_col=codec_col, id_col=id_col,
+        stats="noise_rms_dbfs double")
 
-    from pyspark.sql.types import DoubleType, StructField, StructType
 
-    out_schema = StructType(
-        list(df.schema.fields) + [StructField("noise_rms_dbfs", DoubleType())]
-    )
-    repo_root = _REPO_ROOT
-
-    def _batches(it):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import decode_payload, wav_encode
-        from gx_spark.audio_ops import augment_noise_pcm as _anp
-
-        for pdf in it:
-            new_bytes: list[bytes | None] = []
-            new_codec: list[str] = []
-            floors: list[float | None] = []
-            for rid, bb, cc in zip(pdf[id_col], pdf[bytes_col],
-                                   pdf[codec_col]):
-                try:
-                    sr, pcm = decode_payload(bytes(bb), cc)
-                except (ValueError, NotImplementedError, TypeError):
-                    new_bytes.append(None)
-                    new_codec.append(cc)
-                    floors.append(None)
-                    continue
-                rs = zlib.crc32(f"{seed}:{rid}".encode("utf-8"))
-                rng = np.random.default_rng(rs)
-                y, floor = _anp(pcm, snr_db, rng)
-                if floor is None:  # silent passthrough
-                    new_bytes.append(bytes(bb))
-                    new_codec.append(cc)
-                else:
-                    new_bytes.append(wav_encode(y, sr))
-                    new_codec.append("pcm_s16le")
-                floors.append(floor)
-            pdf = pdf.copy()
-            pdf[bytes_col] = new_bytes
-            if codec_col in pdf.columns:
-                pdf[codec_col] = new_codec
-            pdf["noise_rms_dbfs"] = pd.array(floors, dtype="float64")
-            yield pdf
-
-    return df.mapInPandas(_batches, schema=out_schema)
+def _noise_kernel(pcm, sr, rid, *, snr_db, seed):
+    rng = np.random.default_rng(zlib.crc32(f"{seed}:{rid}".encode("utf-8")))
+    y, floor = augment_noise_pcm(pcm, snr_db, rng)
+    return (None if floor is None else y), sr, {"noise_rms_dbfs": floor}
 
 
 # ---------------------------------------------------------------------------
@@ -1107,35 +1016,12 @@ def transcode_audio(
         raise ValueError(
             f"to_codec must be one of {sorted(DECODABLE_CODECS)}, "
             f"got {to_codec!r}")
-    out_schema = df.schema
-    repo_root = _REPO_ROOT
+    return _map_payloads(df, [_transcode_kernel], bytes_col=bytes_col,
+                         codec_col=codec_col, to_codec=to_codec)
 
-    def _batches(it):
-        import sys
 
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import decode_payload, encode_payload
-
-        for pdf in it:
-            new_bytes: list[bytes | None] = []
-            new_codec: list[str] = []
-            for bb, cc in zip(pdf[bytes_col], pdf[codec_col]):
-                try:
-                    sr, pcm = decode_payload(bytes(bb), cc)
-                except (ValueError, NotImplementedError, TypeError):
-                    new_bytes.append(None)
-                    new_codec.append(cc)
-                    continue
-                new_bytes.append(encode_payload(pcm, sr, to_codec))
-                new_codec.append(to_codec)
-            pdf = pdf.copy()
-            pdf[bytes_col] = new_bytes
-            if codec_col in pdf.columns:
-                pdf[codec_col] = new_codec
-            yield pdf
-
-    return df.mapInPandas(_batches, schema=out_schema)
+def _transcode_kernel(pcm, sr, _rid):
+    return pcm, sr, {}
 
 
 # ---------------------------------------------------------------------------
@@ -1218,45 +1104,15 @@ def resample_audio(
     for required in (bytes_col, codec_col):
         if required not in names:
             raise ValueError(f"missing column {required!r}")
-    repo_root = _REPO_ROOT
+    return _map_payloads(
+        df, [partial(_resample_kernel, target_sr=target_sr, taps=taps)],
+        bytes_col=bytes_col, codec_col=codec_col, headers=("sr_hz", "dur_ms"))
 
-    def _batches(it):
-        import sys
 
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import decode_payload, wav_encode
-        from gx_spark.audio_ops import resample_sinc as _rs
-
-        for pdf in it:
-            new_bytes: list[bytes | None] = []
-            new_sr: list[int | None] = []
-            new_dur: list[int | None] = []
-            for bb, cc in zip(pdf[bytes_col], pdf[codec_col]):
-                try:
-                    sr, pcm = decode_payload(bytes(bb), cc)
-                    y = _rs(pcm, sr, target_sr, taps=taps)
-                    new_bytes.append(wav_encode(y, target_sr))
-                    new_sr.append(target_sr)
-                    new_dur.append(int(round(len(y) * 1000.0 / target_sr)))
-                except (ValueError, NotImplementedError, TypeError):
-                    new_bytes.append(None)
-                    new_sr.append(None)
-                    new_dur.append(None)
-            pdf = pdf.copy()
-            pdf[bytes_col] = new_bytes
-            if "sr_hz" in pdf.columns:
-                pdf["sr_hz"] = pd.array(new_sr, dtype="Int32")
-            if "dur_ms" in pdf.columns:
-                pdf["dur_ms"] = pd.array(new_dur, dtype="Int32")
-            if codec_col in pdf.columns:
-                pdf[codec_col] = [
-                    "pcm_s16le" if nb is not None else cc
-                    for nb, cc in zip(new_bytes, pdf[codec_col])
-                ]
-            yield pdf
-
-    return df.mapInPandas(_batches, schema=out_schema)
+def _resample_kernel(pcm, sr, _rid, *, target_sr, taps):
+    y = resample_sinc(pcm, sr, target_sr, taps=taps)
+    dur = int(round(len(y) * 1000.0 / target_sr))
+    return y, target_sr, {"sr_hz": target_sr, "dur_ms": dur}
 
 
 # ---------------------------------------------------------------------------
@@ -1315,6 +1171,13 @@ def compute_curation_row(
     return out
 
 
+def _curation_cells(clip_id, b, sr, dur, codec, transcript, **kw):
+    """compute_curation_row on one UDF row (a null sr/dur reads as 0)."""
+    return compute_curation_row(
+        clip_id, b, int(sr) if sr is not None else 0,
+        int(dur) if dur is not None else 0, codec, transcript, **kw)
+
+
 def validate_and_extract_audio(
     df: DataFrame,
     *,
@@ -1347,44 +1210,12 @@ def validate_and_extract_audio(
 
     tests/test_curation_audio.py pins that these verdicts equal the
     decode-in-suite audio_suite() verdicts row for row."""
-    from pyspark.sql.functions import pandas_udf
-
-    repo_root = _REPO_ROOT
-    keys = _CURATION_FLAG_KEYS + _CURATION_FEAT_KEYS + ("fp_sig",)
-
-    @pandas_udf(CURATION_SCHEMA)
-    def curation(clip_id, b, sr, dur, codec, transcript):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio_ops import compute_curation_row as _ccr
-
-        cols: dict[str, list] = {k: [] for k in keys}
-        appends = [cols[k].append for k in keys]
-        for ci, bb, s, d, cc, tx in zip(clip_id, b, sr, dur, codec,
-                                        transcript):
-            r = _ccr(ci, bb, int(s) if s is not None else 0,
-                     int(d) if d is not None else 0, cc, tx,
-                     frame_ms=frame_ms, silence_dbfs=silence_dbfs,
-                     clip_rail=clip_rail)
-            for ap, k in zip(appends, keys):
-                ap(r[k])
-        return pd.DataFrame(cols, copy=False)
-
-    keep = keep_cols if keep_cols is not None else [
-        c for c in df.columns if c != bytes_col
-    ]
-    feat = curation(
-        F.col(id_col), F.col(bytes_col), F.col(sr_col), F.col(dur_col),
-        F.col(codec_col), F.col(transcript_col),
-    ).alias("_c")
-    projected = df.select(*keep, feat)
-    cols = [F.col(f"_c.{k}").alias(k) for k in keys if k != "fp_sig"]
-    cols.append(
-        F.when(F.col("_c.fp_sig").isNotNull(),
-               F.xxhash64(F.col("_c.fp_sig"))).alias("fp64"))
-    return projected.select(*keep, *cols)
+    row = partial(_curation_cells, frame_ms=frame_ms,
+                  silence_dbfs=silence_dbfs, clip_rail=clip_rail)
+    return _map_features(
+        df, CURATION_SCHEMA, [row],
+        (id_col, bytes_col, sr_col, dur_col, codec_col, transcript_col),
+        bytes_col, keep_cols, hashed="fp_sig")
 
 
 # ---------------------------------------------------------------------------
@@ -1454,19 +1285,12 @@ def compute_mel_row(
                     (first index on ties), None when n_frames == 0
     - mel_mean_db:  10*log10(grand mean mel energy), None for silence
     """
-    from .audio import decode_payload
-
     out: dict[str, Any] = {k: None for k in _MEL_KEYS}
     out["n_mels"] = int(n_mels)
-    if b is None:
+    dec = _decode(b, codec, decoded)
+    if dec is None:
         return out
-    if decoded is not None:
-        sr, pcm = decoded
-    else:
-        try:
-            sr, pcm = decode_payload(bytes(b), codec)
-        except (ValueError, NotImplementedError):
-            return out
+    sr, pcm = dec
     n = len(pcm)
     out["n_samples"] = n
     if sr <= 0:
@@ -1513,35 +1337,10 @@ def mel_features(
     (a clip whose dominant band sits at the top filter of its labeled
     Nyquist is upsampled narrowband — content above the original Nyquist
     is absent)."""
-    from pyspark.sql.functions import pandas_udf
-
-    repo_root = _REPO_ROOT
-    keys = _MEL_KEYS
-
-    @pandas_udf(MEL_FEATURES_SCHEMA)
-    def mel_stats(b: pd.Series, codec: pd.Series) -> pd.DataFrame:
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio_ops import compute_mel_row as _cmr
-
-        cols: dict[str, list] = {k: [] for k in keys}
-        appends = [cols[k].append for k in keys]
-        for bb, cc in zip(b, codec):
-            r = _cmr(bb, cc, n_mels=n_mels, frame_ms=frame_ms,
-                     hop_ms=hop_ms)
-            for ap, k in zip(appends, keys):
-                ap(r[k])
-        return pd.DataFrame(cols, copy=False)
-
-    keep = keep_cols if keep_cols is not None else [
-        c for c in df.columns if c != bytes_col
-    ]
-    feat = mel_stats(F.col(bytes_col), F.col(codec_col)).alias("_m")
-    projected = df.select(*keep, feat)
-    return projected.select(
-        *keep, *[F.col(f"_m.{k}").alias(k) for k in keys])
+    row = partial(compute_mel_row, n_mels=n_mels, frame_ms=frame_ms,
+                  hop_ms=hop_ms)
+    return _map_features(df, MEL_FEATURES_SCHEMA, [row],
+                         (bytes_col, codec_col), bytes_col, keep_cols)
 
 
 # ---------------------------------------------------------------------------
@@ -1582,16 +1381,12 @@ def compute_mfcc_row(
     coefficients, report the frame-mean of c0/c1/c2 — the cepstral
     summary used for corpus banding (c0 tracks log energy, c1/c2 spectral
     tilt/compactness).  None fields on decode failure / empty clip."""
-    from .audio import decode_payload
-
     out: dict[str, Any] = {k: None for k in _MFCC_KEYS}
     out["n_mfcc"] = int(n_mfcc)
-    if b is None:
+    dec = _decode(b, codec)
+    if dec is None:
         return out
-    try:
-        sr, pcm = decode_payload(bytes(b), codec)
-    except (ValueError, NotImplementedError):
-        return out
+    sr, pcm = dec
     n = len(pcm)
     out["n_samples"] = n
     if sr <= 0:
@@ -1631,35 +1426,10 @@ def mfcc_features(
     """Per-clip MFCC summary as flat columns; map-only, one Arrow-batched
     decode, binary pruned in the same select (the mel_features shape) —
     only scalar cepstral summaries ever shuffle."""
-    from pyspark.sql.functions import pandas_udf
-
-    repo_root = _REPO_ROOT
-    keys = _MFCC_KEYS
-
-    @pandas_udf(MFCC_FEATURES_SCHEMA)
-    def mfcc_stats(b: pd.Series, codec: pd.Series) -> pd.DataFrame:
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio_ops import compute_mfcc_row as _cmr
-
-        cols: dict[str, list] = {k: [] for k in keys}
-        appends = [cols[k].append for k in keys]
-        for bb, cc in zip(b, codec):
-            r = _cmr(bb, cc, n_mfcc=n_mfcc, n_mels=n_mels,
-                     frame_ms=frame_ms, hop_ms=hop_ms)
-            for ap, k in zip(appends, keys):
-                ap(r[k])
-        return pd.DataFrame(cols, copy=False)
-
-    keep = keep_cols if keep_cols is not None else [
-        c for c in df.columns if c != bytes_col
-    ]
-    feat = mfcc_stats(F.col(bytes_col), F.col(codec_col)).alias("_c")
-    projected = df.select(*keep, feat)
-    return projected.select(
-        *keep, *[F.col(f"_c.{k}").alias(k) for k in keys])
+    row = partial(compute_mfcc_row, n_mfcc=n_mfcc, n_mels=n_mels,
+                  frame_ms=frame_ms, hop_ms=hop_ms)
+    return _map_features(df, MFCC_FEATURES_SCHEMA, [row],
+                         (bytes_col, codec_col), bytes_col, keep_cols)
 
 
 def augment_pipeline(
@@ -1714,10 +1484,6 @@ def augment_pipeline(
     given); undecodable rows pass through with null bytes.  mapInPandas,
     map-only — payloads never shuffle, and never cross Arrow more than
     once each way."""
-    import zlib
-
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
     if speed is not None and speed <= 0:
         raise ValueError("speed must be positive")
     if tempo is not None and tempo <= 0:
@@ -1727,98 +1493,26 @@ def augment_pipeline(
     if (snr_db is None and tempo is None and speed is None
             and target_ms is None and reverb_gain is None):
         raise ValueError("enable at least one stage")
-    fields = list(df.schema.fields)
+    _check_rir_kind(reverb_kind, reverb_gain or 0.0)
+    kernels = []
+    if reverb_gain is not None:
+        kernels.append(partial(
+            _reverb_kernel, seed=seed, kind=reverb_kind,
+            rt60_ms=float(rt60_ms), delay_ms=float(reverb_delay_ms),
+            gain=float(reverb_gain)))
     if snr_db is not None:
-        fields = fields + [StructField("noise_rms_dbfs", DoubleType())]
-    out_schema = StructType(fields)
-    repo_root = _REPO_ROOT
-
-    def _batches(it):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import decode_payload, wav_encode
-        from gx_spark.audio_ops import augment_noise_pcm as _anp
-        from gx_spark.audio_ops import make_rir as _mkr
-        from gx_spark.audio_ops import resample_sinc as _rs
-        from gx_spark.audio_ops import reverb_pcm as _rvp
-        from gx_spark.audio_ops import tempo_stretch_pcm as _ts
-
-        for pdf in it:
-            new_bytes: list[bytes | None] = []
-            new_codec: list[str] = []
-            new_dur: list[int | None] = []
-            floors: list[float | None] = []
-            for rid, bb, cc in zip(pdf[id_col], pdf[bytes_col],
-                                   pdf[codec_col]):
-                try:
-                    sr, pcm = decode_payload(bytes(bb), cc)
-                except (ValueError, NotImplementedError, TypeError):
-                    new_bytes.append(None)
-                    new_codec.append(cc)
-                    new_dur.append(None)
-                    floors.append(None)
-                    continue
-                floor = None
-                reencoded = False
-                if reverb_gain is not None and reverb_gain > 0.0:
-                    rng = np.random.default_rng(
-                        zlib.crc32(f"{seed}:rir:{rid}".encode("utf-8")))
-                    h = _mkr(sr, kind=reverb_kind, rt60_ms=rt60_ms,
-                             delay_ms=reverb_delay_ms, gain=reverb_gain,
-                             rng=rng)
-                    pcm = _rvp(pcm, h)
-                    reencoded = True
-                if snr_db is not None:
-                    rng = np.random.default_rng(
-                        zlib.crc32(f"{seed}:{rid}".encode("utf-8")))
-                    pcm, floor = _anp(pcm, snr_db, rng)
-                    reencoded = floor is not None
-                dur: int | None = None
-                if tempo is not None:
-                    # the chained tempo_stretch re-encodes even at 1.0;
-                    # mirror it so fused == chained stays bit-identical
-                    pcm = _ts(pcm, sr, tempo)
-                    dur = int(round(len(pcm) * 1000.0 / sr))
-                    reencoded = True
-                if speed is not None:
-                    n_out = int(round(len(pcm) / speed))
-                    pcm = _rs(pcm, sr, max(1, int(round(sr / speed))),
-                              taps=taps)
-                    if len(pcm) > n_out:
-                        pcm = pcm[:n_out]
-                    elif len(pcm) < n_out:
-                        pcm = np.pad(pcm, (0, n_out - len(pcm)))
-                    dur = int(round(len(pcm) * 1000.0 / sr))
-                    reencoded = True
-                if target_ms is not None:
-                    n_t = sr * int(target_ms) // 1000
-                    pcm = pcm[:n_t] if len(pcm) >= n_t else np.pad(
-                        pcm, (0, n_t - len(pcm)))
-                    dur = int(target_ms)
-                    reencoded = True
-                if reencoded:
-                    new_bytes.append(wav_encode(pcm, sr))
-                    new_codec.append("pcm_s16le")
-                else:  # silent noise-only passthrough keeps original bytes
-                    new_bytes.append(bytes(bb))
-                    new_codec.append(cc)
-                new_dur.append(dur)
-                floors.append(floor)
-            pdf = pdf.copy()
-            pdf[bytes_col] = new_bytes
-            if codec_col in pdf.columns:
-                pdf[codec_col] = new_codec
-            if "dur_ms" in pdf.columns and (
-                    tempo is not None or speed is not None
-                    or target_ms is not None):
-                pdf["dur_ms"] = pd.array(new_dur, dtype="Int32")
-            if snr_db is not None:
-                pdf["noise_rms_dbfs"] = pd.array(floors, dtype="float64")
-            yield pdf
-
-    return df.mapInPandas(_batches, schema=out_schema)
+        kernels.append(partial(_noise_kernel, snr_db=snr_db, seed=seed))
+    if tempo is not None:
+        kernels.append(partial(_tempo_kernel, factor=tempo))
+    if speed is not None:
+        kernels.append(partial(_speed_kernel, factor=speed, taps=taps))
+    if target_ms is not None:
+        kernels.append(partial(_window_kernel, target_ms=target_ms))
+    resized = (tempo, speed, target_ms) != (None, None, None)
+    return _map_payloads(
+        df, kernels, bytes_col=bytes_col, codec_col=codec_col, id_col=id_col,
+        stats="noise_rms_dbfs double" if snr_db is not None else "",
+        headers=("dur_ms",) if resized else ())
 
 
 # ---------------------------------------------------------------------------
@@ -1856,18 +1550,11 @@ def compute_spectral_row(
     - spectral_flatness:     exp(mean(ln P)) / mean(P)  (Wiener entropy;
                              ~0 tonal, ->1 white)
     """
-    from .audio import decode_payload
-
     out: dict[str, Any] = {k: None for k in _SPECTRAL_KEYS}
-    if b is None:
+    dec = _decode(b, codec, decoded)
+    if dec is None:
         return out
-    if decoded is not None:
-        sr, pcm = decoded
-    else:
-        try:
-            sr, pcm = decode_payload(bytes(b), codec)
-        except (ValueError, NotImplementedError):
-            return out
+    sr, pcm = dec
     n = len(pcm)
     out["n_samples"] = n
     if sr <= 0 or n < 2:
@@ -1909,34 +1596,9 @@ def spectral_features(
     vs the labeled Nyquist catches upsampled narrowband audio, and
     zcr/centroid are the cheap per-clip summaries quality gates band
     on."""
-    from pyspark.sql.functions import pandas_udf
-
-    repo_root = _REPO_ROOT
-    keys = _SPECTRAL_KEYS
-
-    @pandas_udf(SPECTRAL_FEATURES_SCHEMA)
-    def spec_stats(b: pd.Series, codec: pd.Series) -> pd.DataFrame:
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio_ops import compute_spectral_row as _csr
-
-        cols: dict[str, list] = {k: [] for k in keys}
-        appends = [cols[k].append for k in keys]
-        for bb, cc in zip(b, codec):
-            r = _csr(bb, cc, rolloff_pct=rolloff_pct)
-            for ap, k in zip(appends, keys):
-                ap(r[k])
-        return pd.DataFrame(cols, copy=False)
-
-    keep = keep_cols if keep_cols is not None else [
-        c for c in df.columns if c != bytes_col
-    ]
-    feat = spec_stats(F.col(bytes_col), F.col(codec_col)).alias("_s")
-    projected = df.select(*keep, feat)
-    return projected.select(
-        *keep, *[F.col(f"_s.{k}").alias(k) for k in keys])
+    row = partial(compute_spectral_row, rolloff_pct=rolloff_pct)
+    return _map_features(df, SPECTRAL_FEATURES_SCHEMA, [row],
+                         (bytes_col, codec_col), bytes_col, keep_cols)
 
 
 # ---------------------------------------------------------------------------
@@ -1977,18 +1639,11 @@ def compute_pitch_row(
     - f0_median_hz:     median F0 over voiced frames (None if none)
     - periodicity_mean: mean over ALL frames (voicing confidence)
     """
-    from .audio import decode_payload
-
     out: dict[str, Any] = {k: None for k in _PITCH_KEYS}
-    if b is None:
+    dec = _decode(b, codec, decoded)
+    if dec is None:
         return out
-    if decoded is not None:
-        sr, pcm = decoded
-    else:
-        try:
-            sr, pcm = decode_payload(bytes(b), codec)
-        except (ValueError, NotImplementedError):
-            return out
+    sr, pcm = dec
     n = len(pcm)
     out["n_samples"] = n
     if sr <= 0 or not (0 < fmin < fmax <= sr / 2.0):
@@ -2051,35 +1706,10 @@ def pitch_features(
     bands speakers, and periodicity_mean is the cheap voicing-confidence
     gate — all per-clip scalars, so the corpus-level groupBy that bands
     on them never touches payload bytes."""
-    from pyspark.sql.functions import pandas_udf
-
-    repo_root = _REPO_ROOT
-    keys = _PITCH_KEYS
-
-    @pandas_udf(PITCH_FEATURES_SCHEMA)
-    def pitch_stats(b: pd.Series, codec: pd.Series) -> pd.DataFrame:
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio_ops import compute_pitch_row as _cpr
-
-        cols: dict[str, list] = {k: [] for k in keys}
-        appends = [cols[k].append for k in keys]
-        for bb, cc in zip(b, codec):
-            r = _cpr(bb, cc, fmin=fmin, fmax=fmax, frame_ms=frame_ms,
-                     hop_ms=hop_ms, voiced_threshold=voiced_threshold)
-            for ap, k in zip(appends, keys):
-                ap(r[k])
-        return pd.DataFrame(cols, copy=False)
-
-    keep = keep_cols if keep_cols is not None else [
-        c for c in df.columns if c != bytes_col
-    ]
-    feat = pitch_stats(F.col(bytes_col), F.col(codec_col)).alias("_p")
-    projected = df.select(*keep, feat)
-    return projected.select(
-        *keep, *[F.col(f"_p.{k}").alias(k) for k in keys])
+    row = partial(compute_pitch_row, fmin=fmin, fmax=fmax, frame_ms=frame_ms,
+                  hop_ms=hop_ms, voiced_threshold=voiced_threshold)
+    return _map_features(df, PITCH_FEATURES_SCHEMA, [row],
+                         (bytes_col, codec_col), bytes_col, keep_cols)
 
 
 # ---------------------------------------------------------------------------
@@ -2203,18 +1833,11 @@ def compute_loudness_row(
     -3.01 LUFS at any sample rate — the -0.691 offset cancels the
     K-weighting cascade's gain at 997 Hz.
     """
-    from .audio import decode_payload
-
     out: dict[str, Any] = {k: None for k in _LOUDNESS_KEYS}
-    if b is None:
+    dec = _decode(b, codec, decoded)
+    if dec is None:
         return out
-    if decoded is not None:
-        sr, pcm = decoded
-    else:
-        try:
-            sr, pcm = decode_payload(bytes(b), codec)
-        except (ValueError, NotImplementedError):
-            return out
+    sr, pcm = dec
     n = len(pcm)
     out["n_samples"] = n
     if sr <= 0:
@@ -2264,34 +1887,9 @@ def loudness_features(
     dead air, and the integrated/momentary gap flags bursty content.
     All per-clip scalars — downstream banding never touches payload
     bytes."""
-    from pyspark.sql.functions import pandas_udf
-
-    repo_root = _REPO_ROOT
-    keys = _LOUDNESS_KEYS
-
-    @pandas_udf(LOUDNESS_FEATURES_SCHEMA)
-    def loudness_stats(b: pd.Series, codec: pd.Series) -> pd.DataFrame:
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio_ops import compute_loudness_row as _clr
-
-        cols: dict[str, list] = {k: [] for k in keys}
-        appends = [cols[k].append for k in keys]
-        for bb, cc in zip(b, codec):
-            r = _clr(bb, cc, block_ms=block_ms, hop_ms=hop_ms)
-            for ap, k in zip(appends, keys):
-                ap(r[k])
-        return pd.DataFrame(cols, copy=False)
-
-    keep = keep_cols if keep_cols is not None else [
-        c for c in df.columns if c != bytes_col
-    ]
-    feat = loudness_stats(F.col(bytes_col), F.col(codec_col)).alias("_l")
-    projected = df.select(*keep, feat)
-    return projected.select(
-        *keep, *[F.col(f"_l.{k}").alias(k) for k in keys])
+    row = partial(compute_loudness_row, block_ms=block_ms, hop_ms=hop_ms)
+    return _map_features(df, LOUDNESS_FEATURES_SCHEMA, [row],
+                         (bytes_col, codec_col), bytes_col, keep_cols)
 
 
 # ---------------------------------------------------------------------------
@@ -2382,56 +1980,16 @@ def declip_audio(
     undecodable rows pass through with null bytes (the trim_silence
     convention).  mapInPandas keeps payloads inside Arrow batches;
     map-only, no shuffle."""
-    from pyspark.sql.types import (
-        DoubleType, LongType, StructField, StructType)
+    return _map_payloads(
+        df, [partial(_declip_kernel, rail_frac=rail_frac, out_peak=out_peak)],
+        bytes_col=bytes_col, codec_col=codec_col,
+        stats="n_clipped long, declip_gain_db double")
 
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [StructField("n_clipped", LongType()),
-           StructField("declip_gain_db", DoubleType())]
-    )
-    repo_root = _REPO_ROOT
 
-    def _batches(it):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import decode_payload, wav_encode
-        from gx_spark.audio_ops import declip_pcm as _dcp
-
-        for pdf in it:
-            new_bytes: list[bytes | None] = []
-            new_codec: list[str] = []
-            counts: list[int | None] = []
-            gains: list[float | None] = []
-            for bb, cc in zip(pdf[bytes_col], pdf[codec_col]):
-                try:
-                    sr, pcm = decode_payload(bytes(bb), cc)
-                except (ValueError, NotImplementedError, TypeError):
-                    new_bytes.append(None)
-                    new_codec.append(cc)
-                    counts.append(None)
-                    gains.append(None)
-                    continue
-                y, n_clip, gdb = _dcp(pcm, rail_frac, out_peak)
-                if n_clip == 0:
-                    new_bytes.append(bytes(bb))
-                    new_codec.append(cc)
-                else:
-                    new_bytes.append(wav_encode(y, sr))
-                    new_codec.append("pcm_s16le")
-                counts.append(n_clip)
-                gains.append(gdb)
-            pdf = pdf.copy()
-            pdf[bytes_col] = new_bytes
-            if codec_col in pdf.columns:
-                pdf[codec_col] = new_codec
-            pdf["n_clipped"] = pd.array(counts, dtype="Int64")
-            pdf["declip_gain_db"] = pd.array(gains, dtype="float64")
-            yield pdf
-
-    return df.mapInPandas(_batches, schema=out_schema)
+def _declip_kernel(pcm, sr, _rid, *, rail_frac, out_peak):
+    y, n_clip, gdb = declip_pcm(pcm, rail_frac, out_peak)
+    return ((y if n_clip else None), sr,
+            {"n_clipped": n_clip, "declip_gain_db": gdb})
 
 
 # ---------------------------------------------------------------------------
@@ -2493,32 +2051,8 @@ def channel_stats(
     map-only, binary pruned in the same projection — the corpus-audit
     pass that answers "is this corpus actually mono?" before the mono
     validation/feature pipeline runs."""
-    from pyspark.sql.functions import pandas_udf
-
-    repo_root = _REPO_ROOT
-    keep = keep_cols if keep_cols is not None else [
-        c for c in df.columns if c != bytes_col
-    ]
-
-    @pandas_udf(AUDIO_CHANNELS_SCHEMA)
-    def _chan(b: pd.Series, codec: pd.Series) -> pd.DataFrame:
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio_ops import compute_channel_row as _ccr
-
-        cols: dict[str, list] = {k: [] for k in _CHANNEL_KEYS}
-        for bb, cc in zip(b, codec):
-            r = _ccr(bb, cc)
-            for k in _CHANNEL_KEYS:
-                cols[k].append(r[k])
-        return pd.DataFrame(cols, copy=False)
-
-    feat = _chan(F.col(bytes_col), F.col(codec_col)).alias("_ch")
-    projected = df.select(*keep, feat)
-    return projected.select(
-        *keep, *[F.col(f"_ch.{k}").alias(k) for k in _CHANNEL_KEYS])
+    return _map_features(df, AUDIO_CHANNELS_SCHEMA, [compute_channel_row],
+                         (bytes_col, codec_col), bytes_col, keep_cols)
 
 
 def downmix_audio(
@@ -2544,13 +2078,8 @@ def downmix_audio(
     out_schema = StructType(
         list(df.schema.fields) + [StructField("n_channels_in", IntegerType())]
     )
-    repo_root = _REPO_ROOT
 
     def _batches(it):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
         from gx_spark.audio import (WAV_FRAMED_CODECS, payload_channels,
                                     wav_decode_multi, wav_encode)
 
@@ -2595,7 +2124,7 @@ def downmix_audio(
             pdf["n_channels_in"] = pd.array(chans, dtype="Int32")
             yield pdf
 
-    return df.mapInPandas(_batches, schema=out_schema)
+    return df.mapInPandas(_on_workers(_batches), schema=out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -2631,18 +2160,11 @@ def compute_electrical_row(
     DC is removed before the hum probe so a big offset cannot leak into
     the low bins.  Undecodable or all-silent clips report nulls (their
     ratio is undefined)."""
-    from .audio import DECODABLE_CODECS, decode_payload
-
     out: dict[str, Any] = {k: None for k in _ELECTRICAL_KEYS}
-    if decoded is not None:
-        sr, pcm = decoded
-    else:
-        if b is None or codec not in DECODABLE_CODECS:
-            return out
-        try:
-            sr, pcm = decode_payload(bytes(b), codec)
-        except (ValueError, NotImplementedError):
-            return out
+    dec = _decode(b, codec, decoded)
+    if dec is None:
+        return out
+    sr, pcm = dec
     n = len(pcm)
     if n == 0 or sr <= 0:
         return out
@@ -2684,34 +2206,11 @@ def electrical_features(
     """Per-clip DC offset + mains-hum columns (compute_electrical_row);
     map-only, binary pruned in the same projection — the recording-chain
     QA pass of an audio corpus."""
-    from pyspark.sql.functions import pandas_udf
-
-    repo_root = _REPO_ROOT
-    keep = keep_cols if keep_cols is not None else [
-        c for c in df.columns if c != bytes_col
-    ]
-    mains_t = tuple(float(m) for m in mains)
-    nh = int(n_harmonics)
-
-    @pandas_udf(AUDIO_ELECTRICAL_SCHEMA)
-    def _elec(b: pd.Series, codec: pd.Series) -> pd.DataFrame:
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio_ops import compute_electrical_row as _cer
-
-        cols: dict[str, list] = {k: [] for k in _ELECTRICAL_KEYS}
-        for bb, cc in zip(b, codec):
-            r = _cer(bb, cc, mains=mains_t, n_harmonics=nh)
-            for k in _ELECTRICAL_KEYS:
-                cols[k].append(r[k])
-        return pd.DataFrame(cols, copy=False)
-
-    feat = _elec(F.col(bytes_col), F.col(codec_col)).alias("_e")
-    projected = df.select(*keep, feat)
-    return projected.select(
-        *keep, *[F.col(f"_e.{k}").alias(k) for k in _ELECTRICAL_KEYS])
+    row = partial(compute_electrical_row,
+                  mains=tuple(float(m) for m in mains),
+                  n_harmonics=int(n_harmonics))
+    return _map_features(df, AUDIO_ELECTRICAL_SCHEMA, [row],
+                         (bytes_col, codec_col), bytes_col, keep_cols)
 
 
 def remove_dc_offset(
@@ -2731,56 +2230,17 @@ def remove_dc_offset(
     Output schema = input schema + (dc_removed int: the subtracted
     sample value, 0 for passthrough, null for undecodable).  Map-only,
     no shuffle."""
-    from pyspark.sql.types import IntegerType, StructField, StructType
+    return _map_payloads(
+        df, [partial(_dc_kernel, min_frac=float(min_frac))],
+        bytes_col=bytes_col, codec_col=codec_col, stats="dc_removed int")
 
-    out_schema = StructType(
-        list(df.schema.fields) + [StructField("dc_removed", IntegerType())]
-    )
-    repo_root = _REPO_ROOT
-    thr = float(min_frac)
 
-    def _batches(it):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import decode_payload, wav_encode
-
-        for pdf in it:
-            new_bytes: list[bytes | None] = []
-            new_codec: list[str] = []
-            removed: list[int | None] = []
-            for bb, cc in zip(pdf[bytes_col], pdf[codec_col]):
-                if bb is None:
-                    new_bytes.append(None)
-                    new_codec.append(cc)
-                    removed.append(None)
-                    continue
-                try:
-                    sr, pcm = decode_payload(bytes(bb), cc)
-                except (ValueError, NotImplementedError, TypeError):
-                    new_bytes.append(None)
-                    new_codec.append(cc)
-                    removed.append(None)
-                    continue
-                dc = int(np.rint(np.mean(pcm))) if len(pcm) else 0
-                if abs(dc) < thr * 32768.0:
-                    new_bytes.append(bytes(bb))
-                    new_codec.append(cc)
-                    removed.append(0)
-                    continue
-                y = np.clip(pcm.astype(np.int32) - dc,
-                            -32768, 32767).astype(np.int16)
-                new_bytes.append(wav_encode(y, sr))
-                new_codec.append("pcm_s16le")
-                removed.append(dc)
-            pdf = pdf.copy()
-            pdf[bytes_col] = new_bytes
-            pdf[codec_col] = new_codec
-            pdf["dc_removed"] = pd.array(removed, dtype="Int32")
-            yield pdf
-
-    return df.mapInPandas(_batches, schema=out_schema)
+def _dc_kernel(pcm, sr, _rid, *, min_frac):
+    dc = int(np.rint(np.mean(pcm))) if len(pcm) else 0
+    if abs(dc) < min_frac * 32768.0:
+        return None, sr, {"dc_removed": 0}
+    y = np.clip(pcm.astype(np.int32) - dc, -32768, 32767).astype(np.int16)
+    return y, sr, {"dc_removed": dc}
 
 
 def remove_hum_pcm(
@@ -2859,57 +2319,17 @@ def remove_hum(
     clips keep their ORIGINAL bytes and codec; repaired clips re-encode
     pcm_s16le; undecodable rows pass through with null bytes (the
     declip/trim convention).  Map-only, no shuffle."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
+    return _map_payloads(
+        df, [partial(_hum_kernel, mains=tuple(float(m) for m in mains),
+                     n_harmonics=int(n_harmonics),
+                     min_ratio=float(min_ratio), notch_hz=float(notch_hz))],
+        bytes_col=bytes_col, codec_col=codec_col,
+        stats="hum_removed_ratio double")
 
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [StructField("hum_removed_ratio", DoubleType())]
-    )
-    repo_root = _REPO_ROOT
-    mains_t = tuple(float(m) for m in mains)
-    nh, mr, nz = int(n_harmonics), float(min_ratio), float(notch_hz)
 
-    def _batches(it):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import decode_payload, wav_encode
-        from gx_spark.audio_ops import remove_hum_pcm as _rhp
-
-        for pdf in it:
-            new_bytes: list[bytes | None] = []
-            new_codec: list[str] = []
-            ratios: list[float | None] = []
-            for bb, cc in zip(pdf[bytes_col], pdf[codec_col]):
-                if bb is None:
-                    new_bytes.append(None)
-                    new_codec.append(cc)
-                    ratios.append(None)
-                    continue
-                try:
-                    sr, pcm = decode_payload(bytes(bb), cc)
-                except (ValueError, NotImplementedError, TypeError):
-                    new_bytes.append(None)
-                    new_codec.append(cc)
-                    ratios.append(None)
-                    continue
-                y, ratio = _rhp(pcm, sr, mains=mains_t, n_harmonics=nh,
-                                min_ratio=mr, notch_hz=nz)
-                if y is pcm:
-                    new_bytes.append(bytes(bb))
-                    new_codec.append(cc)
-                else:
-                    new_bytes.append(wav_encode(y, sr))
-                    new_codec.append("pcm_s16le")
-                ratios.append(ratio)
-            pdf = pdf.copy()
-            pdf[bytes_col] = new_bytes
-            pdf[codec_col] = new_codec
-            pdf["hum_removed_ratio"] = pd.array(ratios, dtype="float64")
-            yield pdf
-
-    return df.mapInPandas(_batches, schema=out_schema)
+def _hum_kernel(pcm, sr, _rid, **probe):
+    y, ratio = remove_hum_pcm(pcm, sr, **probe)
+    return (None if y is pcm else y), sr, {"hum_removed_ratio": ratio}
 
 
 # ---------------------------------------------------------------------------
@@ -2963,6 +2383,13 @@ def make_rir(
     return h
 
 
+def _check_rir_kind(kind: str, gain: float) -> None:
+    # make_rir's own check runs per row under the driver's error catch,
+    # where a bad kind would null every row instead of failing the call
+    if gain > 0.0 and kind not in ("echo", "exp_decay"):
+        raise ValueError(f"unknown RIR kind {kind!r}")
+
+
 def reverb_pcm(pcm: np.ndarray, h: np.ndarray) -> np.ndarray:
     """Convolve one clip with an RIR (FFT overlap-free full convolution,
     output trimmed to the input length — training windows keep their
@@ -3002,65 +2429,25 @@ def augment_reverb(
     pass through with wet_db null.  Convolved rows re-encode pcm_s16le;
     duration is preserved (full convolution trimmed to n).  mapInPandas,
     map-only: payloads never enter a shuffle."""
-    import zlib
+    _check_rir_kind(kind, gain)
+    return _map_payloads(
+        df, [partial(_reverb_kernel, seed=seed, kind=kind,
+                     rt60_ms=float(rt60_ms), delay_ms=float(delay_ms),
+                     gain=float(gain))],
+        bytes_col=bytes_col, codec_col=codec_col, id_col=id_col,
+        stats="reverb_wet_db double")
 
-    from pyspark.sql.types import DoubleType, StructField, StructType
 
-    out_schema = StructType(
-        list(df.schema.fields) + [StructField("reverb_wet_db", DoubleType())]
-    )
-    repo_root = _REPO_ROOT
-    params = dict(kind=kind, rt60_ms=float(rt60_ms),
-                  delay_ms=float(delay_ms), gain=float(gain))
-    wet_db = 20.0 * np.log10(gain) if gain > 0.0 else None
-
-    def _batches(it):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import decode_payload, wav_encode
-        from gx_spark.audio_ops import make_rir as _mk
-        from gx_spark.audio_ops import reverb_pcm as _rp
-
-        for pdf in it:
-            new_bytes: list[bytes | None] = []
-            new_codec: list[str] = []
-            wets: list[float | None] = []
-            for rid, bb, cc in zip(pdf[id_col], pdf[bytes_col],
-                                   pdf[codec_col]):
-                if bb is None:
-                    new_bytes.append(None)
-                    new_codec.append(cc)
-                    wets.append(None)
-                    continue
-                try:
-                    sr, pcm = decode_payload(bytes(bb), cc)
-                except (ValueError, NotImplementedError, TypeError):
-                    new_bytes.append(None)
-                    new_codec.append(cc)
-                    wets.append(None)
-                    continue
-                # ":rir:" keeps the RIR stream independent of the noise
-                # stream an augment_noise(seed=...) chain would draw
-                rng = np.random.default_rng(
-                    zlib.crc32(f"{seed}:rir:{rid}".encode("utf-8")))
-                h = _mk(sr, rng=rng, **params)
-                if len(h) == 1:
-                    new_bytes.append(bytes(bb))
-                    new_codec.append(cc)
-                    wets.append(None)
-                    continue
-                new_bytes.append(wav_encode(_rp(pcm, h), sr))
-                new_codec.append("pcm_s16le")
-                wets.append(wet_db)
-            pdf = pdf.copy()
-            pdf[bytes_col] = new_bytes
-            pdf[codec_col] = new_codec
-            pdf["reverb_wet_db"] = pd.array(wets, dtype="float64")
-            yield pdf
-
-    return df.mapInPandas(_batches, schema=out_schema)
+def _reverb_kernel(pcm, sr, rid, *, seed, **rir):
+    # ":rir:" keeps the RIR stream independent of the noise stream an
+    # augment_noise(seed=...) chain would draw
+    rng = np.random.default_rng(
+        zlib.crc32(f"{seed}:rir:{rid}".encode("utf-8")))
+    h = make_rir(sr, rng=rng, **rir)
+    if len(h) == 1:  # gain <= 0: the identity RIR
+        return None, sr, {"reverb_wet_db": None}
+    wet_db = 20.0 * np.log10(rir["gain"])
+    return reverb_pcm(pcm, h), sr, {"reverb_wet_db": wet_db}
 
 
 # ---------------------------------------------------------------------------
@@ -3225,7 +2612,6 @@ def pack_clips(
             "bin",
             F.expr(f"(_poff + _pcum - _ptok) div {T}").cast("long"))
     )
-    repo_root = _REPO_ROOT
     gap = int(gap_ms)
     with_stratum = stratify_col is not None
     with_tx = transcript_col is not None
@@ -3235,10 +2621,6 @@ def pack_clips(
     drop_bad = bool(skip_bad)
 
     def _flush(s, b, ids, members):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
         from gx_spark.audio import decode_payload, wav_encode
         from gx_spark.audio_ops import resample_sinc as _rs
 
@@ -3323,7 +2705,7 @@ def pack_clips(
     return (
         binned.select("_pstr", "bin", "_pkid", "_pbytes", "_pcodec",
                       "_ptx")
-        .mapInPandas(_assemble, schema=out_schema)
+        .mapInPandas(_on_workers(_assemble), schema=out_schema)
     )
 
 
@@ -3406,45 +2788,16 @@ def tempo_stretch(
     rows pass through with null bytes.  mapInPandas, map-only — payloads
     never shuffle, the same embarrassingly-parallel shape as every other
     augmentation here."""
-    from pyspark.sql.types import StructType
-
     if factor <= 0:
         raise ValueError("factor must be positive")
-    out_schema = StructType(list(df.schema.fields))
-    repo_root = _REPO_ROOT
+    return _map_payloads(
+        df, [partial(_tempo_kernel, factor=factor)],
+        bytes_col=bytes_col, codec_col=codec_col, headers=("dur_ms",))
 
-    def _batches(it):
-        import sys
 
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import decode_payload, wav_encode
-        from gx_spark.audio_ops import tempo_stretch_pcm as _ts
-
-        for pdf in it:
-            new_bytes: list[bytes | None] = []
-            new_codec: list[str] = []
-            new_dur: list[int | None] = []
-            for bb, cc in zip(pdf[bytes_col], pdf[codec_col]):
-                try:
-                    sr, pcm = decode_payload(bytes(bb), cc)
-                    y = _ts(pcm, sr, factor)
-                    new_bytes.append(wav_encode(y, sr))
-                    new_codec.append("pcm_s16le")
-                    new_dur.append(int(round(len(y) * 1000.0 / sr)))
-                except (ValueError, NotImplementedError, TypeError):
-                    new_bytes.append(None)
-                    new_codec.append(cc)
-                    new_dur.append(None)
-            pdf = pdf.copy()
-            pdf[bytes_col] = new_bytes
-            if codec_col in pdf.columns:
-                pdf[codec_col] = new_codec
-            if "dur_ms" in pdf.columns:
-                pdf["dur_ms"] = pd.array(new_dur, dtype="Int32")
-            yield pdf
-
-    return df.mapInPandas(_batches, schema=out_schema)
+def _tempo_kernel(pcm, sr, _rid, *, factor):
+    y = tempo_stretch_pcm(pcm, sr, factor)
+    return y, sr, {"dur_ms": int(round(len(y) * 1000.0 / sr))}
 
 
 # ---------------------------------------------------------------------------
@@ -3504,7 +2857,6 @@ def specaugment(
 
     if not (0 < n_mels and max_freq_bands * freq_masks < n_mels):
         raise ValueError("freq masks must not cover every band")
-    repo_root = _REPO_ROOT
     keeps = list(keep_cols or [])
     # build output schema from kept input fields + the feature columns
     from pyspark.sql.types import StructType
@@ -3514,10 +2866,6 @@ def specaugment(
     out_schema = StructType(kept_fields + list(feat.fields))
 
     def _batches(it):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
         from gx_spark.audio import decode_payload
 
         for pdf in it:
@@ -3585,7 +2933,8 @@ def specaugment(
     for c in (id_col, bytes_col, codec_col):
         if c not in sel:
             sel.append(c)
-    return df.select(*sel).mapInPandas(_batches, schema=out_schema)
+    return df.select(*sel).mapInPandas(_on_workers(_batches),
+                                       schema=out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -3620,13 +2969,8 @@ def cmvn_partials(
     out_schema = StructType(
         kept + list(StructType.fromDDL(CMVN_PARTIAL_SCHEMA).fields))
     keeps = [f.name for f in kept]
-    repo_root = _REPO_ROOT
 
     def _batches(it):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
         from gx_spark.audio import decode_payload
 
         for pdf in it:
@@ -3671,7 +3015,8 @@ def cmvn_partials(
     for c in (bytes_col, codec_col):
         if c not in sel:
             sel.append(c)
-    return df.select(*sel).mapInPandas(_batches, schema=out_schema)
+    return df.select(*sel).mapInPandas(_on_workers(_batches),
+                                       schema=out_schema)
 
 
 def cmvn_stats(
@@ -3773,6 +3118,12 @@ def declick_pcm(
     return out, int(len(hits))
 
 
+def _click_count_row(b, codec: str, thr_frac: float) -> int:
+    """declick_pcm's impulse count for one payload (detection only,
+    nothing re-encoded) — the click gate's row function."""
+    return declick_pcm(decode_payload(bytes(b), codec)[1], thr_frac)[1]
+
+
 def declick_audio(
     df: DataFrame,
     *,
@@ -3790,48 +3141,14 @@ def declick_audio(
     re-encode pcm_s16le; undecodable rows pass through with null bytes
     (the trim_silence convention).  mapInPandas, map-only — payloads
     never shuffle."""
-    from pyspark.sql.types import LongType, StructField, StructType
+    return _map_payloads(
+        df, [partial(_declick_kernel, thr_frac=thr_frac)],
+        bytes_col=bytes_col, codec_col=codec_col, stats="n_clicks long")
 
-    out_schema = StructType(
-        list(df.schema.fields) + [StructField("n_clicks", LongType())])
-    repo_root = _REPO_ROOT
 
-    def _batches(it):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import decode_payload, wav_encode
-        from gx_spark.audio_ops import declick_pcm as _dcp
-
-        for pdf in it:
-            new_bytes: list[bytes | None] = []
-            new_codec: list[str] = []
-            counts: list[int | None] = []
-            for bb, cc in zip(pdf[bytes_col], pdf[codec_col]):
-                try:
-                    sr, pcm = decode_payload(bytes(bb), cc)
-                except (ValueError, NotImplementedError, TypeError):
-                    new_bytes.append(None)
-                    new_codec.append(cc)
-                    counts.append(None)
-                    continue
-                y, k = _dcp(pcm, thr_frac)
-                if k == 0:
-                    new_bytes.append(bytes(bb))
-                    new_codec.append(cc)
-                else:
-                    new_bytes.append(wav_encode(y, sr))
-                    new_codec.append("pcm_s16le")
-                counts.append(k)
-            pdf = pdf.copy()
-            pdf[bytes_col] = new_bytes
-            if codec_col in pdf.columns:
-                pdf[codec_col] = new_codec
-            pdf["n_clicks"] = pd.array(counts, dtype="Int64")
-            yield pdf
-
-    return df.mapInPandas(_batches, schema=out_schema)
+def _declick_kernel(pcm, sr, _rid, *, thr_frac):
+    y, k = declick_pcm(pcm, thr_frac)
+    return (y if k else None), sr, {"n_clicks": k}
 
 
 # ---------------------------------------------------------------------------
@@ -3901,40 +3218,14 @@ def denoise_audio(
     pcm_s16le at its original length; undecodable rows pass through
     with null bytes (the trim_silence convention).  mapInPandas,
     map-only — payloads never shuffle."""
-    from pyspark.sql.types import StructType
+    return _map_payloads(
+        df, [partial(_denoise_kernel, noise_quantile=noise_quantile,
+                     oversub=oversub, floor_gain=floor_gain)],
+        bytes_col=bytes_col, codec_col=codec_col)
 
-    out_schema = StructType(list(df.schema.fields))
-    repo_root = _REPO_ROOT
 
-    def _batches(it):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import decode_payload, wav_encode
-        from gx_spark.audio_ops import denoise_pcm as _dnp
-
-        for pdf in it:
-            new_bytes: list[bytes | None] = []
-            new_codec: list[str] = []
-            for bb, cc in zip(pdf[bytes_col], pdf[codec_col]):
-                try:
-                    sr, pcm = decode_payload(bytes(bb), cc)
-                except (ValueError, NotImplementedError, TypeError):
-                    new_bytes.append(None)
-                    new_codec.append(cc)
-                    continue
-                y = _dnp(pcm, sr, noise_quantile=noise_quantile,
-                         oversub=oversub, floor_gain=floor_gain)
-                new_bytes.append(wav_encode(y, sr))
-                new_codec.append("pcm_s16le")
-            pdf = pdf.copy()
-            pdf[bytes_col] = new_bytes
-            if codec_col in pdf.columns:
-                pdf[codec_col] = new_codec
-            yield pdf
-
-    return df.mapInPandas(_batches, schema=out_schema)
+def _denoise_kernel(pcm, sr, _rid, **params):
+    return denoise_pcm(pcm, sr, **params), sr, {}
 
 
 # ---------------------------------------------------------------------------
@@ -3982,118 +3273,26 @@ def repair_pipeline(
     n_clicks long, hum_removed_ratio double — denoise adds none and
     always re-encodes).  Undecodable rows pass through with null bytes
     and null stats.  mapInPandas, map-only — payloads never shuffle."""
-    from pyspark.sql.types import (
-        DoubleType, IntegerType, LongType, StructField, StructType)
-
-    fields = list(df.schema.fields)
-    if dc:
-        fields.append(StructField("dc_removed", IntegerType()))
-    if declip:
-        fields += [StructField("n_clipped", LongType()),
-                   StructField("declip_gain_db", DoubleType())]
-    if declick:
-        fields.append(StructField("n_clicks", LongType()))
-    if hum:
-        fields.append(StructField("hum_removed_ratio", DoubleType()))
-    if not (dc or declip or declick or hum or denoise):
+    stages = [
+        (dc, partial(_dc_kernel, min_frac=dc_min_frac), "dc_removed int"),
+        (declip, partial(_declip_kernel, rail_frac=rail_frac,
+                         out_peak=out_peak),
+         "n_clipped long, declip_gain_db double"),
+        (declick, partial(_declick_kernel, thr_frac=click_thr_frac),
+         "n_clicks long"),
+        (hum, partial(_hum_kernel, mains=tuple(float(m) for m in mains),
+                      n_harmonics=int(n_harmonics),
+                      min_ratio=float(hum_min_ratio),
+                      notch_hz=float(notch_hz)), "hum_removed_ratio double"),
+        (denoise, partial(_denoise_kernel, noise_quantile=noise_quantile,
+                          oversub=oversub, floor_gain=floor_gain), ""),
+    ]
+    if not any(on for on, _, _ in stages):
         raise ValueError("enable at least one stage")
-    out_schema = StructType(fields)
-    repo_root = _REPO_ROOT
-    mains_t = tuple(float(m) for m in mains)
-
-    def _batches(it):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import decode_payload, wav_encode
-        from gx_spark.audio_ops import declick_pcm as _dkp
-        from gx_spark.audio_ops import declip_pcm as _dcp
-        from gx_spark.audio_ops import denoise_pcm as _dnp
-        from gx_spark.audio_ops import remove_hum_pcm as _rhp
-
-        for pdf in it:
-            nb: list = []
-            ncod: list = []
-            stats: dict[str, list] = {
-                "dc_removed": [], "n_clipped": [], "declip_gain_db": [],
-                "n_clicks": [], "hum_removed_ratio": []}
-            for bb, cc in zip(pdf[bytes_col], pdf[codec_col]):
-                try:
-                    if bb is None:
-                        raise ValueError("null payload")
-                    sr, pcm = decode_payload(bytes(bb), cc)
-                except (ValueError, NotImplementedError, TypeError):
-                    nb.append(None)
-                    ncod.append(cc)
-                    for k in stats:
-                        stats[k].append(None)
-                    continue
-                acted = False
-                dcv = 0
-                if dc:
-                    m = int(np.rint(np.mean(pcm))) if len(pcm) else 0
-                    if abs(m) >= dc_min_frac * 32768.0:
-                        pcm = np.clip(pcm.astype(np.int32) - m,
-                                      -32768, 32767).astype(np.int16)
-                        dcv = m
-                        acted = True
-                stats["dc_removed"].append(dcv)
-                n_clip, gdb = 0, 0.0
-                if declip:
-                    y, n_clip, g = _dcp(pcm, rail_frac, out_peak)
-                    if n_clip:
-                        pcm, gdb = y, g
-                        acted = True
-                stats["n_clipped"].append(n_clip)
-                stats["declip_gain_db"].append(gdb)
-                kk = 0
-                if declick:
-                    y, kk = _dkp(pcm, click_thr_frac)
-                    if kk:
-                        pcm = y
-                        acted = True
-                stats["n_clicks"].append(kk)
-                ratio = None
-                if hum:
-                    y, ratio = _rhp(pcm, sr, mains=mains_t,
-                                    n_harmonics=int(n_harmonics),
-                                    min_ratio=float(hum_min_ratio),
-                                    notch_hz=float(notch_hz))
-                    if y is not pcm:
-                        pcm = y
-                        acted = True
-                stats["hum_removed_ratio"].append(ratio)
-                if denoise:
-                    pcm = _dnp(pcm, sr, noise_quantile=noise_quantile,
-                               oversub=oversub, floor_gain=floor_gain)
-                    acted = True
-                if acted:
-                    nb.append(wav_encode(pcm, sr))
-                    ncod.append("pcm_s16le")
-                else:
-                    nb.append(bytes(bb))
-                    ncod.append(cc)
-            pdf = pdf.copy()
-            pdf[bytes_col] = nb
-            pdf[codec_col] = ncod
-            if dc:
-                pdf["dc_removed"] = pd.array(
-                    stats["dc_removed"], dtype="Int32")
-            if declip:
-                pdf["n_clipped"] = pd.array(
-                    stats["n_clipped"], dtype="Int64")
-                pdf["declip_gain_db"] = pd.array(
-                    stats["declip_gain_db"], dtype="float64")
-            if declick:
-                pdf["n_clicks"] = pd.array(
-                    stats["n_clicks"], dtype="Int64")
-            if hum:
-                pdf["hum_removed_ratio"] = pd.array(
-                    stats["hum_removed_ratio"], dtype="float64")
-            yield pdf
-
-    return df.mapInPandas(_batches, schema=out_schema)
+    return _map_payloads(
+        df, [k for on, k, _ in stages if on],
+        bytes_col=bytes_col, codec_col=codec_col,
+        stats=", ".join(st for on, _, st in stages if on and st))
 
 
 # ---------------------------------------------------------------------------
@@ -4106,10 +3305,6 @@ QA_FEATURES_SCHEMA = (
     "n_frames long, voiced_frac double, f0_median_hz double, "
     "periodicity_mean double, dc_frac double, hum_ratio double, "
     "hum_base_hz double")
-
-_QA_KEYS = tuple(p.strip().split(" ")[0]
-                 for p in QA_FEATURES_SCHEMA.split(","))
-
 
 def qa_features(
     df: DataFrame,
@@ -4131,55 +3326,8 @@ def qa_features(
     the standalone ops'
     (same row functions via their `decoded=` hand-off, test-pinned).
     Map-only, binary pruned in the same select — no shuffle."""
-    from pyspark.sql.types import StructType
-
-    kept = [f for f in df.schema.fields if f.name in (keep_cols or [])]
-    out_schema = StructType(
-        list(kept) + list(StructType.fromDDL(QA_FEATURES_SCHEMA).fields))
-    keeps = [f.name for f in kept]
-    repo_root = _REPO_ROOT
-
-    def _batches(it):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import decode_payload
-        from gx_spark.audio_ops import (
-            compute_electrical_row,
-            compute_loudness_row,
-            compute_pitch_row,
-        )
-
-        for pdf in it:
-            cols: dict[str, list] = {k: [] for k in _QA_KEYS}
-            for bb, cc in zip(pdf[bytes_col], pdf[codec_col]):
-                dec = None
-                if bb is not None:
-                    try:
-                        dec = decode_payload(bytes(bb), cc)
-                    except (ValueError, NotImplementedError, TypeError):
-                        dec = None
-                if dec is None:
-                    for k in _QA_KEYS:
-                        cols[k].append(None)
-                    continue
-                # pass the real bytes too: the row functions' null/codec
-                # early paths run before consulting `decoded`
-                lr = compute_loudness_row(bb, cc, decoded=dec)
-                pr = compute_pitch_row(bb, cc, decoded=dec)
-                er = compute_electrical_row(bb, cc, decoded=dec)
-                merged = {**lr, **pr, **er}
-                for k in _QA_KEYS:
-                    cols[k].append(merged.get(k))
-            out = pdf[keeps].copy() if keeps else pd.DataFrame(
-                index=pdf.index)
-            for k in _QA_KEYS:
-                out[k] = cols[k]
-            yield out
-
-    sel = list(keeps)
-    for c in (bytes_col, codec_col):
-        if c not in sel:
-            sel.append(c)
-    return df.select(*sel).mapInPandas(_batches, schema=out_schema)
+    keep = [f.name for f in df.schema.fields if f.name in (keep_cols or [])]
+    return _map_features(
+        df, QA_FEATURES_SCHEMA,
+        [compute_loudness_row, compute_pitch_row, compute_electrical_row],
+        (bytes_col, codec_col), bytes_col, keep)

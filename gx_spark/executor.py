@@ -253,19 +253,19 @@ class ValidationRun:
         self.options = options or EngineOptions()
         self.tables = tables or {}
 
-    def validate(
-        self,
-        df: DataFrame,
-        run_id: str | None = None,
-        partition_id: int | None = None,
-        snapshot_id: str | None = None,
-    ) -> ValidationBundle:
-        run_id = run_id or uuid.uuid4().hex[:12]
+    def compile(
+        self, df: DataFrame,
+    ) -> tuple[MetricContext, list[tuple[ExpectationConfiguration, Any]], str]:
+        """Plan every expectation of the suite against ``df``: the metric
+        context, one (config, finalizer or planning exception) pair per
+        expectation, and the widest result_format any of them asks for.
+        validate() and plancheck.compile_suite both plan through here, so
+        a plan-shape test sees the plan validate() builds."""
+        from .row_conditions import normalize_row_condition
+
         ctx = MetricContext(df, self.options, self.tables)
         finalizers: list[tuple[ExpectationConfiguration, Any]] = []
         max_rf = "BOOLEAN_ONLY"
-        from .row_conditions import normalize_row_condition
-
         for i, cfg in enumerate(self.suite.expectations):
             try:
                 handler = get_expectation(cfg.expectation_type)
@@ -283,7 +283,17 @@ class ValidationRun:
                     max_rf = rf
             except Exception as exc:  # planning error → exception EVR
                 finalizers.append((cfg, exc))
+        return ctx, finalizers, max_rf
 
+    def validate(
+        self,
+        df: DataFrame,
+        run_id: str | None = None,
+        partition_id: int | None = None,
+        snapshot_id: str | None = None,
+    ) -> ValidationBundle:
+        run_id = run_id or uuid.uuid4().hex[:12]
+        ctx, finalizers, max_rf = self.compile(df)
         bag = MetricBag()
         ctx.resolve(bag)
 

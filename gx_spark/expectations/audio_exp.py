@@ -13,7 +13,8 @@ tiny partial-agg rows and violation structs move (plan-shape tested).
 
 from __future__ import annotations
 
-import pandas as pd
+from functools import partial
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -402,32 +403,11 @@ def ensure_pitch_features(
                 "conflicting pitch decode params in one suite: "
                 f"{have} vs {params}")
         return
-    import os
+    from ..audio_ops import _row_udf, compute_pitch_row
 
-    from pyspark.sql.functions import pandas_udf
-
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
-    keys = ("voiced_frac", "f0_median_hz", "periodicity_mean")
-
-    @pandas_udf("voiced_frac double, f0_median_hz double, "
-                "periodicity_mean double")
-    def pitch_flags(b: pd.Series, codec: pd.Series) -> pd.DataFrame:
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio_ops import compute_pitch_row as _cpr
-
-        cols: dict[str, list] = {x: [] for x in keys}
-        appends = [cols[x].append for x in keys]
-        for bb, cc in zip(b, codec):
-            r = _cpr(bb, cc, **params)
-            for ap, x in zip(appends, keys):
-                ap(r[x])
-        return pd.DataFrame(cols, copy=False)
-
-    ctx.derived[_PITCH_COL] = pitch_flags(F.col(bcol), F.col(ccol))
+    ctx.derived[_PITCH_COL] = _row_udf(
+        "voiced_frac double, f0_median_hz double, periodicity_mean double",
+        partial(compute_pitch_row, **params))(F.col(bcol), F.col(ccol))
     ctx._pitch_params = params
 
 
@@ -514,32 +494,12 @@ def ensure_loudness_features(
                 "conflicting loudness block params in one suite: "
                 f"{have} vs {params}")
         return
-    import os
+    from ..audio_ops import _row_udf, compute_loudness_row
 
-    from pyspark.sql.functions import pandas_udf
-
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
-    keys = ("lufs_integrated", "lufs_momentary_max", "gated_block_frac")
-
-    @pandas_udf("lufs_integrated double, lufs_momentary_max double, "
-                "gated_block_frac double")
-    def loudness_flags(b: pd.Series, codec: pd.Series) -> pd.DataFrame:
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio_ops import compute_loudness_row as _clr
-
-        cols: dict[str, list] = {x: [] for x in keys}
-        appends = [cols[x].append for x in keys]
-        for bb, cc in zip(b, codec):
-            r = _clr(bb, cc, **params)
-            for ap, x in zip(appends, keys):
-                ap(r[x])
-        return pd.DataFrame(cols, copy=False)
-
-    ctx.derived[_LOUDNESS_COL] = loudness_flags(F.col(bcol), F.col(ccol))
+    ctx.derived[_LOUDNESS_COL] = _row_udf(
+        "lufs_integrated double, lufs_momentary_max double, "
+        "gated_block_frac double",
+        partial(compute_loudness_row, **params))(F.col(bcol), F.col(ccol))
     ctx._loudness_params = params
 
 
@@ -690,30 +650,11 @@ def ensure_electrical_features(
                 "conflicting electrical probe params in one suite: "
                 f"{have} vs {params}")
         return
-    import os
+    from ..audio_ops import _row_udf, compute_electrical_row
 
-    from pyspark.sql.functions import pandas_udf
-
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
-    keys = ("dc_frac", "hum_ratio", "hum_base_hz")
-
-    @pandas_udf("dc_frac double, hum_ratio double, hum_base_hz double")
-    def electrical_flags(b: pd.Series, codec: pd.Series) -> pd.DataFrame:
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio_ops import compute_electrical_row as _cer
-
-        cols: dict[str, list] = {x: [] for x in keys}
-        for bb, cc in zip(b, codec):
-            r = _cer(bb, cc, **params)
-            for x in keys:
-                cols[x].append(r[x])
-        return pd.DataFrame(cols, copy=False)
-
-    ctx.derived[_ELECTRICAL_COL] = electrical_flags(F.col(bcol), F.col(ccol))
+    ctx.derived[_ELECTRICAL_COL] = _row_udf(
+        "dc_frac double, hum_ratio double, hum_base_hz double",
+        partial(compute_electrical_row, **params))(F.col(bcol), F.col(ccol))
     ctx._electrical_params = params
 
 
@@ -797,33 +738,11 @@ def ensure_click_features(
                 "conflicting click-detector thr_frac in one suite: "
                 f"{have} vs {thr}")
         return
-    import os
+    from ..audio_ops import _click_count_row, _row_udf
 
-    from pyspark.sql.functions import pandas_udf
-
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
-
-    @pandas_udf("bigint")
-    def click_flags(b: pd.Series, codec: pd.Series) -> pd.Series:
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import decode_payload
-        from gx_spark.audio_ops import declick_pcm
-
-        out: list = []
-        for bb, cc in zip(b, codec):
-            try:
-                _sr, pcm = decode_payload(bytes(bb), cc)
-            except (ValueError, NotImplementedError, TypeError):
-                out.append(None)
-                continue
-            out.append(declick_pcm(pcm, thr)[1])
-        return pd.Series(out, dtype="Int64")
-
-    ctx.derived[_CLICK_COL] = click_flags(F.col(bcol), F.col(ccol))
+    ctx.derived[_CLICK_COL] = _row_udf(
+        "bigint", partial(_click_count_row, thr_frac=thr))(
+            F.col(bcol), F.col(ccol))
     ctx._click_thr = thr
 
 

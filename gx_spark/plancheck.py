@@ -18,9 +18,9 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .executor import ValidationRun
 from .model import EngineOptions, ExpectationSuite
 from .planner import MetricBag, MetricContext
-from .registry import get_expectation
 from .violations import build_violations_df
 
 
@@ -31,9 +31,12 @@ def compile_suite(
     options: EngineOptions | None = None,
     tables: dict[str, DataFrame] | None = None,
 ) -> MetricContext:
-    ctx = MetricContext(df, options or EngineOptions(), tables)
-    for i, cfg in enumerate(suite.expectations):
-        get_expectation(cfg.expectation_type).plan(ctx, cfg, i)
+    """The suite planned exactly as validate() plans it; a planning error
+    raises instead of becoming an exception EVR."""
+    ctx, finalizers, _ = ValidationRun(spark, suite, options, tables).compile(df)
+    for _cfg, fin in finalizers:
+        if isinstance(fin, BaseException):
+            raise fin
     return ctx
 
 

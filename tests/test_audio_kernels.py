@@ -254,6 +254,19 @@ def test_golden_digest_and_error_contract(spark, name):
             assert all(_null(d[c]) for c in feats), (name, i, d)
 
 
+def test_augment_pipeline_reverb_then_noise_matches_chain_on_silence(spark):
+    """A silent clip through reverb then noise: chained, augment_reverb
+    re-encodes it as pcm_s16le and augment_noise passes that through
+    (SNR vs silence is undefined); the fused pipeline must emit the same
+    bytes and codec, not the original flac payload."""
+    df = spark.createDataFrame(
+        [r for r in golden_rows() if r[0] in (0, 11)], SCHEMA)
+    fused = ao.augment_pipeline(df, reverb_gain=0.3, snr_db=15.0)
+    chained = ao.augment_noise(ao.augment_reverb(df, gain=0.3), 15.0)
+    assert (sorted(fused.collect())
+            == sorted(chained.drop("reverb_wet_db").collect()))
+
+
 if __name__ == "__main__":
     from pyspark.sql import SparkSession
 

@@ -170,6 +170,20 @@ def test_audio_suite_over_iceberg_read_keeps_binary_off_shuffles(
     assert all("bytes" not in rs for rs in read_schemas(plan)), plan
 
 
+def test_compile_suite_plans_ge_row_condition_like_validate(spark, audio_dir):
+    """compile_suite plans through ValidationRun.compile, the loop
+    validate() runs: a condition_parser="great_expectations" row_condition
+    reaches the plan translated to Spark SQL, filtering the fused agg."""
+    df = spark.read.parquet(f"{audio_dir}/audio_clips.parquet")
+    suite = ExpectationSuite("a").add(
+        "expect_column_values_to_be_between", column="dur_ms",
+        min_value=0, max_value=100000, row_condition='col("sr_hz") > 16000',
+        condition_parser="great_expectations")
+    plan = formatted_plan(stage1_df(compile_suite(spark, df, suite)))
+    assert "(sr_hz#" in plan and "> 16000)" in plan, plan
+    assert count_nodes(plan, "Scan parquet") == 1, plan
+
+
 def test_changelog_delete_legs_broadcast_never_sortmerge(spark, tmp_path):
     """changes() recovers equality-deleted rows via a BROADCAST semi-join
     of the (small) key set against the parent read, and positional pairs

@@ -33,7 +33,11 @@ def build_zip() -> str:
     return zpath
 
 
-def run_at(cores: int, table: str, zpath: str, passes: int = 1) -> dict:
+def run_at(cores: int, table: str, zpath: str, passes: int = 1,
+           job: str = "audio_job.py", job_arg: str | None = None) -> dict:
+    """One spark-submit launch of tools/<job> at local[cores]; returns the
+    job's JSON result line.  The job's second argument is `job_arg`
+    (default: the audio_job pass count)."""
     cmd = [
         "spark-submit",
         "--master", f"local[{cores}]",
@@ -54,9 +58,9 @@ def run_at(cores: int, table: str, zpath: str, passes: int = 1) -> dict:
         "--conf", "spark.sql.parquet.columnarReaderBatchSize=32",
         "--conf", "spark.hadoop.parquet.hadoop.vectored.io.enabled=false",
         "--py-files", zpath,
-        os.path.join(REPO, "tools", "audio_job.py"),
+        os.path.join(REPO, "tools", job),
         table,
-        str(passes),
+        str(passes) if job_arg is None else job_arg,
     ]
     out = subprocess.run(cmd, capture_output=True, text=True, timeout=3600)
     for line in out.stdout.splitlines():
@@ -194,7 +198,7 @@ deterministic {q['n_clips']:,}-clip slice of the bench table:
 | {q['speedup']}x | {q['hardware_ceiling_speedup']}x \
 | {q['scaling_efficiency']} | {q['efficiency_vs_hardware']} |
 
-Reproduce: `python tools/pipeline_scaling.py`.
+Reproduce: `python tools/pass_scaling.py pipeline`.
 """
 
     def row(m):
