@@ -1,5 +1,7 @@
-"""Golden parity for the per-clip audio ops (gx_spark/audio_ops.py) and
-the four decode-backed gate columns (gx_spark/expectations/audio_exp.py).
+"""Golden parity for the per-clip audio ops (gx_spark/audio_ops.py), the
+four decode-backed gate columns (gx_spark/expectations/audio_exp.py) and
+the audio suite's flags struct (gx_spark/audio.py make_audio_flags_udf,
+plain and with the quality fields).
 
 Every op runs over one seeded table: tools/gen_audio.gen_row clips in
 every codec the generator emits (pcm_s16le, flac, pcm_mulaw, pcm_alaw,
@@ -13,7 +15,9 @@ moved onto the shared decode/encode driver and must not move.
 
 The failure rows (null, garbage, opus, mp3) also check the one error
 contract: a payload transform emits null bytes, the ORIGINAL codec and
-null in every column it writes; a feature op emits null features.
+null in every column it writes; a feature op emits null features.  The
+flags struct is the exception: a failure row is a validation finding
+(decodable=False), not a null, so the flags entries skip that check.
 Decodable rows never take the failure path (except trim_silence on the
 empty clip, which has no active span to encode), so no decodable input
 reaches a kernel that raises.
@@ -97,8 +101,19 @@ def _gates(df):
     return df.select("idx", *[c.alias(n) for n, c in ctx.derived.items()])
 
 
+def _audio_flags(quality):
+    def op(df):
+        from gx_spark.audio import make_audio_flags_udf
+
+        udf = make_audio_flags_udf(quality)
+        return df.select("idx", udf("clip_id", "bytes", "sr_hz", "dur_ms",
+                                    "codec", "transcript").alias("flags"))
+    return op
+
+
 # name -> (op, kind): "payload" ops keep every input column and rewrite
-# bytes/codec; "features" ops drop the payload and add feature columns
+# bytes/codec; "features" ops drop the payload and add feature columns;
+# "flags" ops add the validation flags struct
 OPS = {
     "trim_silence": (lambda d: ao.trim_silence(d), "payload"),
     "normalize_gain": (lambda d: ao.normalize_gain(d), "payload"),
@@ -151,6 +166,8 @@ OPS = {
     "qa_features": (lambda d: ao.qa_features(d, keep_cols=["idx"]),
                     "features"),
     "gates": (_gates, "features"),
+    "audio_flags": (_audio_flags(None), "flags"),
+    "audio_flags_quality": (_audio_flags({}), "flags"),
 }
 
 # feature columns that legitimately carry a value on a failure row: a
@@ -159,6 +176,8 @@ ECHOES = {"n_mels", "n_mfcc", "n_channels", "decodable", "header_sr",
           "header_sr_ok", "dur_ok", "transcript_ok"}
 
 GOLDEN = {
+    'audio_flags': '8495571c7f62653c67b563d34236873b',
+    'audio_flags_quality': '71239a830cf63e572f07a6a3985dd086',
     'augment_noise': '9eb5b9c91ef1e834cd4a0ec97843713f',
     'augment_pipeline_noise_only': '370fd9d322723e9c06d0047a101e1425',
     'augment_pipeline_noise_speed_window': 'b0cddb46bd3774040b08bd06384db583',
@@ -249,7 +268,7 @@ def test_golden_digest_and_error_contract(spark, name):
                 assert all(d[c] is None for c in written), (name, i, d)
             elif not (name == "trim_silence" and i == EMPTY_IDX):
                 assert d["bytes"] is not None, (name, i)
-        elif i in FAILURE_IDX:
+        elif kind == "features" and i in FAILURE_IDX:
             feats = [c for c in new_cols if c not in ECHOES]
             assert all(_null(d[c]) for c in feats), (name, i, d)
 

@@ -331,3 +331,117 @@ def test_progressive_jpeg_end_to_end(spark):
     bad = {r["img_id"] for r in b.violations_table().collect()}
     b.unpersist()
     assert bad == {"lying_prog", "garbage"}
+
+
+# ---------------------------------------------------------------------------
+# golden parity: image / video flags structs, resize_images, image_phash64
+# ---------------------------------------------------------------------------
+
+IMAGES_SCHEMA = ("idx int, img_id string, bytes binary, width int, "
+                 "height int, channels int, format string")
+VIDEOS_SCHEMA = ("idx int, vid_id string, bytes binary, n_frames int, "
+                 "fps double, width int, height int, format string")
+
+
+def golden_images() -> list[tuple]:
+    """Good gxraw / png / jpeg rows, a width lie, a gxraw payload labeled
+    png, garbage, a null payload and an unknown format."""
+    from gx_spark.jpeg import jpeg_encode
+    from gx_spark.png import png_encode
+
+    raw = gim.raw_encode(gim.synth_image("g0", 16, 12))
+    rows = [
+        (raw, 16, 12, 3, "gxraw"),
+        (png_encode(gim.synth_image("g1", 16, 16)), 16, 16, 3, "png"),
+        (jpeg_encode(gim.synth_image("g2", 8, 8), 90), 8, 8, 3, "jpeg"),
+        (raw, 17, 12, 3, "gxraw"),
+        (raw, 16, 12, 3, "png"),
+        (b"garbage-bytes", 16, 12, 3, "gxraw"),
+        (None, 16, 12, 3, "gxraw"),
+        (raw, 16, 12, 3, "webp"),
+    ]
+    return [(i, f"i{i}", None if b is None else bytearray(b), w, h, c, f)
+            for i, (b, w, h, c, f) in enumerate(rows)]
+
+
+def golden_videos() -> list[tuple]:
+    """Good mp4 / gxraw_frames / h264 rows, an mp4 payload labeled h264,
+    garbage, a null payload, an unknown format, a frame-count lie and a
+    zero fps."""
+    from gx_spark.h264 import annexb_encode
+    from gx_spark.isobmff import mp4_encode
+
+    mp4 = mp4_encode("v0", 100, 25.0, 64, 48)
+    frames = b"".join(gim.raw_encode(gim.synth_image(f"f{i}", 8, 8))
+                      for i in range(10))
+    rows = [
+        (mp4, 100, 25.0, 64, 48, "mp4"),
+        (frames, 10, 10.0, 8, 8, "gxraw_frames"),
+        (annexb_encode("v2", 100, 25.0, 64, 48), 100, 25.0, 64, 48, "h264"),
+        (mp4, 100, 25.0, 64, 48, "h264"),
+        (b"garbage-bytes", 100, 25.0, 64, 48, "mp4"),
+        (None, 100, 25.0, 64, 48, "mp4"),
+        (b"????", 100, 25.0, 64, 48, "vp9"),
+        (frames, 12, 10.0, 8, 8, "gxraw_frames"),
+        (mp4, 100, 0.0, 64, 48, "mp4"),
+    ]
+    return [(i, f"v{i}", None if b is None else bytearray(b), *rest)
+            for i, (b, *rest) in enumerate(rows)]
+
+
+def _image_flags(df):
+    return df.select("idx", gim.make_image_flags_udf()(
+        "bytes", "width", "height", "channels", "format").alias("flags"))
+
+
+def _video_flags(df):
+    return df.select("idx", gim.make_video_flags_udf()(
+        "bytes", "n_frames", "fps", "width", "height", "format"
+    ).alias("flags"))
+
+
+# name -> (op, table, schema, sort key)
+IMAGE_OPS = {
+    "image_flags": (_image_flags, golden_images, IMAGES_SCHEMA, "idx"),
+    "video_flags": (_video_flags, golden_videos, VIDEOS_SCHEMA, "idx"),
+    "resize_images": (lambda d: gim.resize_images(d, 8, 6), golden_images,
+                      IMAGES_SCHEMA, "id"),
+    "image_phash64": (gim.image_phash64, golden_images, IMAGES_SCHEMA, "id"),
+}
+
+IMAGE_GOLDEN = {
+    'image_flags': '787417862630a36b7b63928478e0e362',
+    'image_phash64': '8ed62f561a4537d5bb0f84876aca4abc',
+    'resize_images': '5e95b308ab49fa8c4d6107ace80bf485',
+    'video_flags': '1cb685938a7083a192ef0357f56a5fd9',
+}
+
+
+def _run_image_op(spark, name):
+    op, table, schema, key = IMAGE_OPS[name]
+    out = op(spark.createDataFrame(table(), schema))
+    return out, sorted(out.collect(), key=lambda r: r[key])
+
+
+@pytest.mark.parametrize("name", sorted(IMAGE_OPS))
+def test_image_golden_digest(spark, name):
+    from tests.test_audio_kernels import digest
+
+    out, rows = _run_image_op(spark, name)
+    assert digest(out, rows) == IMAGE_GOLDEN[name]
+
+
+if __name__ == "__main__":
+    # print fresh digests (regenerate only after an intended output change)
+    from pyspark.sql import SparkSession
+
+    from tests.test_audio_kernels import digest
+
+    spark = (SparkSession.builder.master("local[2]")
+             .config("spark.ui.enabled", "false")
+             .config("spark.ui.showConsoleProgress", "false")
+             .config("spark.sql.shuffle.partitions", "2").getOrCreate())
+    for name in sorted(IMAGE_OPS):
+        out, rows = _run_image_op(spark, name)
+        print(f"    {name!r}: {digest(out, rows)!r},")
+    spark.stop()
