@@ -23,10 +23,12 @@ from __future__ import annotations
 
 import struct
 import zlib
+from functools import partial
 from typing import Any
 
 import numpy as np
-import pandas as pd
+
+from .row_udf import _num, _row_udf
 
 # ---------------------------------------------------------------------------
 # deterministic reference synthesis (FIXTURES.md §1)
@@ -571,6 +573,13 @@ def compute_flags_row(
     return out
 
 
+def _audio_flags_row(quality, clip_id, b, sr, dur, codec, transcript):
+    # a null sr_hz / dur_ms reads as 0: the row is metadata-unexpected,
+    # while its transcript is still checked
+    return compute_flags_row(clip_id, b, _num(sr), _num(dur), codec,
+                             transcript, quality=quality)
+
+
 def make_audio_flags_udf(quality: dict[str, Any] | None = None):
     """Arrow-batched pandas UDF: (clip_id, bytes, sr_hz, dur_ms, codec,
     transcript) → flags struct.  Built lazily so importing gx_spark never
@@ -580,40 +589,8 @@ def make_audio_flags_udf(quality: dict[str, Any] | None = None):
     struct with clipping_ratio/silence_ratio computed from the SAME decode,
     so adding quality expectations to a suite costs no extra decode pass.
 
-    The worker-side body imports gx_spark by path (captured at define time)
-    so local-mode executors work even when the driver put the repo on
-    sys.path manually; under spark-submit --py-files the normal import
-    succeeds first."""
-    import os
-
-    from pyspark.sql.functions import pandas_udf
-
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    keys = ("decodable", "header_sr", "header_sr_ok",
-            "dur_ok", "n_samples", "snr_db", "transcript_ok")
-    schema = AUDIO_FLAGS_SCHEMA
-    if quality is not None:
-        keys = keys + ("clipping_ratio", "silence_ratio")
-        schema = AUDIO_QUALITY_FLAGS_SCHEMA
-
-    @pandas_udf(schema)
-    def audio_flags(
-        clip_id: pd.Series, b: pd.Series, sr: pd.Series, dur: pd.Series,
-        codec: pd.Series, transcript: pd.Series,
-    ) -> pd.DataFrame:
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.audio import compute_flags_row as _cfr
-
-        cols: dict[str, list] = {k: [] for k in keys}
-        appends = [cols[k].append for k in cols]
-        for ci, bb, s, d, cc, tx in zip(clip_id, b, sr, dur, codec, transcript):
-            r = _cfr(ci, bb, int(s) if s is not None else 0,
-                     int(d) if d is not None else 0, cc, tx, quality=quality)
-            for ap, k in zip(appends, cols):
-                ap(r[k])
-        return pd.DataFrame(cols, copy=False)
-
-    return audio_flags
+    Runs on the shared row-UDF driver (gx_spark/row_udf.py), which also
+    puts the repo on the workers' sys.path."""
+    return _row_udf(
+        AUDIO_FLAGS_SCHEMA if quality is None else AUDIO_QUALITY_FLAGS_SCHEMA,
+        partial(_audio_flags_row, quality))

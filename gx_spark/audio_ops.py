@@ -41,11 +41,11 @@ per-clip logic:
   codec).  The fused augment_pipeline / repair_pipeline are just longer
   kernel lists, so they equal the chained ops by construction.
 - **Feature ops** give their ``compute_*_row`` (one decode inside it) to
-  ``_map_features``, which builds the pandas UDF, projects the struct out
-  as flat columns beside ``keep_cols`` and drops the binary column in the
+  ``_map_features``, which builds the pandas UDF with the shared row-UDF
+  driver (gx_spark/row_udf.py ``_row_udf``), projects the struct out as
+  flat columns beside ``keep_cols`` and drops the binary column in the
   same select.  Several row functions (qa_features) share one decode
-  made by the driver and passed as ``decoded=(sr, pcm)``.  The audio gate
-  expectations build their columns with the same ``_row_udf``.
+  made by ``_fused_row`` and passed as ``decoded=(sr, pcm)``.
 
 Error contract: a row whose decode OR kernel / row function raises
 ValueError, NotImplementedError or TypeError is nulled — null bytes, the
@@ -55,7 +55,6 @@ null struct).  Any other exception is a bug and fails the task.
 
 from __future__ import annotations
 
-import os
 import zlib
 from functools import lru_cache, partial
 from math import gcd
@@ -67,53 +66,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .audio import decode_payload
-
-_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-# what a bad payload raises (decode, or a kernel fed by it): the row is
-# nulled instead of failing the task
-_ROW_ERRORS = (ValueError, NotImplementedError, TypeError)
+from .row_udf import _ROW_ERRORS, _column, _on_workers, _pandas_dtype, _row_udf
 
 
 # ---------------------------------------------------------------------------
-# the decode/encode driver
+# the decode/encode driver (row UDFs: gx_spark/row_udf.py)
 # ---------------------------------------------------------------------------
-
-
-def _on_workers(fn, *args):
-    """``fn(*args, *call_args)`` as a callable Spark ships to its Python
-    workers.  fn and args travel as one cloudpickle blob that is loaded
-    only after the repo root is on the worker's sys.path, so kernels and
-    row functions resolve even where the worker did not start in the
-    repo (the one sys.path edit of the audio ops)."""
-    from pyspark import cloudpickle
-
-    blob = cloudpickle.dumps((fn, args))
-    repo_root = _REPO_ROOT
-
-    def call(*call_args):
-        import pickle
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        f, a = pickle.loads(blob)
-        return f(*a, *call_args)
-
-    return call
-
-
-def _pandas_dtype(dt) -> str:
-    """Nullable pandas dtype that carries Spark type ``dt`` through Arrow
-    (a plain int list with a None would turn float64)."""
-    from pyspark.sql.types import BooleanType, DoubleType, IntegerType, LongType
-
-    return {IntegerType: "Int32", LongType: "Int64", DoubleType: "float64",
-            BooleanType: "boolean"}.get(type(dt), "object")
-
-
-def _column(values: list, dtype: str):
-    return values if dtype == "object" else pd.array(values, dtype=dtype)
 
 
 def _decode(b, codec: str, decoded: Any = None):
@@ -193,48 +151,16 @@ def _payload_batches(kernels, bytes_col, codec_col, id_col, written,
         yield pdf
 
 
-def _row_udf(schema: str, *row_fns):
-    """pandas UDF returning ``schema`` from per-row functions.
-
-    One row function is called as ``fn(*row)`` on the UDF's input
-    columns and decodes for itself.  Several (a fused pass over (bytes,
-    codec)) share one decode made here: each is called as
-    ``fn(b, codec, decoded=(sr, pcm))`` and their dicts merge, later
-    functions winning on shared keys.  A struct schema takes dict (or
-    field-ordered tuple) results, a scalar schema the value itself."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DataType, StructType
-
-    dt = DataType.fromDDL(schema)
-    fields = ([(f.name, _pandas_dtype(f.dataType)) for f in dt.fields]
-              if isinstance(dt, StructType) else None)
-    return pandas_udf(dt)(
-        _on_workers(_row_frame, row_fns, fields, _pandas_dtype(dt)))
-
-
 def _fused_row(row_fns, b, codec):
+    """Several row functions (a fused pass over (bytes, codec)) on one
+    decode made here: each is called as ``fn(b, codec, decoded=(sr,
+    pcm))`` and their dicts merge, later functions winning on shared
+    keys."""
     dec = decode_payload(bytes(b), codec)
     out: dict[str, Any] = {}
     for fn in row_fns:
         out.update(fn(b, codec, decoded=dec))
     return out
-
-
-def _row_frame(row_fns, fields, dtype, *cols):
-    fn = row_fns[0] if len(row_fns) == 1 else partial(_fused_row, row_fns)
-    rows = []
-    for vals in zip(*cols):
-        try:
-            rows.append(fn(*vals))
-        except _ROW_ERRORS:
-            rows.append(None)
-    if fields is None:
-        return pd.Series(_column(rows, dtype))
-    names = [k for k, _ in fields]
-    rows = [dict(zip(names, r)) if isinstance(r, tuple) else r or {}
-            for r in rows]
-    return pd.DataFrame({k: _column([r.get(k) for r in rows], d)
-                         for k, d in fields}, copy=False)
 
 
 def _map_features(
@@ -252,7 +178,8 @@ def _map_features(
     field emitted instead as its JVM-side xxhash64 ``fp64``."""
     keep = keep_cols if keep_cols is not None else [
         c for c in df.columns if c != bytes_col]
-    udf = _row_udf(schema, *row_fns)
+    udf = _row_udf(schema, row_fns[0] if len(row_fns) == 1
+                   else partial(_fused_row, row_fns))
     feat = udf(*[F.col(c) for c in in_cols]).alias("_f")
     cols = [F.col(f"_f.{k}").alias(k) for k in udf.returnType.fieldNames()
             if k != hashed]

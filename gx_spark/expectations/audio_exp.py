@@ -1,14 +1,18 @@
 """Audio payload expectations (north-rule extension, no upstream analog —
 SURVEY.md §2.5 'Audio payload checks').
 
-All three share ONE derived `__audio` struct column produced by the
-Arrow-batched pandas UDF (gx_spark/audio.py), and all three are
+The decode-backed expectations read shared derived columns, each built
+once per run by one row UDF (gx_spark/row_udf.py) and registered by
+base._shared_udf_column: the `__audio` flags struct (gx_spark/audio.py)
+and the `__pitch` / `__loudness` / `__electrical` / `__clicks` gate
+columns (gx_spark/audio_ops.py row functions).  All of them are
 `count_via_violations`: their unexpected counts come from the fused
-violations pass, so the decode (and the binary column's Arrow transfer to
-Python) happens exactly ONCE per run, map-side.  Catalyst prunes the unused
-`__audio` projection out of the stage-1 agg plan, which therefore never
-decodes.  The binary column never enters a shuffle in either pass — only
-tiny partial-agg rows and violation structs move (plan-shape tested).
+violations pass, so each decode (and the binary column's Arrow transfer
+to Python) happens exactly ONCE per run, map-side.  Catalyst prunes the
+unused derived projections out of the stage-1 agg plan, which therefore
+never decodes.  The binary column never enters a shuffle in either pass
+— only tiny partial-agg rows and violation structs move (plan-shape
+tested).
 """
 
 from __future__ import annotations
@@ -22,7 +26,8 @@ from ..audio import make_audio_flags_udf
 from ..model import ExpectationConfiguration
 from ..planner import MetricContext
 from ..registry import register_expectation
-from .base import ColumnMapExpectation, require_columns
+from ..row_udf import _row_udf
+from .base import ColumnMapExpectation, _SharedColumnMap, _shared_udf_column, require_columns
 
 _AUDIO_COL = "__audio"
 
@@ -42,45 +47,32 @@ def ensure_audio_flags(
     suite must agree on the decode-level params (thresholds like max_ratio
     are per-expectation and free to differ)."""
     k = cfg.kwargs
-    cols = dict(
-        clip_id=k.get("clip_id_column", "clip_id"),
-        bytes=k.get("bytes_column", "bytes"),
-        sr_hz=k.get("sr_column", "sr_hz"),
-        dur_ms=k.get("dur_column", "dur_ms"),
-        codec=k.get("codec_column", "codec"),
-        transcript=k.get("transcript_column", "transcript"),
+    cols = (
+        k.get("clip_id_column", "clip_id"),
+        k.get("bytes_column", "bytes"),
+        k.get("sr_column", "sr_hz"),
+        k.get("dur_column", "dur_ms"),
+        k.get("codec_column", "codec"),
+        k.get("transcript_column", "transcript"),
     )
-    require_columns(ctx, *cols.values())
-    have_q = getattr(ctx, "_audio_quality_params", None)
-    if _AUDIO_COL in ctx.derived:
-        if quality is None:
-            return  # existing (possibly richer) column already serves us
-        if have_q is not None:
-            if have_q != quality:
-                raise ValueError(
-                    "conflicting audio quality params in one suite: "
-                    f"{have_q} vs {quality}")
-            return
-        # upgrade: rebuild the shared column with the quality schema
-    udf = make_audio_flags_udf(quality=quality)
-    ctx.derived[_AUDIO_COL] = udf(*[F.col(c) for c in cols.values()])
-    if quality is not None:
-        ctx._audio_quality_params = quality
+    _shared_udf_column(ctx, _AUDIO_COL, cols,
+                       lambda: make_audio_flags_udf(quality=quality),
+                       quality, "audio quality params")
+
+
+def _payload_cols(cfg: ExpectationConfiguration) -> tuple[str, str]:
+    k = cfg.kwargs
+    return k.get("bytes_column", "bytes"), k.get("codec_column", "codec")
 
 
 @register_expectation("expect_audio_metadata_to_be_consistent")
-class AudioMetadataConsistent(ColumnMapExpectation):
+class AudioMetadataConsistent(_SharedColumnMap):
     """Unexpected when the payload fails to decode, the embedded header
     sample-rate disagrees with `sr_hz`, or the decoded frame count disagrees
     with `sr_hz * dur_ms` (truncation)."""
 
     metric_name = "audio.metadata_consistent"
-    count_via_violations = True
-
-    def plan(self, ctx, cfg, index):
-        cfg.kwargs.setdefault("column", cfg.kwargs.get("bytes_column", "bytes"))
-        ensure_audio_flags(ctx, cfg)
-        return super().plan(ctx, cfg, index)
+    shared = staticmethod(ensure_audio_flags)
 
     def unexpected_condition(self, cfg, ctx) -> Column:
         a = F.col(_AUDIO_COL)
@@ -103,18 +95,13 @@ class AudioMetadataConsistent(ColumnMapExpectation):
 
 
 @register_expectation("expect_audio_snr_to_be_at_least")
-class AudioSnrAtLeast(ColumnMapExpectation):
+class AudioSnrAtLeast(_SharedColumnMap):
     """Decoded PCM vs the deterministic reference re-synthesis:
     SNR >= min_snr_db (default 30, per BASELINE.json's per-row invariant).
     Non-decodable codecs are metadata-only and excluded (snr_db null)."""
 
     metric_name = "audio.snr"
-    count_via_violations = True
-
-    def plan(self, ctx, cfg, index):
-        cfg.kwargs.setdefault("column", cfg.kwargs.get("bytes_column", "bytes"))
-        ensure_audio_flags(ctx, cfg)
-        return super().plan(ctx, cfg, index)
+    shared = staticmethod(ensure_audio_flags)
 
     def unexpected_condition(self, cfg, ctx) -> Column:
         thr = float(cfg.kwargs.get("min_snr_db", 30.0))
@@ -126,19 +113,15 @@ class AudioSnrAtLeast(ColumnMapExpectation):
 
 
 @register_expectation("expect_transcript_to_match_reference")
-class TranscriptMatchesReference(ColumnMapExpectation):
+class TranscriptMatchesReference(_SharedColumnMap):
     """Transcript equality vs the deterministic reference (computed in the
     same pandas UDF batch as the audio decode)."""
 
     metric_name = "audio.transcript_match"
-    count_via_violations = True
-
-    def plan(self, ctx, cfg, index):
-        # target column is the transcript itself (null transcripts are a
-        # not_be_null concern, excluded from this denominator)
-        cfg.kwargs.setdefault("column", cfg.kwargs.get("transcript_column", "transcript"))
-        ensure_audio_flags(ctx, cfg)
-        return super().plan(ctx, cfg, index)
+    # target column is the transcript itself (null transcripts are a
+    # not_be_null concern, excluded from this denominator)
+    target = ("transcript_column", "transcript")
+    shared = staticmethod(ensure_audio_flags)
 
     def unexpected_condition(self, cfg, ctx) -> Column:
         return ~F.coalesce(F.col(_AUDIO_COL)["transcript_ok"], F.lit(False))
@@ -199,8 +182,13 @@ def _quality_params(cfg: ExpectationConfiguration) -> dict:
     )
 
 
+def _ensure_quality_flags(ctx: MetricContext,
+                          cfg: ExpectationConfiguration) -> None:
+    ensure_audio_flags(ctx, cfg, quality=_quality_params(cfg))
+
+
 @register_expectation("expect_audio_clipping_ratio_to_be_below")
-class AudioClippingBelow(ColumnMapExpectation):
+class AudioClippingBelow(_SharedColumnMap):
     """Unexpected when the fraction of decoded samples at |pcm| >=
     clip_rail reaches max_ratio (default 0.01) — hard-limited / hot takes.
     Rides the shared audio decode (gx_spark/audio.py quality_ratios); the
@@ -209,12 +197,7 @@ class AudioClippingBelow(ColumnMapExpectation):
     expect_audio_metadata_to_be_consistent's concern)."""
 
     metric_name = "audio.clipping_ratio"
-    count_via_violations = True
-
-    def plan(self, ctx, cfg, index):
-        cfg.kwargs.setdefault("column", cfg.kwargs.get("bytes_column", "bytes"))
-        ensure_audio_flags(ctx, cfg, quality=_quality_params(cfg))
-        return super().plan(ctx, cfg, index)
+    shared = staticmethod(_ensure_quality_flags)
 
     def unexpected_condition(self, cfg, ctx) -> Column:
         thr = float(cfg.kwargs.get("max_ratio", 0.01))
@@ -226,19 +209,14 @@ class AudioClippingBelow(ColumnMapExpectation):
 
 
 @register_expectation("expect_audio_silence_ratio_to_be_below")
-class AudioSilenceBelow(ColumnMapExpectation):
+class AudioSilenceBelow(_SharedColumnMap):
     """Unexpected when the fraction of frame_ms frames with frame power
     below silence_dbfs reaches max_ratio (default 0.5) — mostly-silent or
     dead-air clips.  Same shared decode; null ratio (undecodable / shorter
     than one frame) is excluded from the denominator."""
 
     metric_name = "audio.silence_ratio"
-    count_via_violations = True
-
-    def plan(self, ctx, cfg, index):
-        cfg.kwargs.setdefault("column", cfg.kwargs.get("bytes_column", "bytes"))
-        ensure_audio_flags(ctx, cfg, quality=_quality_params(cfg))
-        return super().plan(ctx, cfg, index)
+    shared = staticmethod(_ensure_quality_flags)
 
     def unexpected_condition(self, cfg, ctx) -> Column:
         thr = float(cfg.kwargs.get("max_ratio", 0.5))
@@ -391,28 +369,19 @@ def ensure_pitch_features(
     run; the ensure_audio_flags convention).  The pitch tracker's
     decode-level params must agree across pitch expectations in one suite
     — band thresholds (min/max) are per-expectation and free to differ."""
-    k = cfg.kwargs
-    bcol = k.get("bytes_column", "bytes")
-    ccol = k.get("codec_column", "codec")
-    require_columns(ctx, bcol, ccol)
-    params = _pitch_params(cfg)
-    have = getattr(ctx, "_pitch_params", None)
-    if _PITCH_COL in ctx.derived:
-        if have != params:
-            raise ValueError(
-                "conflicting pitch decode params in one suite: "
-                f"{have} vs {params}")
-        return
-    from ..audio_ops import _row_udf, compute_pitch_row
+    from ..audio_ops import compute_pitch_row
 
-    ctx.derived[_PITCH_COL] = _row_udf(
-        "voiced_frac double, f0_median_hz double, periodicity_mean double",
-        partial(compute_pitch_row, **params))(F.col(bcol), F.col(ccol))
-    ctx._pitch_params = params
+    params = _pitch_params(cfg)
+    _shared_udf_column(
+        ctx, _PITCH_COL, _payload_cols(cfg),
+        lambda: _row_udf(
+            "voiced_frac double, f0_median_hz double, periodicity_mean double",
+            partial(compute_pitch_row, **params)),
+        params, "pitch decode params")
 
 
 @register_expectation("expect_audio_voiced_fraction_to_be_between")
-class AudioVoicedFractionBetween(ColumnMapExpectation):
+class AudioVoicedFractionBetween(_SharedColumnMap):
     """Unexpected when the fraction of voiced frames (ACF periodicity
     above voiced_threshold) falls outside [min_fraction, max_fraction] —
     the speech-vs-music/noise screen of a speech-corpus gate (a speech
@@ -423,12 +392,7 @@ class AudioVoicedFractionBetween(ColumnMapExpectation):
     fraction and are excluded (metadata/payload-size concerns)."""
 
     metric_name = "audio.voiced_fraction"
-    count_via_violations = True
-
-    def plan(self, ctx, cfg, index):
-        cfg.kwargs.setdefault("column", cfg.kwargs.get("bytes_column", "bytes"))
-        ensure_pitch_features(ctx, cfg)
-        return super().plan(ctx, cfg, index)
+    shared = staticmethod(ensure_pitch_features)
 
     def unexpected_condition(self, cfg, ctx) -> Column:
         lo = float(cfg.kwargs.get("min_fraction", 0.0))
@@ -441,7 +405,7 @@ class AudioVoicedFractionBetween(ColumnMapExpectation):
 
 
 @register_expectation("expect_audio_pitch_to_be_between")
-class AudioPitchBetween(ColumnMapExpectation):
+class AudioPitchBetween(_SharedColumnMap):
     """Unexpected when the clip's median F0 over voiced frames falls
     outside [min_hz, max_hz] — the speaker-band gate (adult speech sits
     ~85-255 Hz; a corpus labeled 'adult speech' with 450 Hz medians is
@@ -451,12 +415,7 @@ class AudioPitchBetween(ColumnMapExpectation):
     expectation's single decode."""
 
     metric_name = "audio.f0_median"
-    count_via_violations = True
-
-    def plan(self, ctx, cfg, index):
-        cfg.kwargs.setdefault("column", cfg.kwargs.get("bytes_column", "bytes"))
-        ensure_pitch_features(ctx, cfg)
-        return super().plan(ctx, cfg, index)
+    shared = staticmethod(ensure_pitch_features)
 
     def unexpected_condition(self, cfg, ctx) -> Column:
         lo = float(cfg.kwargs.get("min_hz", 0.0))
@@ -481,30 +440,22 @@ def ensure_loudness_features(
     """Register the shared `__loudness` column (one K-weighted decode per
     run; the ensure_audio_flags convention).  Block/hop sizes must agree
     across loudness expectations in one suite."""
+    from ..audio_ops import compute_loudness_row
+
     k = cfg.kwargs
-    bcol = k.get("bytes_column", "bytes")
-    ccol = k.get("codec_column", "codec")
-    require_columns(ctx, bcol, ccol)
     params = dict(block_ms=int(k.get("block_ms", 400)),
                   hop_ms=int(k.get("hop_ms", 100)))
-    have = getattr(ctx, "_loudness_params", None)
-    if _LOUDNESS_COL in ctx.derived:
-        if have != params:
-            raise ValueError(
-                "conflicting loudness block params in one suite: "
-                f"{have} vs {params}")
-        return
-    from ..audio_ops import _row_udf, compute_loudness_row
-
-    ctx.derived[_LOUDNESS_COL] = _row_udf(
-        "lufs_integrated double, lufs_momentary_max double, "
-        "gated_block_frac double",
-        partial(compute_loudness_row, **params))(F.col(bcol), F.col(ccol))
-    ctx._loudness_params = params
+    _shared_udf_column(
+        ctx, _LOUDNESS_COL, _payload_cols(cfg),
+        lambda: _row_udf(
+            "lufs_integrated double, lufs_momentary_max double, "
+            "gated_block_frac double",
+            partial(compute_loudness_row, **params)),
+        params, "loudness block params")
 
 
 @register_expectation("expect_audio_loudness_to_be_between")
-class AudioLoudnessBetween(ColumnMapExpectation):
+class AudioLoudnessBetween(_SharedColumnMap):
     """Unexpected when the clip's integrated programme loudness
     (ITU-R BS.1770-4: K-weighted, absolute -70 LUFS + relative -10 LU
     gated) falls outside [min_lufs, max_lufs] — the level-QA gate of an
@@ -516,12 +467,7 @@ class AudioLoudnessBetween(ColumnMapExpectation):
     excluded (metadata/payload-size concerns)."""
 
     metric_name = "audio.lufs_integrated"
-    count_via_violations = True
-
-    def plan(self, ctx, cfg, index):
-        cfg.kwargs.setdefault("column", cfg.kwargs.get("bytes_column", "bytes"))
-        ensure_loudness_features(ctx, cfg)
-        return super().plan(ctx, cfg, index)
+    shared = staticmethod(ensure_loudness_features)
 
     def unexpected_condition(self, cfg, ctx) -> Column:
         lo = float(cfg.kwargs.get("min_lufs", -70.0))
@@ -638,28 +584,19 @@ def ensure_electrical_features(
     run; the ensure_audio_flags convention).  Probe-level params (mains
     grids, harmonic count) must agree across the suite — thresholds are
     per-expectation."""
-    k = cfg.kwargs
-    bcol = k.get("bytes_column", "bytes")
-    ccol = k.get("codec_column", "codec")
-    require_columns(ctx, bcol, ccol)
-    params = _electrical_params(cfg)
-    have = getattr(ctx, "_electrical_params", None)
-    if _ELECTRICAL_COL in ctx.derived:
-        if have != params:
-            raise ValueError(
-                "conflicting electrical probe params in one suite: "
-                f"{have} vs {params}")
-        return
-    from ..audio_ops import _row_udf, compute_electrical_row
+    from ..audio_ops import compute_electrical_row
 
-    ctx.derived[_ELECTRICAL_COL] = _row_udf(
-        "dc_frac double, hum_ratio double, hum_base_hz double",
-        partial(compute_electrical_row, **params))(F.col(bcol), F.col(ccol))
-    ctx._electrical_params = params
+    params = _electrical_params(cfg)
+    _shared_udf_column(
+        ctx, _ELECTRICAL_COL, _payload_cols(cfg),
+        lambda: _row_udf(
+            "dc_frac double, hum_ratio double, hum_base_hz double",
+            partial(compute_electrical_row, **params)),
+        params, "electrical probe params")
 
 
 @register_expectation("expect_audio_dc_offset_to_be_below")
-class AudioDcOffsetBelow(ColumnMapExpectation):
+class AudioDcOffsetBelow(_SharedColumnMap):
     """Unexpected when |mean sample value| / 32768 reaches max_frac
     (default 0.02) — a miswired ADC or missing high-pass leaves a
     constant offset that wastes headroom and biases every energy-based
@@ -668,13 +605,7 @@ class AudioDcOffsetBelow(ColumnMapExpectation):
     offset and are excluded (metadata concerns)."""
 
     metric_name = "audio.dc_offset"
-    count_via_violations = True
-
-    def plan(self, ctx, cfg, index):
-        cfg.kwargs.setdefault(
-            "column", cfg.kwargs.get("bytes_column", "bytes"))
-        ensure_electrical_features(ctx, cfg)
-        return super().plan(ctx, cfg, index)
+    shared = staticmethod(ensure_electrical_features)
 
     def unexpected_condition(self, cfg, ctx) -> Column:
         thr = float(cfg.kwargs.get("max_frac", 0.02))
@@ -686,7 +617,7 @@ class AudioDcOffsetBelow(ColumnMapExpectation):
 
 
 @register_expectation("expect_audio_hum_ratio_to_be_below")
-class AudioHumRatioBelow(ColumnMapExpectation):
+class AudioHumRatioBelow(_SharedColumnMap):
     """Unexpected when mains-hum power (the 50/60 Hz grids and their
     first harmonics, max over grids) reaches max_ratio (default 0.01)
     of the clip's AC power — ground loops and induced interference in
@@ -695,13 +626,7 @@ class AudioHumRatioBelow(ColumnMapExpectation):
     silent clips have a null ratio and are excluded."""
 
     metric_name = "audio.hum_ratio"
-    count_via_violations = True
-
-    def plan(self, ctx, cfg, index):
-        cfg.kwargs.setdefault(
-            "column", cfg.kwargs.get("bytes_column", "bytes"))
-        ensure_electrical_features(ctx, cfg)
-        return super().plan(ctx, cfg, index)
+    shared = staticmethod(ensure_electrical_features)
 
     def unexpected_condition(self, cfg, ctx) -> Column:
         thr = float(cfg.kwargs.get("max_ratio", 0.01))
@@ -726,28 +651,17 @@ def ensure_click_features(
     count from the declick detector (audio_ops.declick_pcm, detection
     only — nothing is re-encoded here), one decode per run.  The
     detector threshold must agree across the suite."""
-    k = cfg.kwargs
-    bcol = k.get("bytes_column", "bytes")
-    ccol = k.get("codec_column", "codec")
-    require_columns(ctx, bcol, ccol)
-    thr = float(k.get("thr_frac", 0.2))
-    have = getattr(ctx, "_click_thr", None)
-    if _CLICK_COL in ctx.derived:
-        if have != thr:
-            raise ValueError(
-                "conflicting click-detector thr_frac in one suite: "
-                f"{have} vs {thr}")
-        return
-    from ..audio_ops import _click_count_row, _row_udf
+    from ..audio_ops import _click_count_row
 
-    ctx.derived[_CLICK_COL] = _row_udf(
-        "bigint", partial(_click_count_row, thr_frac=thr))(
-            F.col(bcol), F.col(ccol))
-    ctx._click_thr = thr
+    thr = float(cfg.kwargs.get("thr_frac", 0.2))
+    _shared_udf_column(
+        ctx, _CLICK_COL, _payload_cols(cfg),
+        lambda: _row_udf("bigint", partial(_click_count_row, thr_frac=thr)),
+        thr, "click-detector thr_frac")
 
 
 @register_expectation("expect_audio_click_count_to_be_below")
-class AudioClickCountBelow(ColumnMapExpectation):
+class AudioClickCountBelow(_SharedColumnMap):
     """Unexpected when the clip's isolated-impulse count (samples whose
     residual against the robust 5-point running median exceeds
     thr_frac of full scale — vinyl ticks, packet glitches, sensor
@@ -757,13 +671,7 @@ class AudioClickCountBelow(ColumnMapExpectation):
     have a null count and are excluded (metadata concerns)."""
 
     metric_name = "audio.click_count"
-    count_via_violations = True
-
-    def plan(self, ctx, cfg, index):
-        cfg.kwargs.setdefault(
-            "column", cfg.kwargs.get("bytes_column", "bytes"))
-        ensure_click_features(ctx, cfg)
-        return super().plan(ctx, cfg, index)
+    shared = staticmethod(ensure_click_features)
 
     def unexpected_condition(self, cfg, ctx) -> Column:
         thr = int(cfg.kwargs.get("max_clicks", 1))

@@ -56,6 +56,28 @@ def require_columns(ctx: MetricContext, *cols: str) -> None:
         raise MissingColumnError(f"column(s) not found in batch: {missing}")
 
 
+def _shared_udf_column(ctx: MetricContext, name: str, cols, build,
+                       params: Any = None, what: str = "") -> None:
+    """Register derived column ``name`` = ``build()(*cols)`` once per run,
+    so every expectation reading it shares one UDF evaluation (one
+    decode).  A request without params is served by whatever column is
+    registered.  One with params must agree with the params registered
+    before it (``ValueError: conflicting <what> in one suite``), and
+    replaces a column registered without params — plan() runs for every
+    expectation before execution, so the richest request wins."""
+    require_columns(ctx, *cols)
+    if name in ctx.derived and params is None:
+        return
+    have = ctx.derived_params.get(name)
+    if have is not None:
+        if have != params:
+            raise ValueError(
+                f"conflicting {what} in one suite: {have} vs {params}")
+        return
+    ctx.derived[name] = build()(*[F.col(c) for c in cols])
+    ctx.derived_params[name] = params
+
+
 class ColumnMapExpectation:
     """Per-row predicate over one column.  Subclasses define the condition
     under which a (non-null) value is UNEXPECTED."""
@@ -142,6 +164,23 @@ class ColumnMapExpectation:
             return ExpectationValidationResult(success=success, expectation_config=cfg, result=result)
 
         return finalize
+
+
+class _SharedColumnMap(ColumnMapExpectation):
+    """A map expectation whose condition reads a shared derived column
+    (the decode-backed audio / image / video checks).  plan() targets the
+    column named by the ``target`` kwarg (with its default) and registers
+    the shared column with ``shared(ctx, cfg)``; the unexpected count
+    comes from the violations pass, so the decode runs once per run."""
+
+    count_via_violations = True
+    target = ("bytes_column", "bytes")
+    shared: Callable[[MetricContext, ExpectationConfiguration], None]
+
+    def plan(self, ctx: MetricContext, cfg: ExpectationConfiguration, index: int) -> Finalizer:
+        cfg.kwargs.setdefault("column", cfg.kwargs.get(*self.target))
+        self.shared(ctx, cfg)
+        return super().plan(ctx, cfg, index)
 
 
 class ColumnAggregateExpectation:

@@ -1,55 +1,48 @@
 """Image payload expectations (multimodal extension alongside the audio
 layer; same execution design as expectations/audio_exp.py).
 
-Both expectations share ONE derived `__image` struct column produced by the
-Arrow-batched pandas UDF (gx_spark/image.py) and are `count_via_violations`:
-unexpected counts come from the fused violations pass, so decode (and the
-binary column's Arrow transfer to Python) happens exactly once per run,
-map-side, and the stage-1 agg never reads the bytes."""
+Both image expectations share ONE derived `__image` struct column and the
+video expectation reads `__video`; each is built once per run by one row
+UDF (gx_spark/row_udf.py) and registered by base._shared_udf_column.  All
+are `count_via_violations`: unexpected counts come from the fused
+violations pass, so decode (and the binary column's Arrow transfer to
+Python) happens exactly once per run, map-side, and the stage-1 agg never
+reads the bytes.  A struct the driver nulled (its flags row raised) is
+unexpected: a row that cannot be checked fails."""
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..image import make_image_flags_udf
+from ..image import VIDEO_FORMATS, make_image_flags_udf, make_video_flags_udf
 from ..model import ExpectationConfiguration
 from ..planner import MetricContext
 from ..registry import register_expectation
-from .base import ColumnMapExpectation, require_columns
+from .base import _SharedColumnMap, _shared_udf_column
 
 _IMAGE_COL = "__image"
 
 
 def ensure_image_flags(ctx: MetricContext, cfg: ExpectationConfiguration) -> None:
     k = cfg.kwargs
-    cols = dict(
-        bytes=k.get("bytes_column", "bytes"),
-        width=k.get("width_column", "width"),
-        height=k.get("height_column", "height"),
-        channels=k.get("channels_column", "channels"),
-        format=k.get("format_column", "format"),
+    cols = (
+        k.get("bytes_column", "bytes"),
+        k.get("width_column", "width"),
+        k.get("height_column", "height"),
+        k.get("channels_column", "channels"),
+        k.get("format_column", "format"),
     )
-    require_columns(ctx, *cols.values())
-    udf = make_image_flags_udf()
-    ctx.derived_column(
-        _IMAGE_COL,
-        udf(*[F.col(c) for c in cols.values()]),
-    )
+    _shared_udf_column(ctx, _IMAGE_COL, cols, make_image_flags_udf)
 
 
 @register_expectation("expect_image_metadata_to_be_consistent")
-class ImageMetadataConsistent(ColumnMapExpectation):
+class ImageMetadataConsistent(_SharedColumnMap):
     """Unexpected when the payload fails to decode or its decoded dimensions
     disagree with the (width, height, channels) metadata columns."""
 
     metric_name = "image.metadata_consistent"
-    count_via_violations = True
-
-    def plan(self, ctx, cfg, index):
-        cfg.kwargs.setdefault("column", cfg.kwargs.get("bytes_column", "bytes"))
-        ensure_image_flags(ctx, cfg)
-        return super().plan(ctx, cfg, index)
+    shared = staticmethod(ensure_image_flags)
 
     def unexpected_condition(self, cfg, ctx) -> Column:
         a = F.col(_IMAGE_COL)
@@ -59,12 +52,14 @@ class ImageMetadataConsistent(ColumnMapExpectation):
         # excluded — a valid stream must not be called corrupt just
         # because we cannot decode its pixels — but header dims, when the
         # scan recovered them, still verify the metadata columns.  Rows
-        # with decodable NULL and no header info are unverifiable and
-        # excluded entirely (counted in the denominator, never flagged).
+        # with decodable NULL and no header info could not be checked at
+        # all (the driver nulled the struct because the flags row raised;
+        # no in-sandbox format leaves a stub without a header scan): they
+        # fail closed.
         ok = (F.coalesce(a["decodable"], F.lit(True))
               & F.coalesce(a["dims_ok"], F.lit(True)))
-        verifiable = a["decodable"].isNotNull() | a["dims_ok"].isNotNull()
-        return verifiable & ~F.coalesce(ok, F.lit(False))
+        unchecked = a["decodable"].isNull() & a["dims_ok"].isNull()
+        return unchecked | ~F.coalesce(ok, F.lit(False))
 
     def observed_expr(self, cfg) -> Column:
         a = F.col(_IMAGE_COL)
@@ -76,18 +71,13 @@ class ImageMetadataConsistent(ColumnMapExpectation):
 
 
 @register_expectation("expect_image_mean_intensity_to_be_between")
-class ImageMeanIntensity(ColumnMapExpectation):
+class ImageMeanIntensity(_SharedColumnMap):
     """Unexpected when the decoded mean channel intensity falls outside
     [min_value, max_value] (undecodable payloads are not counted here —
     pair with expect_image_metadata_to_be_consistent)."""
 
     metric_name = "image.mean_intensity"
-    count_via_violations = True
-
-    def plan(self, ctx, cfg, index):
-        cfg.kwargs.setdefault("column", cfg.kwargs.get("bytes_column", "bytes"))
-        ensure_image_flags(ctx, cfg)
-        return super().plan(ctx, cfg, index)
+    shared = staticmethod(ensure_image_flags)
 
     def unexpected_condition(self, cfg, ctx) -> Column:
         a = F.col(_IMAGE_COL)
@@ -110,24 +100,20 @@ _VIDEO_COL = "__video"
 
 
 def ensure_video_flags(ctx: MetricContext, cfg: ExpectationConfiguration) -> None:
-    from ..image import make_video_flags_udf
-
     k = cfg.kwargs
-    cols = dict(
-        bytes=k.get("bytes_column", "bytes"),
-        n_frames=k.get("n_frames_column", "n_frames"),
-        fps=k.get("fps_column", "fps"),
-        width=k.get("width_column", "width"),
-        height=k.get("height_column", "height"),
-        format=k.get("format_column", "format"),
+    cols = (
+        k.get("bytes_column", "bytes"),
+        k.get("n_frames_column", "n_frames"),
+        k.get("fps_column", "fps"),
+        k.get("width_column", "width"),
+        k.get("height_column", "height"),
+        k.get("format_column", "format"),
     )
-    require_columns(ctx, *cols.values())
-    udf = make_video_flags_udf()
-    ctx.derived_column(_VIDEO_COL, udf(*[F.col(c) for c in cols.values()]))
+    _shared_udf_column(ctx, _VIDEO_COL, cols, make_video_flags_udf)
 
 
 @register_expectation("expect_video_metadata_to_be_consistent")
-class VideoMetadataConsistent(ColumnMapExpectation):
+class VideoMetadataConsistent(_SharedColumnMap):
     """Unexpected when the video payload's CONTAINER contradicts its
     metadata columns: MP4 rows get a real ISO-BMFF demux (box structure,
     mvhd duration vs n_frames/fps, tkhd dims vs width/height —
@@ -138,18 +124,19 @@ class VideoMetadataConsistent(ColumnMapExpectation):
     Unknown formats are excluded from the check, not blindly passed."""
 
     metric_name = "video.metadata_consistent"
-    count_via_violations = True
-
-    def plan(self, ctx, cfg, index):
-        cfg.kwargs.setdefault("column", cfg.kwargs.get("bytes_column", "bytes"))
-        ensure_video_flags(ctx, cfg)
-        return super().plan(ctx, cfg, index)
+    shared = staticmethod(ensure_video_flags)
 
     def unexpected_condition(self, cfg, ctx) -> Column:
         a = F.col(_VIDEO_COL)
         ok = (a["decodable"] & F.coalesce(a["dur_ok"], F.lit(True))
               & F.coalesce(a["dims_ok"], F.lit(True)))
-        return a["decodable"].isNotNull() & ~F.coalesce(ok, F.lit(False))
+        # decodable NULL is an unknown format (excluded) or, for a format
+        # the flags verify, a struct the driver nulled because the flags
+        # row raised: that fails closed
+        fmt = F.col(cfg.kwargs.get("format_column", "format"))
+        unchecked = a["decodable"].isNull() & fmt.isin(*VIDEO_FORMATS)
+        return unchecked | (a["decodable"].isNotNull()
+                            & ~F.coalesce(ok, F.lit(False)))
 
     def observed_expr(self, cfg) -> Column:
         a = F.col(_VIDEO_COL)

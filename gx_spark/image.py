@@ -3,9 +3,10 @@
 Mirrors the audio layer's design (gx_spark/audio.py) for the other two
 modalities the pipeline brief names: images and video travel as `binary`
 columns with metadata columns beside them; decode / feature-extract /
-resize / frame-sample run as Arrow-batched pandas UDFs / mapInPandas so
-the Spark-side plumbing (schema, partitioning, UDF signature, batch
-shape) is real and tested even where codecs are stubbed.
+resize run as Arrow-batched pandas UDFs on the shared row-UDF driver
+(gx_spark/row_udf.py) and frame-sample as mapInPandas, so the Spark-side
+plumbing (schema, partitioning, UDF signature, batch shape) is real and
+tested even where codecs are stubbed.
 
 Codec support in-sandbox: a deterministic raw-RGB container (`gxraw`,
 magic + dims header + uint8 pixels) decodes with numpy, and PNG decodes
@@ -26,10 +27,13 @@ Schema conventions:
 from __future__ import annotations
 
 import struct
+from functools import partial
 
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .row_udf import _num, _row_udf
 
 _MAGIC = b"GXIM"
 _HDR = "<4sHHB"  # magic, width, height, channels
@@ -131,7 +135,7 @@ def compute_image_flags_row(b, width, height, channels, fmt):
             out["dims_ok"] = ((w == width) and (h == height)
                               and (nc == channels))
         else:
-            out["decodable"] = None  # unverifiable stub: no header scan
+            out["decodable"] = None  # stub: the metadata check fails it closed
         return out
     h, w, c = px.shape
     out["decodable"] = True
@@ -145,71 +149,50 @@ def compute_image_flags_row(b, width, height, channels, fmt):
     return out
 
 
+def _image_flags_row(b, width, height, channels, fmt):
+    # a null metadata cell reads as 0: the row is unexpected, not an error
+    return compute_image_flags_row(b, _num(width), _num(height),
+                                   _num(channels), fmt)
+
+
 def make_image_flags_udf():
     """Arrow-batched pandas UDF: (bytes, width, height, channels, format)
     -> flags struct.  Built lazily (no Spark session needed at import)."""
-    import os
-
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-    @pandas_udf(IMAGE_FLAGS_SCHEMA)
-    def image_flags(b, width, height, channels, fmt):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.image import compute_image_flags_row as _cfr
-
-        cols = {k: [] for k in ("decodable", "header_w", "header_h",
-                                "dims_ok", "mean_r", "mean_g", "mean_b")}
-        for bb, w, h, c, f in zip(b, width, height, channels, fmt):
-            r = _cfr(bb, int(w) if w is not None else 0,
-                     int(h) if h is not None else 0,
-                     int(c) if c is not None else 0, f)
-            for k in cols:
-                cols[k].append(r[k])
-        return pd.DataFrame(cols)
-
-    return image_flags
+    return _row_udf(IMAGE_FLAGS_SCHEMA, _image_flags_row)
 
 
 # ---------------------------------------------------------------------------
 # transforms: resize / perceptual fingerprint / video frame-sample
 # ---------------------------------------------------------------------------
 
+def _resize_row(b, fmt, *, out_w, out_h):
+    px = decode_image(bytes(b), fmt)
+    h, w, _ = px.shape
+    yi = (np.arange(out_h) * h // out_h)
+    xi = (np.arange(out_w) * w // out_w)
+    return raw_encode(px[yi[:, None], xi[None, :], :])
+
+
 def resize_images(
     df: DataFrame, out_w: int, out_h: int,
     id_col: str = "img_id", bytes_col: str = "bytes", fmt_col: str = "format",
 ) -> DataFrame:
     """Nearest-neighbour resize of decodable payloads (numpy fancy-indexing
-    per image inside mapInPandas; non-decodable rows pass through with null
+    per image inside a row UDF; non-decodable rows pass through with null
     bytes).  Output schema: (id, bytes binary [gxraw at out_w x out_h])."""
-    import pandas as pd
+    udf = _row_udf("binary", partial(_resize_row, out_w=out_w, out_h=out_h))
+    return df.select(F.col(id_col).cast("string").alias("id"),
+                     udf(bytes_col, fmt_col).alias("bytes"))
 
-    schema = "id string, bytes binary"
 
-    def gen(batches):
-        from gx_spark.image import decode_image, raw_encode
-
-        for pdf in batches:
-            ids, outs = [], []
-            for i, b, f in zip(pdf[id_col], pdf[bytes_col], pdf[fmt_col]):
-                ids.append(i)
-                try:
-                    px = decode_image(bytes(b), f)
-                except (NotImplementedError, ValueError, TypeError):
-                    outs.append(None)
-                    continue
-                h, w, _ = px.shape
-                yi = (np.arange(out_h) * h // out_h)
-                xi = (np.arange(out_w) * w // out_w)
-                outs.append(raw_encode(px[yi[:, None], xi[None, :], :]))
-            yield pd.DataFrame({"id": ids, "bytes": outs})
-
-    return df.mapInPandas(gen, schema)
+def _phash_row(b, fmt):
+    gray = decode_image(bytes(b), fmt).mean(axis=2)
+    h, w = gray.shape
+    yi = (np.arange(8) * h // 8)
+    xi = (np.arange(8) * w // 8)
+    cells = gray[yi[:, None], xi[None, :]]
+    bits = (cells > cells.mean()).flatten()[:63]
+    return int((bits * (1 << np.arange(63, dtype=np.uint64))).sum())
 
 
 def image_phash64(
@@ -221,32 +204,9 @@ def image_phash64(
     long).  Near-duplicate images (resizes, small edits) collide or sit at
     small Hamming distance — the image-side analogue of simhash64.
     Map-side only; null for undecodable payloads."""
-    import pandas as pd
-
-    schema = "id string, phash long"
-
-    def gen(batches):
-        from gx_spark.image import decode_image
-
-        for pdf in batches:
-            ids, hashes = [], []
-            for i, b, f in zip(pdf[id_col], pdf[bytes_col], pdf[fmt_col]):
-                ids.append(i)
-                try:
-                    px = decode_image(bytes(b), f)
-                except (NotImplementedError, ValueError, TypeError):
-                    hashes.append(None)
-                    continue
-                gray = px.mean(axis=2)
-                h, w = gray.shape
-                yi = (np.arange(8) * h // 8)
-                xi = (np.arange(8) * w // 8)
-                cells = gray[yi[:, None], xi[None, :]]
-                bits = (cells > cells.mean()).flatten()[:63]
-                hashes.append(int((bits * (1 << np.arange(63, dtype=np.uint64))).sum()))
-            yield pd.DataFrame({"id": ids, "phash": hashes})
-
-    return df.mapInPandas(gen, schema)
+    return df.select(F.col(id_col).cast("string").alias("id"),
+                     _row_udf("bigint", _phash_row)(bytes_col, fmt_col)
+                     .alias("phash"))
 
 
 def sample_video_frames(
@@ -289,6 +249,9 @@ VIDEO_FLAGS_SCHEMA = (
     "decodable boolean, dur_ok boolean, dims_ok boolean, "
     "container_dur_ms int, container_w int, container_h int"
 )
+
+# the formats compute_video_flags_row verifies (any other is excluded)
+VIDEO_FORMATS = ("mp4", "h264", "gxraw_frames", "gxraw")
 
 
 def compute_video_flags_row(
@@ -367,34 +330,13 @@ def compute_video_flags_row(
     return out
 
 
+def _video_flags_row(b, n_frames, fps, width, height, fmt):
+    # a null metadata cell reads as 0: the row is unexpected, not an error
+    return compute_video_flags_row(b, _num(n_frames), _num(fps, float),
+                                   _num(width), _num(height), fmt)
+
+
 def make_video_flags_udf():
     """Arrow-batched pandas UDF: (bytes, n_frames, fps, width, height,
     format) -> video flags struct."""
-    import os
-
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    keys = ("decodable", "dur_ok", "dims_ok", "container_dur_ms",
-            "container_w", "container_h")
-
-    @pandas_udf(VIDEO_FLAGS_SCHEMA)
-    def video_flags(b, n_frames, fps, width, height, fmt):
-        import sys
-
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        from gx_spark.image import compute_video_flags_row as _cvr
-
-        cols = {k: [] for k in keys}
-        for bb, nf, fr, w, h, f in zip(b, n_frames, fps, width, height, fmt):
-            r = _cvr(bb, int(nf) if nf is not None else 0,
-                     float(fr) if fr is not None else 0.0,
-                     int(w) if w is not None else 0,
-                     int(h) if h is not None else 0, f)
-            for k in keys:
-                cols[k].append(r[k])
-        return pd.DataFrame(cols)
-
-    return video_flags
+    return _row_udf(VIDEO_FLAGS_SCHEMA, _video_flags_row)

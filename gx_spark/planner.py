@@ -129,6 +129,9 @@ class MetricContext:
         # violations pass, so expensive per-row work (binary decode) happens
         # exactly once per pass, map-side, and never enters a shuffle.
         self.derived: dict[str, Column] = {}
+        # the decode-level params each derived column was built with (the
+        # expectations sharing it must agree on them)
+        self.derived_params: dict[str, Any] = {}
 
     # ---- domain handling -------------------------------------------------
 
@@ -174,10 +177,6 @@ class MetricContext:
     def add_violation(self, spec: ViolationSpec) -> None:
         if self.options.collect_violations:
             self.violations.append(spec)
-
-    def derived_column(self, name: str, col: Column) -> None:
-        if name not in self.derived:
-            self.derived[name] = col
 
     def base_df(self) -> DataFrame:
         df = self.df

@@ -286,6 +286,40 @@ def test_augment_pipeline_reverb_then_noise_matches_chain_on_silence(spark):
             == sorted(chained.drop("reverb_wet_db").collect()))
 
 
+def test_null_sr_and_dur_rows_are_unexpected_not_errors(spark):
+    """pandas hands a null int column to the flags UDF as NaN: a null
+    sr_hz or dur_ms must make that row metadata-unexpected, not fail the
+    batch (and with it every audio expectation in the suite), and must
+    not null the struct (which would flag a correct transcript)."""
+    from gx_spark import EngineOptions, validate
+    from gx_spark.suites import audio_suite
+
+    def run(rows):
+        b = validate(spark, spark.createDataFrame(rows, SCHEMA),
+                     audio_suite(),
+                     EngineOptions(unexpected_index_column_names=("idx",)))
+        res = {r.expectation_config.expectation_type: r
+               for r in b.suite_result.results}
+        meta = {int(r["idx"]) for r in b.violations_table().where(
+            "expectation_type = 'expect_audio_metadata_to_be_consistent'"
+        ).collect()}
+        b.unpersist()
+        return res, meta
+
+    rows = golden_rows()
+    nulled = [r[:3] + (None,) + r[4:] if r[0] == 0 else
+              r[:4] + (None,) + r[5:] if r[0] == 1 else r for r in rows]
+    base, base_meta = run(rows)
+    res, meta = run(nulled)
+    raised = [t for t, r in res.items()
+              if r.exception_info.get("raised_exception")]
+    assert not raised, raised
+    assert not {0, 1} & base_meta and meta == base_meta | {0, 1}, meta
+    tm = "expect_transcript_to_match_reference"
+    assert (res[tm].result["unexpected_count"]
+            == base[tm].result["unexpected_count"])
+
+
 if __name__ == "__main__":
     from pyspark.sql import SparkSession
 

@@ -333,6 +333,103 @@ def test_progressive_jpeg_end_to_end(spark):
     assert bad == {"lying_prog", "garbage"}
 
 
+def test_null_metadata_rows_are_unexpected_not_errors(spark):
+    """pandas hands a null int column to the flags UDFs as NaN: a null
+    width (image) or n_frames (video) must make that row unexpected, not
+    fail the batch and with it every expectation reading the struct."""
+    rows = [r if i else r[:2] + (None,) + r[3:]
+            for i, r in enumerate(_image_df(spark, 20).collect())]
+    df = spark.createDataFrame(rows, _image_df(spark, 1).schema)
+    b = validate(spark, df, ExpectationSuite("img")
+                 .add("expect_image_metadata_to_be_consistent")
+                 .add("expect_image_mean_intensity_to_be_between",
+                      min_value=0.0, max_value=255.0),
+                 EngineOptions(unexpected_index_column_names=("img_id",)))
+    r_meta, r_mean = b.suite_result.results
+    assert not r_meta.exception_info.get("raised_exception")
+    assert not r_mean.exception_info.get("raised_exception")
+    viol = {r.img_id for r in b.violations_table().collect()}
+    b.unpersist()
+    assert r_mean.success
+    assert viol == {"img_00000"} | {f"img_{i:05d}" for i in range(20)
+                                    if i % 10 in (7, 9)}, viol
+
+    vrows = [r[:3] + (None,) + r[4:] if r[0] == 1 else r
+             for r in golden_videos()]
+    b = validate(spark, spark.createDataFrame(vrows, VIDEOS_SCHEMA),
+                 ExpectationSuite("video")
+                 .add("expect_video_metadata_to_be_consistent"),
+                 EngineOptions(unexpected_index_column_names=("vid_id",)))
+    (r_video,) = b.suite_result.results
+    viol = {r.vid_id for r in b.violations_table().collect()}
+    b.unpersist()
+    assert not r_video.exception_info.get("raised_exception")
+    assert "v1" in viol, viol
+
+
+def _raising_on(flags_row, pos, value):
+    """flags_row, but raising TypeError on rows whose metadata argument at
+    ``pos`` equals ``value`` (the driver then nulls that row's struct)."""
+    def row(b, *meta):
+        if meta[pos] == value:
+            raise TypeError("flags row failed")
+        return flags_row(b, *meta)
+    return row
+
+
+def test_nulled_flags_struct_fails_closed(spark, monkeypatch):
+    """A struct the driver nulled because its row function raised is
+    unexpected in the image and video metadata checks, not excluded."""
+    from gx_spark.expectations import image_exp
+    from gx_spark.row_udf import _row_udf
+
+    monkeypatch.setattr(image_exp, "make_image_flags_udf", lambda: _row_udf(
+        gim.IMAGE_FLAGS_SCHEMA, _raising_on(gim._image_flags_row, 0, 24)))
+    monkeypatch.setattr(image_exp, "make_video_flags_udf", lambda: _row_udf(
+        gim.VIDEO_FLAGS_SCHEMA, _raising_on(gim._video_flags_row, 2, 8)))
+    b = validate(spark, _image_df(spark, 20), ExpectationSuite("img")
+                 .add("expect_image_metadata_to_be_consistent"),
+                 EngineOptions(unexpected_index_column_names=("img_id",)))
+    viol = {r.img_id for r in b.violations_table().collect()}
+    b.unpersist()
+    assert viol == {f"img_{i:05d}" for i in range(20)
+                    if i % 10 in (7, 9) or i % 3 == 1}, viol
+    b = validate(spark, spark.createDataFrame(golden_videos(), VIDEOS_SCHEMA),
+                 ExpectationSuite("video")
+                 .add("expect_video_metadata_to_be_consistent"),
+                 EngineOptions(unexpected_index_column_names=("vid_id",)))
+    viol = {r.vid_id for r in b.violations_table().collect()}
+    b.unpersist()
+    # v1 (valid gxraw_frames) is nulled; v7 shares its width and already
+    # fails on frame count
+    assert "v1" in viol and "v0" not in viol, viol
+
+def test_image_ops_import_on_workers_outside_repo(tmp_path):
+    """resize_images / image_phash64 from a cwd outside the checkout, with
+    the checkout on sys.path only in the driver: the Python workers must
+    still import their row functions."""
+    import subprocess
+
+    script = f"""
+import sys
+sys.path.insert(0, {REPO!r})
+from pyspark.sql import SparkSession
+from gx_spark import image as gim
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+b = bytearray(gim.raw_encode(gim.synth_image("a", 8, 8)))
+df = spark.createDataFrame([("a", b, "gxraw")],
+                           "img_id string, bytes binary, format string")
+assert gim.image_phash64(df).collect()[0]["phash"] is not None
+assert gim.resize_images(df, 4, 4).collect()[0]["bytes"] is not None
+spark.stop()
+print("WORKERS_OK")
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    p = subprocess.run([sys.executable, "-c", script], cwd=tmp_path, env=env,
+                       capture_output=True, text=True, timeout=600)
+    assert "WORKERS_OK" in p.stdout, p.stderr[-3000:]
+
 # ---------------------------------------------------------------------------
 # golden parity: image / video flags structs, resize_images, image_phash64
 # ---------------------------------------------------------------------------

@@ -140,6 +140,9 @@ def test_image_suite_plan_shape(spark, tmp_path):
     vplan = formatted_plan(violations_df(ctx))
     assert "Exchange" not in vplan, f"violations pass must not shuffle:\n{vplan}"
     assert "ArrowEvalPython" in vplan or "EvalPython" in vplan  # decode lives here
+    # the flags UDF is named after its row function, so the check above
+    # that it is absent from stage 1 is not vacuous
+    assert "_image_flags_row" in vplan, vplan
 
 
 def test_audio_suite_over_iceberg_read_keeps_binary_off_shuffles(

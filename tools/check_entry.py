@@ -7,10 +7,12 @@ Usage: python tools/check_entry.py [sf_dir] [only_query_substr]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# this checkout's root, so a copy of the repo checks its own code
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 from pyspark.sql import SparkSession
