@@ -15,9 +15,12 @@ moved onto the shared decode/encode driver and must not move.
 
 The failure rows (null, garbage, opus, mp3) also check the one error
 contract: a payload transform emits null bytes, the ORIGINAL codec and
-null in every column it writes; a feature op emits null features.  The
-flags struct is the exception: a failure row is a validation finding
-(decodable=False), not a null, so the flags entries skip that check.
+null in every column it writes; a feature op emits null features; an
+exploding op (segment_audio) emits no row for them.  Digest-only entries
+skip that check: the flags struct reports a failure row as a validation
+finding (decodable=False), cmvn_partials as a zero partial (the merge
+identity), and downmix_audio reads only container headers, so it passes
+the opus row through.
 Decodable rows never take the failure path (except trim_silence on the
 empty clip, which has no active span to encode), so no decodable input
 reaches a kernel that raises.
@@ -113,7 +116,8 @@ def _audio_flags(quality):
 
 # name -> (op, kind): "payload" ops keep every input column and rewrite
 # bytes/codec; "features" ops drop the payload and add feature columns;
-# "flags" ops add the validation flags struct
+# "segments" ops emit zero or more rows per clip; "digest" ops are pinned
+# by their digest alone
 OPS = {
     "trim_silence": (lambda d: ao.trim_silence(d), "payload"),
     "normalize_gain": (lambda d: ao.normalize_gain(d), "payload"),
@@ -166,8 +170,15 @@ OPS = {
     "qa_features": (lambda d: ao.qa_features(d, keep_cols=["idx"]),
                     "features"),
     "gates": (_gates, "features"),
-    "audio_flags": (_audio_flags(None), "flags"),
-    "audio_flags_quality": (_audio_flags({}), "flags"),
+    "audio_flags": (_audio_flags(None), "digest"),
+    "audio_flags_quality": (_audio_flags({}), "digest"),
+    "downmix_audio": (lambda d: ao.downmix_audio(d), "digest"),
+    "segment_audio": (lambda d: ao.segment_audio(d), "segments"),
+    "specaugment": (lambda d: ao.specaugment(d, id_col="idx"), "features"),
+    "specaugment_keep": (
+        lambda d: ao.specaugment(d, id_col="idx", keep_cols=["codec", "idx"]),
+        "features"),
+    "cmvn_partials": (lambda d: ao.cmvn_partials(d), "digest"),
 }
 
 # feature columns that legitimately carry a value on a failure row: a
@@ -186,9 +197,11 @@ GOLDEN = {
     'augment_reverb_echo': '571fe9b91f1b43849c52439deaffb1e3',
     'augment_reverb_off': 'd24c64547b23fe961f9cab58208a0785',
     'channel_stats': '29916e28c169d4288e32d1c6dad7053d',
+    'cmvn_partials': '9062ea3a0109c07712525d9172c05991',
     'declick_audio': '76824eb8628010a55f8039207b9f6a98',
     'declip_audio': 'f2fe19025717f8ff385091024b573c03',
     'denoise_audio': '201e373b3f5656add709744c0032f87e',
+    'downmix_audio': 'c5e7a21586a41c23a2e2e15e82ddfc9b',
     'electrical_features': 'a5f666976a2dc4de8a5ebee6e0caa3f1',
     'extract_audio_features': '34604cef42f16c0f803afa5f82d87e30',
     'extract_audio_features_fp': 'b45f4fe119985126627184b19c87c4d6',
@@ -206,8 +219,11 @@ GOLDEN = {
     'repair_pipeline': '546ab57e4e082f7c8c9cf87509483a56',
     'repair_pipeline_denoise': '0a34dcdf42956a3886f2ec4fadb78076',
     'resample_audio': 'af879ed34cd22acd3e47c6b1951b483a',
+    'segment_audio': '23284c74cf9133e37e28938bbcba0dd9',
     'segment_stats': '5981e19487802da158d6c57f87b1b26c',
     'silence_bounds': '8c5e91262146d00944257abfec9b2e7a',
+    'specaugment': '7c905630caefa72165a3f68426f9df3b',
+    'specaugment_keep': '31032141ce43d59f8cf88e4874d4fcb7',
     'spectral_features': '30ed2860cc22ff16278950dfb96586b4',
     'speed_perturb': '7993756c78e2d2cf44b6a417456eff95',
     'tempo_stretch': '0c4d6a3a61a1825a7dbb3cb9eed72c79',
@@ -244,7 +260,9 @@ def digest(df, rows) -> str:
 def _run(spark, name):
     op, _kind = OPS[name]
     out = op(spark.createDataFrame(golden_rows(), SCHEMA))
-    rows = sorted(out.collect(), key=lambda r: r["idx"])
+    rows = out.collect()
+    if "idx" in out.columns:
+        rows.sort(key=lambda r: r["idx"])
     return out, rows
 
 
@@ -256,9 +274,11 @@ def test_golden_digest_and_error_contract(spark, name):
     in_names = [c.split(" ")[0] for c in SCHEMA.split(", ")]
     new_cols = [c for c in out.columns if c not in in_names]
     kind = OPS[name][1]
-    for r in rows:
+    for pos, r in enumerate(rows):
         d = r.asDict()
-        i = d["idx"]
+        # an op that keeps no idx column emits one row per clip in table
+        # order (map-only)
+        i = d.get("idx", pos)
         if kind == "payload":
             written = new_cols + [c for c in ("sr_hz", "dur_ms")
                                   if d[c] != src[i][in_names.index(c)]]
@@ -271,6 +291,8 @@ def test_golden_digest_and_error_contract(spark, name):
         elif kind == "features" and i in FAILURE_IDX:
             feats = [c for c in new_cols if c not in ECHOES]
             assert all(_null(d[c]) for c in feats), (name, i, d)
+        elif kind == "segments":
+            assert i not in FAILURE_IDX and d["bytes"] is not None, (name, i)
 
 
 def test_augment_pipeline_reverb_then_noise_matches_chain_on_silence(spark):
