@@ -589,8 +589,8 @@ def make_audio_flags_udf(quality: dict[str, Any] | None = None):
     struct with clipping_ratio/silence_ratio computed from the SAME decode,
     so adding quality expectations to a suite costs no extra decode pass.
 
-    Runs on the shared row-UDF driver (gx_spark/row_udf.py), which also
-    puts the repo on the workers' sys.path."""
+    Runs on the shared row-UDF driver (gx_spark/row_udf.py), which ships
+    the package to the workers once per SparkContext."""
     return _row_udf(
         AUDIO_FLAGS_SCHEMA if quality is None else AUDIO_QUALITY_FLAGS_SCHEMA,
         partial(_audio_flags_row, quality))

@@ -66,7 +66,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .audio import decode_payload
-from .row_udf import _ROW_ERRORS, _column, _on_workers, _pandas_dtype, _row_udf
+from .row_udf import (_ROW_ERRORS, _column, _pandas_dtype, _row_udf,
+                      map_in_pandas)
 
 
 # ---------------------------------------------------------------------------
@@ -109,10 +110,12 @@ def _map_payloads(
     added = list(StructType.fromDDL(stats).fields) if stats else []
     written = [(f.name, _pandas_dtype(f.dataType)) for f in
                [f for f in df.schema.fields if f.name in headers] + added]
-    return df.mapInPandas(
-        _on_workers(_payload_batches, kernels, bytes_col, codec_col, id_col,
-                    written, to_codec),
-        schema=StructType(list(df.schema.fields) + added))
+    def batches(it):
+        return _payload_batches(kernels, bytes_col, codec_col, id_col,
+                                written, to_codec, it)
+
+    return map_in_pandas(df, batches,
+                         StructType(list(df.schema.fields) + added))
 
 
 def _payload_batches(kernels, bytes_col, codec_col, id_col, written,
@@ -719,7 +722,7 @@ def segment_audio(
             pdf_out["seg_idx"] = pd.array(pdf_out["seg_idx"], dtype="Int32")
             yield pdf_out
 
-    return df.mapInPandas(_on_workers(_batches), schema=out_schema)
+    return map_in_pandas(df, _batches, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1192,6 +1195,28 @@ def mel_filterbank(
     return np.clip(np.minimum(up, down), 0.0, None)
 
 
+def _mel_power(sr: int, pcm: np.ndarray, n_mels: int, frame_ms: int,
+               hop_ms: int) -> tuple[int, np.ndarray | None]:
+    """(n_frames, (n_frames, n_mels) mel-band power) of one clip with
+    sr > 0: `frame_ms` frames every `hop_ms`, periodic-Hann windowed,
+    power spectra on the next-pow2 FFT grid pooled through the HTK
+    triangular bank — the front end of the mel and MFCC features,
+    SpecAugment and CMVN.  n_frames is 1 + floor((n - win) / hop) for
+    n >= win, else 0 with no matrix."""
+    win = max(1, sr * frame_ms // 1000)
+    hop = max(1, sr * hop_ms // 1000)
+    n = len(pcm)
+    nf = 0 if n < win else 1 + (n - win) // hop
+    if nf == 0:
+        return 0, None
+    x = pcm.astype(np.float64) / 32768.0
+    idx = np.arange(nf)[:, None] * hop + np.arange(win)[None, :]
+    hann = 0.5 - 0.5 * np.cos(2.0 * np.pi * np.arange(win) / win)
+    nfft = 1 << max(1, int(win - 1).bit_length())
+    pwr = np.abs(np.fft.rfft(x[idx] * hann, nfft, axis=1)) ** 2
+    return nf, pwr @ mel_filterbank(sr, nfft, n_mels).T
+
+
 def compute_mel_row(
     b: bytes | None,
     codec: str,
@@ -1222,20 +1247,10 @@ def compute_mel_row(
     out["n_samples"] = n
     if sr <= 0:
         return out
-    win = max(1, sr * frame_ms // 1000)
-    hop = max(1, sr * hop_ms // 1000)
-    nf = 0 if n < win else 1 + (n - win) // hop
+    nf, mel = _mel_power(sr, pcm, n_mels, frame_ms, hop_ms)
     out["n_frames"] = nf
     if nf == 0:
         return out
-    x = pcm.astype(np.float64) / 32768.0
-    idx = np.arange(nf)[:, None] * hop + np.arange(win)[None, :]
-    frames = x[idx]
-    hann = 0.5 - 0.5 * np.cos(2.0 * np.pi * np.arange(win) / win)
-    nfft = 1 << max(1, int(win - 1).bit_length())
-    pwr = np.abs(np.fft.rfft(frames * hann, nfft, axis=1)) ** 2
-    fb = mel_filterbank(sr, nfft, n_mels)
-    mel = pwr @ fb.T  # (nf, n_mels)
     mel_mean = mel.mean(axis=0)
     grand = float(mel.mean())
     if grand > 0.0:
@@ -1318,19 +1333,11 @@ def compute_mfcc_row(
     out["n_samples"] = n
     if sr <= 0:
         return out
-    win = max(1, sr * frame_ms // 1000)
-    hop = max(1, sr * hop_ms // 1000)
-    nf = 0 if n < win else 1 + (n - win) // hop
+    nf, mel = _mel_power(sr, pcm, n_mels, frame_ms, hop_ms)
     out["n_frames"] = nf
     if nf == 0:
         return out
-    x = pcm.astype(np.float64) / 32768.0
-    idx = np.arange(nf)[:, None] * hop + np.arange(win)[None, :]
-    hann = 0.5 - 0.5 * np.cos(2.0 * np.pi * np.arange(win) / win)
-    nfft = 1 << max(1, int(win - 1).bit_length())
-    pwr = np.abs(np.fft.rfft(x[idx] * hann, nfft, axis=1)) ** 2
-    fb = mel_filterbank(sr, nfft, n_mels)
-    logmel = np.log(np.maximum(pwr @ fb.T, 1e-10))
+    logmel = np.log(np.maximum(mel, 1e-10))
     cep = logmel @ dct2_ortho(n_mfcc, n_mels).T  # (nf, n_mfcc)
     means = cep.mean(axis=0)
     out["c0_mean"] = float(means[0])
@@ -2051,7 +2058,7 @@ def downmix_audio(
             pdf["n_channels_in"] = pd.array(chans, dtype="Int32")
             yield pdf
 
-    return df.mapInPandas(_on_workers(_batches), schema=out_schema)
+    return map_in_pandas(df, _batches, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -2629,11 +2636,9 @@ def pack_clips(
             yield pd.DataFrame([_flush(cur[0], cur[1], ids, mem)],
                                columns=cols)
 
-    return (
-        binned.select("_pstr", "bin", "_pkid", "_pbytes", "_pcodec",
-                      "_ptx")
-        .mapInPandas(_on_workers(_assemble), schema=out_schema)
-    )
+    return map_in_pandas(
+        binned.select("_pstr", "bin", "_pkid", "_pbytes", "_pcodec", "_ptx"),
+        _assemble, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -2779,89 +2784,53 @@ def specaugment(
       (mf*n_mels + mb*nf - mf*mb) / (nf*n_mels)
 
     Undecodable rows and clips shorter than one frame emit null
-    features.  Map-only mapInPandas — one Arrow decode, no shuffle."""
-    import zlib
-
+    features.  `keep_cols` (default none) come first, in input order.
+    Map-only, one Arrow decode, no shuffle."""
     if not (0 < n_mels and max_freq_bands * freq_masks < n_mels):
         raise ValueError("freq masks must not cover every band")
-    keeps = list(keep_cols or [])
-    # build output schema from kept input fields + the feature columns
-    from pyspark.sql.types import StructType
+    row = partial(_specaugment_row, n_mels=n_mels, frame_ms=frame_ms,
+                  hop_ms=hop_ms, time_masks=time_masks,
+                  max_time_frames=max_time_frames, freq_masks=freq_masks,
+                  max_freq_bands=max_freq_bands, floor_db=floor_db,
+                  seed=seed)
+    keep = [c for c in df.columns if c in (keep_cols or ())]
+    return _map_features(df, SPECAUG_SCHEMA, [row],
+                         (id_col, bytes_col, codec_col), bytes_col, keep)
 
-    kept_fields = [f for f in df.schema.fields if f.name in keeps]
-    feat = StructType.fromDDL(SPECAUG_SCHEMA)
-    out_schema = StructType(kept_fields + list(feat.fields))
 
-    def _batches(it):
-        from gx_spark.audio import decode_payload
-
-        for pdf in it:
-            rows = {k: [] for k in _SPECAUG_KEYS}
-            for rid, bb, cc in zip(pdf[id_col], pdf[bytes_col],
-                                   pdf[codec_col]):
-                try:
-                    sr, pcm = decode_payload(bytes(bb), cc)
-                except (ValueError, NotImplementedError, TypeError):
-                    sr, pcm = 0, None
-                nf = 0
-                if pcm is not None and sr > 0:
-                    win = max(1, sr * frame_ms // 1000)
-                    hop = max(1, sr * hop_ms // 1000)
-                    n = len(pcm)
-                    nf = 0 if n < win else 1 + (n - win) // hop
-                if nf == 0:
-                    for k in _SPECAUG_KEYS:
-                        rows[k].append(None)
-                    rows["n_mels"][-1] = int(n_mels)
-                    continue
-                x = pcm.astype(np.float64) / 32768.0
-                idx = (np.arange(nf)[:, None] * hop
-                       + np.arange(win)[None, :])
-                hann = 0.5 - 0.5 * np.cos(
-                    2.0 * np.pi * np.arange(win) / win)
-                nfft = 1 << max(1, int(win - 1).bit_length())
-                pwr = np.abs(np.fft.rfft(x[idx] * hann, nfft,
-                                         axis=1)) ** 2
-                fb = mel_filterbank(sr, nfft, n_mels)
-                mel = 10.0 * np.log10(np.maximum(pwr @ fb.T, 1e-10))
-                rng = np.random.default_rng(
-                    zlib.crc32(f"{seed}:{rid}".encode("utf-8")))
-                trows: set[int] = set()
-                for _ in range(int(time_masks)):
-                    wlen = int(rng.integers(0, max_time_frames + 1))
-                    start = int(rng.integers(0, max(1, nf - wlen + 1)))
-                    wlen = min(wlen, nf - start)
-                    mel[start:start + wlen, :] = floor_db
-                    trows.update(range(start, start + wlen))
-                bcols: set[int] = set()
-                for _ in range(int(freq_masks)):
-                    wlen = int(rng.integers(0, max_freq_bands + 1))
-                    start = int(rng.integers(
-                        0, max(1, n_mels - wlen + 1)))
-                    wlen = min(wlen, n_mels - start)
-                    mel[:, start:start + wlen] = floor_db
-                    bcols.update(range(start, start + wlen))
-                mf, mb = len(trows), len(bcols)
-                rows["n_frames"].append(int(nf))
-                rows["n_mels"].append(int(n_mels))
-                rows["masked_frames"].append(mf)
-                rows["masked_bands"].append(mb)
-                rows["masked_cell_frac"].append(
-                    (mf * n_mels + mb * nf - mf * mb)
-                    / float(nf * n_mels))
-                rows["logmel"].append([list(r) for r in mel])
-            out = pdf[keeps].copy() if keeps else pd.DataFrame(
-                index=pdf.index)
-            for k in _SPECAUG_KEYS:
-                out[k] = rows[k]
-            yield out
-
-    sel = list(keeps)
-    for c in (id_col, bytes_col, codec_col):
-        if c not in sel:
-            sel.append(c)
-    return df.select(*sel).mapInPandas(_on_workers(_batches),
-                                       schema=out_schema)
+def _specaugment_row(rid, b, codec, *, n_mels, frame_ms, hop_ms,
+                     time_masks, max_time_frames, freq_masks,
+                     max_freq_bands, floor_db, seed):
+    out: dict[str, Any] = dict.fromkeys(_SPECAUG_KEYS)
+    out["n_mels"] = int(n_mels)
+    dec = _decode(b, codec)
+    if dec is None or dec[0] <= 0:
+        return out
+    nf, mel = _mel_power(*dec, n_mels, frame_ms, hop_ms)
+    if nf == 0:
+        return out
+    mel = 10.0 * np.log10(np.maximum(mel, 1e-10))
+    rng = np.random.default_rng(zlib.crc32(f"{seed}:{rid}".encode("utf-8")))
+    trows: set[int] = set()
+    for _ in range(int(time_masks)):
+        wlen = int(rng.integers(0, max_time_frames + 1))
+        start = int(rng.integers(0, max(1, nf - wlen + 1)))
+        wlen = min(wlen, nf - start)
+        mel[start:start + wlen, :] = floor_db
+        trows.update(range(start, start + wlen))
+    bcols: set[int] = set()
+    for _ in range(int(freq_masks)):
+        wlen = int(rng.integers(0, max_freq_bands + 1))
+        start = int(rng.integers(0, max(1, n_mels - wlen + 1)))
+        wlen = min(wlen, n_mels - start)
+        mel[:, start:start + wlen] = floor_db
+        bcols.update(range(start, start + wlen))
+    mf, mb = len(trows), len(bcols)
+    out.update(n_frames=int(nf), masked_frames=mf, masked_bands=mb,
+               masked_cell_frac=(mf * n_mels + mb * nf - mf * mb)
+               / float(nf * n_mels),
+               logmel=[list(r) for r in mel])
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -2888,62 +2857,26 @@ def cmvn_partials(
     the DataFrame form of a treeAggregate: every clip contributes a
     26-element partial, Catalyst's partial+final HashAggregate merges
     them map-side, and only (band, sum, sumsq, n) scalars ever shuffle.
-    Undecodable / sub-frame clips emit n_frames=0 with zero vectors."""
-    from pyspark.sql.types import StructType
+    Undecodable / sub-frame clips emit n_frames=0 with zero vectors.
+    `keep_cols` (default none) come first, in input order."""
+    row = partial(_cmvn_row, n_mels=n_mels, frame_ms=frame_ms,
+                  hop_ms=hop_ms)
+    keep = [c for c in df.columns if c in (keep_cols or ())]
+    return _map_features(df, CMVN_PARTIAL_SCHEMA, [row],
+                         (bytes_col, codec_col), bytes_col, keep)
 
-    kept = [f for f in df.schema.fields
-            if f.name in (keep_cols or [])]
-    out_schema = StructType(
-        kept + list(StructType.fromDDL(CMVN_PARTIAL_SCHEMA).fields))
-    keeps = [f.name for f in kept]
 
-    def _batches(it):
-        from gx_spark.audio import decode_payload
-
-        for pdf in it:
-            ns, sums, sqs = [], [], []
-            for bb, cc in zip(pdf[bytes_col], pdf[codec_col]):
-                try:
-                    sr, pcm = decode_payload(bytes(bb), cc)
-                except (ValueError, NotImplementedError, TypeError):
-                    sr, pcm = 0, None
-                nf = 0
-                if pcm is not None and sr > 0:
-                    win = max(1, sr * frame_ms // 1000)
-                    hop = max(1, sr * hop_ms // 1000)
-                    n = len(pcm)
-                    nf = 0 if n < win else 1 + (n - win) // hop
-                if nf == 0:
-                    ns.append(0)
-                    sums.append([0.0] * n_mels)
-                    sqs.append([0.0] * n_mels)
-                    continue
-                x = pcm.astype(np.float64) / 32768.0
-                idx = (np.arange(nf)[:, None] * hop
-                       + np.arange(win)[None, :])
-                hann = 0.5 - 0.5 * np.cos(
-                    2.0 * np.pi * np.arange(win) / win)
-                nfft = 1 << max(1, int(win - 1).bit_length())
-                pwr = np.abs(np.fft.rfft(x[idx] * hann, nfft,
-                                         axis=1)) ** 2
-                fb = mel_filterbank(sr, nfft, n_mels)
-                mel = 10.0 * np.log10(np.maximum(pwr @ fb.T, 1e-10))
-                ns.append(int(nf))
-                sums.append([float(v) for v in mel.sum(axis=0)])
-                sqs.append([float(v) for v in (mel * mel).sum(axis=0)])
-            out = pdf[keeps].copy() if keeps else pd.DataFrame(
-                index=pdf.index)
-            out["n_frames"] = ns
-            out["band_sum"] = sums
-            out["band_sumsq"] = sqs
-            yield out
-
-    sel = list(keeps)
-    for c in (bytes_col, codec_col):
-        if c not in sel:
-            sel.append(c)
-    return df.select(*sel).mapInPandas(_on_workers(_batches),
-                                       schema=out_schema)
+def _cmvn_row(b, codec, *, n_mels, frame_ms, hop_ms):
+    dec = _decode(b, codec)
+    nf, mel = ((0, None) if dec is None or dec[0] <= 0
+               else _mel_power(*dec, n_mels, frame_ms, hop_ms))
+    if nf == 0:
+        return {"n_frames": 0, "band_sum": [0.0] * n_mels,
+                "band_sumsq": [0.0] * n_mels}
+    mel = 10.0 * np.log10(np.maximum(mel, 1e-10))
+    return {"n_frames": int(nf),
+            "band_sum": [float(v) for v in mel.sum(axis=0)],
+            "band_sumsq": [float(v) for v in (mel * mel).sum(axis=0)]}
 
 
 def cmvn_stats(

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from .avro_ocf import read_ocf
+from .row_udf import map_in_pandas
 
 
 def _is_nullable_union(sch: Any) -> bool:
@@ -202,7 +203,7 @@ def read_avro(spark: SparkSession, path: str,
     n_parts = n_partitions or min(
         len(files), spark.sparkContext.defaultParallelism)
     paths = spark.createDataFrame([(f,) for f in files], "path string")
-    return paths.repartition(n_parts).mapInPandas(decode, spark_schema)
+    return map_in_pandas(paths.repartition(n_parts), decode, spark_schema)
 
 
 def _read_header_schema(path: str) -> tuple[Any, bytes]:
@@ -390,7 +391,7 @@ def write_avro(df: DataFrame, path: str, codec: str = "null",
         write_ocf(out, schema, records, codec=codec)
         yield pd.DataFrame({"rows": [len(records)]})
 
-    counts = df.mapInPandas(gen, "rows long").collect()
+    counts = map_in_pandas(df, gen, "rows long").collect()
     return int(sum(r["rows"] for r in counts))
 
 

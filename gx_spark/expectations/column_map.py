@@ -686,7 +686,7 @@ class MatchJsonSchema(ColumnMapExpectation):
     metric_name = "column_values.match_json_schema"
 
     def unexpected_condition(self, cfg, ctx) -> Column:
-        from pyspark.sql.functions import pandas_udf
+        from ..row_udf import pandas_udf
 
         schema = cfg.kwargs["json_schema"]
 

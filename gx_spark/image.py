@@ -33,7 +33,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .row_udf import _num, _row_udf
+from .row_udf import _num, _row_udf, map_in_pandas
 
 _MAGIC = b"GXIM"
 _HDR = "<4sHHB"  # magic, width, height, channels
@@ -238,7 +238,7 @@ def sample_video_frames(
                     frames.append(b[fi * frame_len:(fi + 1) * frame_len])
             yield pd.DataFrame({"vid_id": vids, "frame_idx": idxs, "bytes": frames})
 
-    return df.mapInPandas(gen, schema)
+    return map_in_pandas(df, gen, schema)
 
 
 # ---------------------------------------------------------------------------

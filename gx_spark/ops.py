@@ -360,7 +360,7 @@ def transcript_error_stats(
     empty (all-deletion). Returns (id, ref_words, word_edits, wer,
     ref_chars, char_edits, cer).  Entirely map-side: zero Exchange, so
     it composes with any upstream scan at full scan parallelism."""
-    from pyspark.sql.functions import pandas_udf
+    from .row_udf import pandas_udf
 
     @pandas_udf("long")
     def word_edits_udf(hyp: pd.Series, ref: pd.Series) -> pd.Series:
@@ -575,7 +575,7 @@ def semdedup(
     cluster's pair block fits a task.  Training cost is one bounded
     sample + driver matmuls; the tag pass is map-only."""
     import pandas as pd  # noqa: F401
-    from pyspark.sql.functions import pandas_udf
+    from .row_udf import pandas_udf
 
     if centroids is None:
         centroids = train_ivf_centroids(
@@ -733,7 +733,7 @@ def cosine_topk(
     batch (array `aggregate` expressions run interpreted — the BLAS path is
     ~10x faster at embedding dims)."""
     import pandas as pd  # noqa: F401
-    from pyspark.sql.functions import pandas_udf
+    from .row_udf import pandas_udf
 
     qv = np.asarray(query, dtype=np.float64)
     qn = qv / max(float(np.linalg.norm(qv)), 1e-300)
@@ -781,7 +781,7 @@ def cosine_near_dup_pairs(
     verified, so precision is exact and recall is the OR-amplified
     sign-agreement probability — the 100 TB shape."""
     import pandas as pd  # noqa: F401
-    from pyspark.sql.functions import pandas_udf
+    from .row_udf import pandas_udf
 
     # normalize in one numpy pass per Arrow batch: the HOF formulation
     # transform(v, x -> x / sqrt(dot(v,v))) re-evaluates the interpreted
@@ -906,7 +906,7 @@ def build_ann_index(
     functions stay interpreted (no codegen), so at 96 projections the
     vectorized numpy path is the fast one."""
     import pandas as pd  # noqa: F401
-    from pyspark.sql.functions import pandas_udf
+    from .row_udf import pandas_udf
 
     first = df.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
     if first is None:
@@ -1048,7 +1048,7 @@ def build_ivf_index(
     partitioned by `cell` — ivf_query's cell filter then becomes partition
     pruning and a query touches nprobe/k of the corpus files."""
     import pandas as pd  # noqa: F401
-    from pyspark.sql.functions import pandas_udf
+    from .row_udf import pandas_udf
 
     C = np.asarray(centroids, dtype=np.float64)
     dim = C.shape[1]
@@ -1217,7 +1217,7 @@ def pq_encode(
     is projected away.  Null/ragged vectors encode to null and are dropped.
     """
     import pandas as pd  # noqa: F401
-    from pyspark.sql.functions import pandas_udf
+    from .row_udf import pandas_udf
 
     B = np.asarray(codebooks, dtype=np.float64)  # (m, k, d_sub)
     m, _k, d_sub = B.shape
@@ -1266,7 +1266,7 @@ def pq_query(
     orderBy+limit compiles to TakeOrderedAndProject: k rows per partition
     cross the wire, never the scores."""
     import pandas as pd  # noqa: F401
-    from pyspark.sql.functions import pandas_udf
+    from .row_udf import pandas_udf
 
     B = np.asarray(codebooks, dtype=np.float64)
     m, _kk, d_sub = B.shape
@@ -1377,7 +1377,7 @@ def write_ivfpq_index(
     `codebooks/` = tiny parquet side tables (FS-agnostic, no driver-local
     files).  Returns (centroids, codebooks)."""
     import pandas as pd  # noqa: F401
-    from pyspark.sql.functions import pandas_udf
+    from .row_udf import pandas_udf
 
     C = train_ivf_centroids(df, vec_col, n_centroids, sample_cap, iters, seed)
     index = build_ivf_index(df, id_col, vec_col, C)
@@ -1450,7 +1450,7 @@ def ivfpq_query(
     the code term is the same m-gather ADC as pq_query.  Only k rows per
     partition survive the TakeOrdered."""
     import pandas as pd  # noqa: F401
-    from pyspark.sql.functions import pandas_udf
+    from .row_udf import pandas_udf
 
     C = np.asarray(centroids, dtype=np.float64)
     B = np.asarray(codebooks, dtype=np.float64)
@@ -3023,7 +3023,7 @@ def _bpe_pretokenize(df: DataFrame, text_col: str) -> DataFrame:
     import re as _re
 
     import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    from .row_udf import pandas_udf
 
     pat = _re.compile(BPE_PY_PATTERN)
 
@@ -3112,7 +3112,7 @@ def bpe_encode(
     lookup.  Returns (id, tokens array<string>, n_bpe_tokens).  Map-side
     Arrow pass; the merge table broadcasts in the UDF closure."""
     import pandas as pd  # noqa: F401
-    from pyspark.sql.functions import pandas_udf
+    from .row_udf import pandas_udf
 
     ranks = {tuple(m): i for i, m in enumerate(merges)}
     import re as _re

@@ -1,49 +1,87 @@
-"""The one driver for per-row Python work over payload columns.
+"""The one path by which gx_spark's Python code reaches the Spark workers.
+
+Every Python UDF the package builds reaches ``_ship`` before Spark wraps
+it: ``_row_udf`` for per-row work over payload columns, and the guarded
+``pandas_udf`` / ``map_in_pandas`` entry points for the vectorized UDFs
+and the batch-at-a-time passes.  ``_ship`` zips the package and adds the
+zip as a py-file include once per SparkContext, so a worker imports
+gx_spark from it whatever its working directory or disk.
 
 Every pandas UDF that maps a row (a payload plus its metadata columns) to
 a value or a struct is ``_row_udf(schema, row_fn)``: the audio, image and
 video flags structs, the audio gate columns and feature ops, and the
-image ops.  The driver ships the row function to the Python workers (the
-repo root goes on their sys.path first), nulls a row whose row function
-raises ValueError / NotImplementedError / TypeError, takes each output
-column's pandas dtype from its Spark type, and names the UDF after the
-row function in plans and the Spark UI.
+image ops.  It nulls a row whose row function raises ValueError /
+NotImplementedError / TypeError, takes each output column's pandas dtype
+from its Spark type, and names the UDF after the row function in plans
+and the Spark UI.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+import zipfile
 
 import pandas as pd
 
-_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_ZIP = "gx_spark.zip"
+_SHIP_LOCK = threading.Lock()
 
 # what a bad payload raises (decode, or a kernel fed by it): the row is
 # nulled instead of failing the task
 _ROW_ERRORS = (ValueError, NotImplementedError, TypeError)
 
 
-def _on_workers(fn, *args):
-    """``fn(*args, *call_args)`` as a callable Spark ships to its Python
-    workers.  fn and args travel as one cloudpickle blob that is loaded
-    only after the repo root is on the worker's sys.path, so kernels and
-    row functions resolve even where the worker did not start in the
-    repo (the one sys.path edit of gx_spark's workers)."""
-    from pyspark import cloudpickle
+def _zip_package(path: str) -> str:
+    """Write the package's .py files to the zip ``path`` (the artifact of
+    ``spark-submit --py-files`` and of ``_ship``) and return ``path``."""
+    pkg = os.path.dirname(os.path.abspath(__file__))
+    root = os.path.dirname(pkg)
+    with zipfile.ZipFile(path, "w") as z:
+        for d, _, files in os.walk(pkg):
+            for fn in sorted(files):
+                if fn.endswith(".py"):
+                    p = os.path.join(d, fn)
+                    z.write(p, os.path.relpath(p, root))
+    return path
 
-    blob = cloudpickle.dumps((fn, args))
-    repo_root = _REPO_ROOT
 
-    def call(*call_args):
-        import pickle
-        import sys
+def _ship(sc) -> None:
+    """Add the package zip to ``sc``'s Python includes unless one named
+    gx_spark.zip is registered already (``--py-files gx_spark.zip``, or
+    an earlier call).  Spark copies the includes into a UDF when it wraps
+    it, so this runs before the wrap.  The zip lives in the context's
+    own temp dir, which goes with the context."""
+    with _SHIP_LOCK:
+        if _ZIP in sc._python_includes:
+            return
+        sc.addPyFile(_zip_package(os.path.join(sc._temp_dir, _ZIP)))
 
-        if repo_root not in sys.path:
-            sys.path.insert(0, repo_root)
-        f, a = pickle.loads(blob)
-        return f(*a, *call_args)
 
-    return call
+def _active_context():
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        raise RuntimeError("gx_spark builds its UDFs on a running "
+                           "SparkContext")
+    return sc
+
+
+def pandas_udf(schema):
+    """``pyspark.sql.functions.pandas_udf(schema)`` with the package
+    shipped to the workers of the active SparkContext first."""
+    from pyspark.sql.functions import pandas_udf as _pandas_udf
+
+    _ship(_active_context())
+    return _pandas_udf(schema)
+
+
+def map_in_pandas(df, fn, schema):
+    """``df.mapInPandas(fn, schema)`` with the package shipped to the
+    workers of ``df``'s SparkContext first."""
+    _ship(df.sparkSession.sparkContext)
+    return df.mapInPandas(fn, schema)
 
 
 def _pandas_dtype(dt) -> str:
@@ -70,13 +108,16 @@ def _row_udf(schema: str, row_fn):
     input columns, named after ``row_fn`` (a partial's function).  A
     struct schema takes dict (or field-ordered tuple) results, a scalar
     schema the value itself."""
-    from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import DataType, StructType
 
     dt = DataType.fromDDL(schema)
     fields = ([(f.name, _pandas_dtype(f.dataType)) for f in dt.fields]
               if isinstance(dt, StructType) else None)
-    call = _on_workers(_row_frame, row_fn, fields, _pandas_dtype(dt))
+    dtype = _pandas_dtype(dt)
+
+    def call(*cols):
+        return _row_frame(row_fn, fields, dtype, *cols)
+
     call.__name__ = getattr(row_fn, "func", row_fn).__name__
     return pandas_udf(dt)(call)
 

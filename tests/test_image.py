@@ -405,23 +405,77 @@ def test_nulled_flags_struct_fails_closed(spark, monkeypatch):
     assert "v1" in viol and "v0" not in viol, viol
 
 def test_image_ops_import_on_workers_outside_repo(tmp_path):
-    """resize_images / image_phash64 from a cwd outside the checkout, with
-    the checkout on sys.path only in the driver: the Python workers must
-    still import their row functions."""
+    """UDFs built outside and inside the row-UDF driver, run from a cwd
+    outside the checkout with the checkout on sys.path only in the
+    driver: the Python workers must still import gx_spark.  Also pins the
+    ship guard: one gx_spark.zip include per SparkContext, none added
+    beside one registered by hand (spark-submit --py-files)."""
     import subprocess
 
     script = f"""
-import sys
+import os, sys
 sys.path.insert(0, {REPO!r})
 from pyspark.sql import SparkSession
+from gx_spark import ExpectationSuite, validate
+from gx_spark import audio_ops, ops
 from gx_spark import image as gim
-spark = (SparkSession.builder.master("local[1]")
-         .config("spark.ui.enabled", "false").getOrCreate())
+from gx_spark.audio import synth_pcm, wav_encode
+from gx_spark.avro_source import read_avro, write_avro
+
+def session():
+    return (SparkSession.builder.master("local[1]")
+            .config("spark.ui.enabled", "false").getOrCreate())
+
+spark = session()
+# ops outside the row-UDF driver first, on fresh Python workers: workers
+# are reused, so one that imported gx_spark for an earlier task could
+# hide a missing include
+tx = spark.createDataFrame([("t", "a b c", "a x c")],
+                           "id string, hyp string, ref string")
+assert ops.transcript_error_stats(tx, "id", "hyp", "ref").collect()[0][
+    "word_edits"] == 1
+vecs = spark.createDataFrame([("u", [1.0, 0.0]), ("w", [0.0, 1.0])],
+                             "id string, v array<double>")
+assert ops.cosine_topk(vecs, "id", "v", [1.0, 0.1], k=1).collect()[0][
+    "id"] == "u"
 b = bytearray(gim.raw_encode(gim.synth_image("a", 8, 8)))
 df = spark.createDataFrame([("a", b, "gxraw")],
                            "img_id string, bytes binary, format string")
 assert gim.image_phash64(df).collect()[0]["phash"] is not None
 assert gim.resize_images(df, 4, 4).collect()[0]["bytes"] is not None
+clip = bytearray(wav_encode(synth_pcm("c", 16000, 500), 16000))
+clips = spark.createDataFrame([("c", clip, "pcm_s16le")],
+                              "clip_id string, bytes binary, codec string")
+assert audio_ops.segment_audio(clips).count() >= 1
+js = spark.createDataFrame([('{{"a": 1}}',), ('{{"a": "x"}}',)], "j string")
+r = validate(spark, js, ExpectationSuite("js").add(
+    "expect_column_values_to_match_json_schema", column="j",
+    json_schema={{"type": "object",
+                  "properties": {{"a": {{"type": "integer"}}}}}}
+)).suite_result.results[0]
+assert not r.exception_info.get("raised_exception"), r.exception_info
+assert r.result["unexpected_count"] == 1, r.result
+assert write_avro(tx, "avro") == 1
+assert read_avro(spark, "avro").collect()[0]["ref"] == "a x c"
+
+from gx_spark.row_udf import _ship, _zip_package
+
+sc = spark.sparkContext
+_ship(sc)
+_ship(sc)
+assert sc._python_includes.count("gx_spark.zip") == 1, sc._python_includes
+spark.stop()
+spark = session()
+sc = spark.sparkContext
+assert "gx_spark.zip" not in sc._python_includes, sc._python_includes
+sc.addPyFile(_zip_package(os.path.abspath("gx_spark.zip")))
+_ship(sc)
+_ship(sc)
+assert sc._python_includes.count("gx_spark.zip") == 1, sc._python_includes
+tx = spark.createDataFrame([("t", "a b", "a b")],
+                           "id string, hyp string, ref string")
+assert ops.transcript_error_stats(tx, "id", "hyp", "ref").collect()[0][
+    "word_edits"] == 0
 spark.stop()
 print("WORKERS_OK")
 """

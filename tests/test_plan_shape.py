@@ -210,3 +210,44 @@ def test_changelog_delete_legs_broadcast_never_sortmerge(spark, tmp_path):
     assert "SortMergeJoin" not in plan, plan
     assert "BroadcastHashJoin" in plan, plan
     assert ch.count() == 60
+
+
+def _sources(top: str):
+    for d, _, files in os.walk(os.path.join(REPO, top)):
+        for fn in sorted(files):
+            if fn.endswith(".py"):
+                p = os.path.join(d, fn)
+                with open(p) as f:
+                    yield os.path.relpath(p, REPO), f.read()
+
+
+def test_python_reaches_workers_through_row_udf_only():
+    """gx_spark/row_udf.py is the one module that hands Python to Spark:
+    every other module builds its pandas UDFs and mapInPandas passes
+    through its guarded entry points, so the package zip is shipped
+    before any UDF is wrapped.  Workers import gx_spark from that zip,
+    so only the CLI entry point (run.py) edits sys.path, and the old
+    per-UDF path wrapper stays gone."""
+    import ast
+    import re
+
+    direct, path_edits = [], []
+    for rel, src in _sources("gx_spark"):
+        if "sys.path.insert" in src:
+            path_edits.append(rel)
+        if rel == os.path.join("gx_spark", "row_udf.py"):
+            continue
+        for node in ast.walk(ast.parse(src)):
+            if (isinstance(node, ast.ImportFrom)
+                    and not (node.module or "").endswith("row_udf")
+                    and any(a.name == "pandas_udf" for a in node.names)):
+                direct.append((rel, node.lineno, "import pandas_udf"))
+            elif (isinstance(node, ast.Attribute)
+                  and node.attr in ("pandas_udf", "mapInPandas")):
+                direct.append((rel, node.lineno, node.attr))
+    assert not direct, direct
+    assert path_edits == [os.path.join("gx_spark", "run.py")], path_edits
+    # split so this file does not match itself
+    wrapper = re.compile(r"\b_on_" r"workers\b")
+    assert not [rel for top in ("gx_spark", "tools", "tests", "perfbench")
+                for rel, src in _sources(top) if wrapper.search(src)]

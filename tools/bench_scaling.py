@@ -15,22 +15,18 @@ import json
 import os
 import subprocess
 import sys
-import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from gx_spark.row_udf import _zip_package  # noqa: E402
 
 
 def build_zip() -> str:
+    """build/gx_spark.zip, the --py-files artifact of the jobs."""
     zpath = os.path.join(REPO, "build", "gx_spark.zip")
     os.makedirs(os.path.dirname(zpath), exist_ok=True)
-    with zipfile.ZipFile(zpath, "w") as z:
-        pkg = os.path.join(REPO, "gx_spark")
-        for root, _, files in os.walk(pkg):
-            for fn in files:
-                if fn.endswith(".py"):
-                    p = os.path.join(root, fn)
-                    z.write(p, os.path.relpath(p, REPO))
-    return zpath
+    return _zip_package(zpath)
 
 
 def run_at(cores: int, table: str, zpath: str, passes: int = 1,
@@ -142,7 +138,6 @@ def main() -> None:
     # North rule: throughput is defined "on the Iceberg audio+transcript
     # table" — import the parquet dir as an Iceberg-lite table (metadata
     # only, idempotent) so audio_job reads through snapshot-planned files.
-    sys.path.insert(0, REPO)
     from gx_spark.iceberg import IcebergLiteTable
 
     if not IcebergLiteTable.exists(table):
