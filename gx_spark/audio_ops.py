@@ -523,8 +523,8 @@ def trim_silence(
 
     mapInPandas with the input schema preserved (sr_hz/dur_ms/codec updated
     when present, like resample_audio); undecodable rows pass through with
-    null bytes.  An all-silent clip trims to empty bytes (dur_ms 0) so a
-    downstream `dur_ms > 0` filter drops it."""
+    null bytes.  An all-silent or empty clip trims to empty bytes (dur_ms
+    0) so a downstream `dur_ms > 0` filter drops it."""
     return _map_payloads(
         df, [partial(_trim_kernel, frame_ms=frame_ms,
                      silence_dbfs=silence_dbfs)],
@@ -532,6 +532,8 @@ def trim_silence(
 
 
 def _trim_kernel(pcm, sr, _rid, *, frame_ms, silence_dbfs):
+    if len(pcm) == 0:  # nothing to trim: empty, like an all-silent clip
+        return pcm, sr, {"sr_hz": sr, "dur_ms": 0}
     lo, _tr, ac = _bounds_from_pcm(sr, pcm, frame_ms, silence_dbfs)
     if lo is None:
         raise ValueError("no samples to trim")

@@ -20,10 +20,8 @@ exploding op (segment_audio) emits no row for them.  Digest-only entries
 skip that check: the flags struct reports a failure row as a validation
 finding (decodable=False), cmvn_partials as a zero partial (the merge
 identity), and downmix_audio reads only container headers, so it passes
-the opus row through.
-Decodable rows never take the failure path (except trim_silence on the
-empty clip, which has no active span to encode), so no decodable input
-reaches a kernel that raises.
+the opus row through.  Decodable rows never take the failure path, so
+no decodable input reaches a kernel that raises.
 
 Regenerate (only after an intended output change):
     python tests/test_audio_kernels.py
@@ -48,7 +46,6 @@ from gx_spark.audio import decode_payload, encode_payload  # noqa: E402
 SCHEMA = ("idx int, clip_id string, bytes binary, sr_hz int, dur_ms int, "
           "codec string, transcript string, part_id int")
 FAILURE_IDX = {3, 5, 12, 13}  # opus, mp3, null payload, garbage payload
-EMPTY_IDX = 10
 
 
 def golden_rows() -> list[tuple]:
@@ -229,7 +226,7 @@ GOLDEN = {
     'tempo_stretch': '0c4d6a3a61a1825a7dbb3cb9eed72c79',
     'transcode_flac': '00cdbed80729d20be17dfbab2004e245',
     'transcode_mulaw': 'd25bf8edeacfb5100563721385358b74',
-    'trim_silence': 'f4d1933fca2783a3ef0ff23ff0b014eb',
+    'trim_silence': '791739e0f4b6ceb0099aacad7f8a08be',
     'validate_and_extract_audio': '87b1898e16586f0a502bd2c1011415d9',
 }
 
@@ -286,7 +283,7 @@ def test_golden_digest_and_error_contract(spark, name):
                 assert d["bytes"] is None, (name, i)
                 assert d["codec"] == src[i][in_names.index("codec")], (name, i)
                 assert all(d[c] is None for c in written), (name, i, d)
-            elif not (name == "trim_silence" and i == EMPTY_IDX):
+            else:
                 assert d["bytes"] is not None, (name, i)
         elif kind == "features" and i in FAILURE_IDX:
             feats = [c for c in new_cols if c not in ECHOES]
