@@ -1,9 +1,10 @@
 """Verify script (round 5): drive the engine end-to-end over real testdata
 parquet + exercise the new Iceberg merge_into / refs / meta_df surface, and
-cross-check with DuckDB.  Run from /root/repo."""
-import sys, tempfile, shutil
+cross-check with DuckDB.  Run: python tools/verify_r5_iceberg.py"""
+import os, sys, tempfile, shutil
 
-sys.path.insert(0, "/root/repo")
+# this checkout's root, so a copy of the repo checks its own code
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 from pyspark.sql import SparkSession, functions as F
 
@@ -102,7 +103,6 @@ finally:
     shutil.rmtree(tmp, ignore_errors=True)
 
 # --- 3. driver contract: entry() + a queries()/oracle pair ---------------
-sys.path.insert(0, "/root/repo")
 import __spark_entry__ as E
 edf = E.entry(spark)
 print(f"entry(): {edf.count()} rows, schema={[f.name for f in edf.schema]}")
