@@ -110,6 +110,7 @@ def _map_payloads(
     added = list(StructType.fromDDL(stats).fields) if stats else []
     written = [(f.name, _pandas_dtype(f.dataType)) for f in
                [f for f in df.schema.fields if f.name in headers] + added]
+
     def batches(it):
         return _payload_batches(kernels, bytes_col, codec_col, id_col,
                                 written, to_codec, it)

@@ -58,22 +58,14 @@ def _ship(sc) -> None:
         sc.addPyFile(_zip_package(os.path.join(sc._temp_dir, _ZIP)))
 
 
-def _active_context():
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    if sc is None:
-        raise RuntimeError("gx_spark builds its UDFs on a running "
-                           "SparkContext")
-    return sc
-
-
 def pandas_udf(schema):
     """``pyspark.sql.functions.pandas_udf(schema)`` with the package
-    shipped to the workers of the active SparkContext first."""
+    shipped to the workers of the SparkContext (the one Spark itself
+    gets or creates when the UDF is applied) first."""
+    from pyspark import SparkContext
     from pyspark.sql.functions import pandas_udf as _pandas_udf
 
-    _ship(_active_context())
+    _ship(SparkContext.getOrCreate())
     return _pandas_udf(schema)
 
 
