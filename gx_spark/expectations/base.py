@@ -5,6 +5,17 @@ expectation.py#{ColumnMapExpectation,ColumnAggregateExpectation,
 BatchExpectation}) but compiled: `plan()` contributes deduplicated metrics to
 the shared MetricContext and returns a finalizer closure — there is no
 runtime metric graph; the "graph" is resolved at plan-build (SURVEY.md §7).
+
+Every map expectation (column map, z-score, unique, monotonic, column
+pair / multicolumn, compound unique, exist_in_table) finalizes through
+one `map_finalizer`: element, non-null and unexpected counts, then the
+tiered result and the `mostly` check.  Every aggregate-style result is
+one `agg_result`.  The uniqueness and referential checks share one
+key-set probe: `duplicate_keys` is the data metric that finds the
+duplicated key groups (`groupBy(keys).count() > 1`, one agg for the
+row and group counts, the key set capped at `_KEY_SET_CAP`), and
+`flag_key_set` broadcast-probes a metric's key set against the
+violations scan as a membership flag and registers the violation spec.
 """
 
 from __future__ import annotations
@@ -15,10 +26,13 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..model import ExpectationConfiguration, ExpectationValidationResult
-from ..planner import MetricBag, MetricContext, ViolationSpec
+from ..planner import MetricBag, MetricContext, MetricRef, ViolationSpec
 from ..result_format import between_success, build_map_result, mostly_success
 
 Finalizer = Callable[[MetricBag], ExpectationValidationResult]
+
+# max keys in a key set broadcast to the violations pass
+_KEY_SET_CAP = 100_000
 
 # kwargs that parameterize the run, not the metric identity
 _NON_VALUE_KWARGS = frozenset(
@@ -48,6 +62,96 @@ def viol_lists(bag: MetricBag, index: int) -> dict[str, Any]:
     d = dict(bag.get(f"viol:{index}") or {})
     d.pop("unexpected_count", None)
     return d
+
+
+def map_finalizer(
+    cfg: ExpectationConfiguration, rf: str, index: int,
+    ec_ref: MetricRef, nn_ref: MetricRef,
+    unexpected: Callable[[MetricBag], int],
+    denominator: str = "nonnull",
+    lists: Callable[[MetricBag], dict[str, Any]] | None = None,
+) -> Finalizer:
+    """The finalizer of every map expectation: read the element, non-null
+    and unexpected counts (in that order, so the first failed metric is
+    the one raised), build the tiered result with the unexpected lists
+    (the violations pass's, unless ``lists`` gives the expectation's
+    own), and apply ``mostly`` over the ``denominator`` count."""
+    mostly = cfg.kwargs.get("mostly")
+
+    def finalize(bag: MetricBag) -> ExpectationValidationResult:
+        element_count = int(bag[ec_ref])
+        nonnull_count = int(bag[nn_ref])
+        unexpected_count = int(unexpected(bag))
+        denom = element_count if denominator == "all" else nonnull_count
+        result = build_map_result(
+            element_count=element_count,
+            nonnull_count=nonnull_count,
+            unexpected_count=unexpected_count,
+            result_format=rf,
+            denominator=denominator,
+            **(viol_lists(bag, index) if lists is None else lists(bag)),
+        )
+        return ExpectationValidationResult(
+            success=mostly_success(denom, unexpected_count, mostly),
+            expectation_config=cfg, result=result)
+
+    return finalize
+
+
+def agg_result(cfg: ExpectationConfiguration, success: Any, observed: Any,
+               rf: str, details: dict[str, Any] | None = None,
+               ) -> ExpectationValidationResult:
+    """An aggregate-style result: ``observed_value`` (and ``details``, when
+    given) unless the format is BOOLEAN_ONLY."""
+    result: dict[str, Any] = {}
+    if rf != "BOOLEAN_ONLY":
+        result["observed_value"] = observed
+        if details:
+            result["details"] = details
+    return ExpectationValidationResult(success=bool(success), expectation_config=cfg, result=result)
+
+
+def duplicate_keys(ctx: MetricContext, keys: list[str], dom: Column | None,
+                   kept: Column, want_rows: bool) -> Callable[[Any], dict[str, Any]]:
+    """The duplicate-key data metric of the uniqueness checks: over the
+    domain rows passing ``kept``, the key groups seen more than once.
+    Catalyst's partial (map-side) aggregation collapses hot keys per
+    partition before the shuffle.  Returns fn(df) -> {"unexpected_count":
+    rows in duplicated groups, "key_df": the duplicated keys, capped at
+    _KEY_SET_CAP, or None when there are none or no rows are wanted}.
+    With ``want_rows`` the groups are persisted, so the violations-pass
+    probe reads the cache instead of re-running the groupBy."""
+    def metric(df) -> dict[str, Any]:
+        d = df
+        if dom is not None:
+            d = d.filter(dom)
+        dups = d.filter(kept).groupBy(*keys).count().filter(F.col("count") > 1)
+        if want_rows:
+            dups = ctx.aux_persist(dups)
+        row = dups.agg(
+            F.coalesce(F.sum("count"), F.lit(0)).alias("uc"),
+            F.count(F.lit(1)).alias("ngroups"),
+        ).collect()[0]
+        return {"unexpected_count": int(row["uc"]),
+                "key_df": dups.select(*keys).limit(_KEY_SET_CAP)
+                if want_rows and row["ngroups"] else None}
+
+    return metric
+
+
+def flag_key_set(ctx: MetricContext, cfg: ExpectationConfiguration, index: int,
+                 flag: str, keys: list[str], ref: MetricRef,
+                 condition: Callable[[Column], Column], observed: Column) -> None:
+    """Recover a key-set check's violation rows: the ``key_df`` of data
+    metric ``ref`` is broadcast-joined against the violations scan as
+    membership flag ``flag`` (null-safe on every key column), and
+    ``condition(flag column)`` is the spec's row condition."""
+    hit = ctx.membership_flag(flag, keys, lambda bag: bag[ref]["key_df"])
+    ctx.add_violation(
+        ViolationSpec(index, cfg.expectation_type, ",".join(keys),
+                      lambda bag, c=condition(hit): c,
+                      lambda bag: observed)
+    )
 
 
 def require_columns(ctx: MetricContext, *cols: str) -> None:
@@ -139,31 +243,14 @@ class ColumnMapExpectation:
                               lambda bag, c=cond: c,
                               lambda bag, o=self.observed_expr(cfg): o)
             )
-        mostly = cfg.kwargs.get("mostly")
 
-        def finalize(bag: MetricBag) -> ExpectationValidationResult:
-            element_count = int(bag[ec_ref])
-            nonnull_count = int(bag[nn_ref])
-            if uc_ref is not None:
-                unexpected_count = int(bag[uc_ref])
-            else:
-                unexpected_count = int(
-                    (bag.get(f"viol:{index}") or {}).get("unexpected_count", 0)
-                )
-            denom = element_count if self.denominator == "all" else nonnull_count
-            success = mostly_success(denom, unexpected_count, mostly)
-            lists = viol_lists(bag, index)
-            result = build_map_result(
-                element_count=element_count,
-                nonnull_count=nonnull_count,
-                unexpected_count=unexpected_count,
-                result_format=rf,
-                denominator=self.denominator,
-                **lists,
-            )
-            return ExpectationValidationResult(success=success, expectation_config=cfg, result=result)
+        def unexpected(bag: MetricBag) -> int:
+            if uc_ref is None:
+                return (bag.get(f"viol:{index}") or {}).get("unexpected_count", 0)
+            return bag[uc_ref]
 
-        return finalize
+        return map_finalizer(cfg, rf, index, ec_ref, nn_ref, unexpected,
+                             self.denominator)
 
 
 class _SharedColumnMap(ColumnMapExpectation):
@@ -219,10 +306,7 @@ class ColumnAggregateExpectation:
         def finalize(bag: MetricBag) -> ExpectationValidationResult:
             observed = self.observed_to_python(bag[ref])
             success, details = self.validate(observed, cfg)
-            result: dict[str, Any] = {} if rf == "BOOLEAN_ONLY" else {"observed_value": observed}
-            if details and rf != "BOOLEAN_ONLY":
-                result["details"] = details
-            return ExpectationValidationResult(success=success, expectation_config=cfg, result=result)
+            return agg_result(cfg, success, observed, rf, details)
 
         return finalize
 

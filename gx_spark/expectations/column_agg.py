@@ -13,16 +13,20 @@ bundling ref: sparkdf_execution_engine.py#resolve_metric_bundle).  Dual-mode
 
 from __future__ import annotations
 
-from typing import Any
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..model import ExpectationConfiguration, ExpectationValidationResult
+from ..model import ExpectationConfiguration
 from ..planner import MetricContext
 from ..registry import register_expectation
 from ..result_format import between_success
-from .base import ColumnAggregateExpectation, domain_col, require_columns, result_format_of
+from .base import (
+    ColumnAggregateExpectation,
+    agg_result,
+    domain_col,
+    require_columns,
+    result_format_of,
+)
 
 
 class _SimpleAgg(ColumnAggregateExpectation):
@@ -149,8 +153,7 @@ class UniqueProportion(ColumnAggregateExpectation):
                 observed, k.get("min_value"), k.get("max_value"),
                 bool(k.get("strict_min", False)), bool(k.get("strict_max", False)),
             )
-            result = {} if rf == "BOOLEAN_ONLY" else {"observed_value": observed}
-            return ExpectationValidationResult(success=success, expectation_config=cfg, result=result)
+            return agg_result(cfg, success, observed, rf)
 
         return finalize
 
@@ -191,9 +194,7 @@ class QuantileValues(ColumnAggregateExpectation):
             if ranges is not None:
                 for v, (lo, hi) in zip(values, ranges):
                     success = success and between_success(v, lo, hi)
-            observed = {"quantiles": quantiles, "values": values}
-            result = {} if rf == "BOOLEAN_ONLY" else {"observed_value": observed}
-            return ExpectationValidationResult(success=bool(success), expectation_config=cfg, result=result)
+            return agg_result(cfg, success, {"quantiles": quantiles, "values": values}, rf)
 
         return finalize
 
@@ -242,10 +243,7 @@ class _DistinctSetBase(ColumnAggregateExpectation):
                     "in_set_distinct_count": in_distinct,
                     "value_set_size": len(vlist),
                 }
-                result = {} if rf == "BOOLEAN_ONLY" else {"observed_value": observed}
-                return ExpectationValidationResult(
-                    success=success, expectation_config=cfg, result=result
-                )
+                return agg_result(cfg, success, observed, rf)
 
             return finalize
 
@@ -254,8 +252,7 @@ class _DistinctSetBase(ColumnAggregateExpectation):
         def finalize(bag):
             observed = sorted(bag[ref], key=lambda x: (str(type(x)), x))
             success = self.check(set(observed), set(vset) if vset is not None else set())
-            result = {} if rf == "BOOLEAN_ONLY" else {"observed_value": observed}
-            return ExpectationValidationResult(success=success, expectation_config=cfg, result=result)
+            return agg_result(cfg, success, observed, rf)
 
         return finalize
 
@@ -352,8 +349,7 @@ class MostCommonInSet(ColumnAggregateExpectation):
                 success = any(m in vset for m in modes)
             else:
                 success = all(m in vset for m in modes) and bool(modes)
-            result = {} if rf == "BOOLEAN_ONLY" else {"observed_value": modes}
-            return ExpectationValidationResult(success=success, expectation_config=cfg, result=result)
+            return agg_result(cfg, success, modes, rf)
 
         return finalize
 
@@ -404,8 +400,7 @@ class _TypeCheckBase:
         rf = result_format_of(cfg, ctx.options)
 
         def finalize(bag):
-            result = {} if rf == "BOOLEAN_ONLY" else {"observed_value": actual}
-            return ExpectationValidationResult(success=success, expectation_config=cfg, result=result)
+            return agg_result(cfg, success, actual, rf)
 
         return finalize
 

@@ -16,17 +16,17 @@ import pandas as pd  # noqa: F401  (pandas-UDF type hints resolve here)
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..model import ExpectationConfiguration, ExpectationValidationResult
+from ..model import ExpectationConfiguration
 from ..planner import MetricBag, MetricContext, ViolationSpec
 from ..registry import register_expectation
-from ..result_format import build_map_result, mostly_success
 from .base import (
     ColumnMapExpectation,
     Finalizer,
+    duplicate_keys,
+    flag_key_set,
+    map_finalizer,
     require_columns,
     result_format_of,
-    value_kwargs,
-    viol_lists,
 )
 
 
@@ -383,24 +383,8 @@ class ZScoresLessThan(ColumnMapExpectation):
                 ViolationSpec(index, cfg.expectation_type, column, zcond,
                               lambda bag: F.col(column))
             )
-        mostly = cfg.kwargs.get("mostly")
-
-        def finalize(bag: MetricBag) -> ExpectationValidationResult:
-            element_count = int(bag[ec_ref])
-            nonnull_count = int(bag[nn_ref])
-            unexpected_count = int(bag[uc_ref])
-            success = mostly_success(nonnull_count, unexpected_count, mostly)
-            lists = viol_lists(bag, index)
-            result = build_map_result(
-                element_count=element_count, nonnull_count=nonnull_count,
-                unexpected_count=unexpected_count, result_format=rf, **lists,
-            )
-            return ExpectationValidationResult(success=success, expectation_config=cfg, result=result)
-
-        return finalize
-
-
-_DUP_VALUE_CAP = 100_000  # max duplicated keys broadcast for the violations pass
+        return map_finalizer(cfg, rf, index, ec_ref, nn_ref,
+                             lambda bag: bag[uc_ref])
 
 
 @register_expectation("expect_column_values_to_be_unique")
@@ -424,53 +408,14 @@ class BeUnique(ColumnMapExpectation):
         nn_ref = ctx.nonnull_count(column, dk, dom)
         rf = result_format_of(cfg, ctx.options)
         want_rows = rf != "BOOLEAN_ONLY" and ctx.options.collect_violations
-
-        def dup_metric(df) -> dict[str, Any]:
-            d = df
-            if dom is not None:
-                d = d.filter(dom)
-            d = d.filter(F.col(column).isNotNull())
-            dups = d.groupBy(column).count().filter(F.col("count") > 1)
-            if want_rows:
-                # persisted so the violations-pass broadcast probe reads the
-                # cache instead of re-running the groupBy
-                dups = ctx.aux_persist(dups)
-            row = dups.agg(
-                F.coalesce(F.sum("count"), F.lit(0)).alias("uc"),
-                F.count(F.lit(1)).alias("ngroups"),
-            ).collect()[0]
-            return {"unexpected_count": int(row["uc"]),
-                    "dup_df": dups.select(column).limit(_DUP_VALUE_CAP) if want_rows else None,
-                    "n_groups": int(row["ngroups"]),
-                    "truncated": int(row["ngroups"]) > _DUP_VALUE_CAP}
-
-        dup_ref = ctx.data("column_values.unique.dups", dk, column, dup_metric)
+        dup_ref = ctx.data(
+            "column_values.unique.dups", dk, column,
+            duplicate_keys(ctx, [column], dom, F.col(column).isNotNull(), want_rows))
         if want_rows:
-            flag = ctx.membership_flag(
-                f"__dup_{index}", [column],
-                lambda bag: bag[dup_ref]["dup_df"]
-                if bag[dup_ref]["n_groups"] else None,
-            )
-            ctx.add_violation(
-                ViolationSpec(index, cfg.expectation_type, column,
-                              lambda bag, c=ctx.guard(dom, flag): c,
-                              lambda bag: F.col(column))
-            )
-        mostly = cfg.kwargs.get("mostly")
-
-        def finalize(bag: MetricBag) -> ExpectationValidationResult:
-            element_count = int(bag[ec_ref])
-            nonnull_count = int(bag[nn_ref])
-            unexpected_count = bag[dup_ref]["unexpected_count"]
-            success = mostly_success(nonnull_count, unexpected_count, mostly)
-            lists = viol_lists(bag, index)
-            result = build_map_result(
-                element_count=element_count, nonnull_count=nonnull_count,
-                unexpected_count=unexpected_count, result_format=rf, **lists,
-            )
-            return ExpectationValidationResult(success=success, expectation_config=cfg, result=result)
-
-        return finalize
+            flag_key_set(ctx, cfg, index, f"__dup_{index}", [column], dup_ref,
+                         lambda hit: ctx.guard(dom, hit), F.col(column))
+        return map_finalizer(cfg, rf, index, ec_ref, nn_ref,
+                             lambda bag: bag[dup_ref]["unexpected_count"])
 
 
 class _Monotonic:
@@ -583,22 +528,10 @@ class _Monotonic:
             f"column_values.{'increasing' if inc else 'decreasing'}", dk,
             [column, strictly, order_by, partition_by], metric,
         )
-        rf = result_format_of(cfg, ctx.options)
-        mostly = cfg.kwargs.get("mostly")
-
-        def finalize(bag: MetricBag) -> ExpectationValidationResult:
-            element_count = int(bag[ec_ref])
-            nonnull_count = int(bag[nn_ref])
-            m = bag[m_ref]
-            success = mostly_success(nonnull_count, m["unexpected_count"], mostly)
-            result = build_map_result(
-                element_count=element_count, nonnull_count=nonnull_count,
-                unexpected_count=m["unexpected_count"], result_format=rf,
-                partial_unexpected_list=m["sample"],
-            )
-            return ExpectationValidationResult(success=success, expectation_config=cfg, result=result)
-
-        return finalize
+        return map_finalizer(
+            cfg, result_format_of(cfg, ctx.options), index, ec_ref, nn_ref,
+            lambda bag: bag[m_ref]["unexpected_count"],
+            lists=lambda bag: {"partial_unexpected_list": bag[m_ref]["sample"]})
 
 
 @register_expectation("expect_column_values_to_be_increasing")

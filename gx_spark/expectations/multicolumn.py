@@ -8,16 +8,21 @@ denominator for mostly arithmetic is the count of NON-ignored rows.
 
 from __future__ import annotations
 
-from typing import Any
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..model import ExpectationConfiguration, ExpectationValidationResult
-from ..planner import MetricBag, MetricContext, ViolationSpec
+from ..model import ExpectationConfiguration
+from ..planner import MetricContext, ViolationSpec
 from ..registry import register_expectation
-from ..result_format import build_map_result, mostly_success
-from .base import Finalizer, require_columns, result_format_of, value_kwargs, viol_lists
+from .base import (
+    Finalizer,
+    duplicate_keys,
+    flag_key_set,
+    map_finalizer,
+    require_columns,
+    result_format_of,
+    value_kwargs,
+)
 
 
 def ignored_expr(cols: list[str], ignore_row_if: str) -> Column:
@@ -77,21 +82,8 @@ class MultiColMapExpectation:
                               lambda bag, c=cond: c,
                               lambda bag, o=self.observed_expr(cfg): o)
             )
-        mostly = cfg.kwargs.get("mostly")
-
-        def finalize(bag: MetricBag) -> ExpectationValidationResult:
-            element_count = int(bag[ec_ref])
-            nonnull_count = int(bag[nn_ref])
-            unexpected_count = int(bag[uc_ref])
-            success = mostly_success(nonnull_count, unexpected_count, mostly)
-            lists = viol_lists(bag, index)
-            result = build_map_result(
-                element_count=element_count, nonnull_count=nonnull_count,
-                unexpected_count=unexpected_count, result_format=rf, **lists,
-            )
-            return ExpectationValidationResult(success=success, expectation_config=cfg, result=result)
-
-        return finalize
+        return map_finalizer(cfg, rf, index, ec_ref, nn_ref,
+                             lambda bag: bag[uc_ref])
 
 
 @register_expectation("expect_column_pair_values_to_be_equal")
@@ -170,9 +162,6 @@ class UniqueWithinRecord(MultiColMapExpectation):
         return F.size(F.array_distinct(arr)) == F.size(arr)
 
 
-_DUP_KEY_CAP = 100_000
-
-
 class _CompoundUniqueBase:
     """Cross-row tuple uniqueness via two-stage groupBy (partial aggregation
     = map-side combine handles skewed keys; ref upstream uses a window over
@@ -200,50 +189,14 @@ class _CompoundUniqueBase:
         )
         rf = result_format_of(cfg, ctx.options)
         want_rows = rf != "BOOLEAN_ONLY" and ctx.options.collect_violations
-
-        def dup_metric(df) -> dict[str, Any]:
-            d = df
-            if dom is not None:
-                d = d.filter(dom)
-            d = d.filter(~ign)
-            dups = d.groupBy(*cols).count().filter(F.col("count") > 1)
-            if want_rows:
-                dups = ctx.aux_persist(dups)
-            row = dups.agg(
-                F.coalesce(F.sum("count"), F.lit(0)).alias("uc"),
-                F.count(F.lit(1)).alias("ngroups"),
-            ).collect()[0]
-            return {"unexpected_count": int(row["uc"]),
-                    "n_groups": int(row["ngroups"]),
-                    "dup_df": dups.select(*cols).limit(_DUP_KEY_CAP) if want_rows else None}
-
-        dup_ref = ctx.data(self.metric_name, dk, cols, dup_metric)
+        dup_ref = ctx.data(self.metric_name, dk, cols,
+                           duplicate_keys(ctx, cols, dom, ~ign, want_rows))
         if want_rows:
-            flag = ctx.membership_flag(
-                f"__cdup_{index}", cols,
-                lambda bag: bag[dup_ref]["dup_df"]
-                if bag[dup_ref]["n_groups"] else None,
-            )
-            ctx.add_violation(
-                ViolationSpec(index, cfg.expectation_type, ",".join(cols),
-                              lambda bag, c=ctx.guard(dom, ~ign & flag): c,
-                              lambda bag: F.to_json(F.struct(*[F.col(c) for c in cols])))
-            )
-        mostly = cfg.kwargs.get("mostly")
-
-        def finalize(bag: MetricBag) -> ExpectationValidationResult:
-            element_count = int(bag[ec_ref])
-            nonnull_count = int(bag[nn_ref])
-            unexpected_count = bag[dup_ref]["unexpected_count"]
-            success = mostly_success(nonnull_count, unexpected_count, mostly)
-            lists = viol_lists(bag, index)
-            result = build_map_result(
-                element_count=element_count, nonnull_count=nonnull_count,
-                unexpected_count=unexpected_count, result_format=rf, **lists,
-            )
-            return ExpectationValidationResult(success=success, expectation_config=cfg, result=result)
-
-        return finalize
+            flag_key_set(ctx, cfg, index, f"__cdup_{index}", cols, dup_ref,
+                         lambda hit: ctx.guard(dom, ~ign & hit),
+                         F.to_json(F.struct(*[F.col(c) for c in cols])))
+        return map_finalizer(cfg, rf, index, ec_ref, nn_ref,
+                             lambda bag: bag[dup_ref]["unexpected_count"])
 
 
 @register_expectation("expect_compound_columns_to_be_unique")

@@ -26,17 +26,21 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..model import ExpectationConfiguration, ExpectationValidationResult
-from ..planner import MetricBag, MetricContext, ViolationSpec
+from ..planner import MetricBag, MetricContext
 from ..skew import salted_anti_keys, salted_join
 from ..registry import register_expectation
-from ..result_format import build_map_result, mostly_success
-from .base import Finalizer, require_columns, result_format_of, viol_lists
-
-_MISSING_VALUE_CAP = 100_000
+from .base import (
+    _KEY_SET_CAP,
+    Finalizer,
+    agg_result,
+    flag_key_set,
+    map_finalizer,
+    require_columns,
+    result_format_of,
+)
 
 
 @register_expectation("expect_column_values_to_exist_in_table")
@@ -73,22 +77,19 @@ class ExistInTable:
                 missing_all = salted_anti_keys(
                     d, column, other_df, other_column, buckets=salt_buckets
                 )
-                missing = ctx.aux_persist(missing_all.limit(_MISSING_VALUE_CAP))
+                missing = ctx.aux_persist(missing_all.limit(_KEY_SET_CAP))
                 n_missing = missing.count()
                 if n_missing == 0:
-                    return {"unexpected_count": 0, "missing_df": None, "n_missing": 0}
-                if n_missing < _MISSING_VALUE_CAP:
+                    return {"unexpected_count": 0, "key_df": None}
+                if n_missing < _KEY_SET_CAP:
                     uc = d.join(F.broadcast(missing), on=column, how="left_semi").count()
                 else:
                     uc = salted_join(
                         d.select(column), missing_all, on=column,
                         how="left_semi", buckets=salt_buckets,
                     ).count()
-                return {
-                    "unexpected_count": uc,
-                    "missing_df": missing if want_rows else None,
-                    "n_missing": n_missing,
-                }
+                return {"unexpected_count": uc,
+                        "key_df": missing if want_rows else None}
             dim = other_df.select(F.col(other_column).alias(column)).distinct()
             if use_theta:
                 # cheap prefilter: estimated |fact_keys \ dim_keys|, plus both
@@ -116,43 +117,23 @@ class ExistInTable:
                 # short-circuit ONLY when the 0-difference is provably exact;
                 # a saturated sketch's estimate can miss real orphans
                 if not est_row["diff"] and exact_regime:
-                    return {"unexpected_count": 0, "missing_df": None, "n_missing": 0}
+                    return {"unexpected_count": 0, "key_df": None}
             orphans = d.join(F.broadcast(dim), on=column, how="left_anti")
             uc = orphans.count()
             if uc == 0 or not want_rows:
-                return {"unexpected_count": uc, "missing_df": None, "n_missing": 0}
+                return {"unexpected_count": uc, "key_df": None}
             missing = ctx.aux_persist(
-                orphans.select(column).distinct().limit(_MISSING_VALUE_CAP)
+                orphans.select(column).distinct().limit(_KEY_SET_CAP)
             )
-            n_missing = missing.count()  # materializes the persisted key set
-            return {"unexpected_count": uc, "missing_df": missing, "n_missing": n_missing}
+            missing.count()  # materializes the persisted key set
+            return {"unexpected_count": uc, "key_df": missing}
 
         m_ref = ctx.data(self.metric_name, dk, [column, other_name, other_column], metric)
         if want_rows:
-            flag = ctx.membership_flag(
-                f"__orph_{index}", [column],
-                lambda bag: bag[m_ref]["missing_df"],
-            )
-            ctx.add_violation(
-                ViolationSpec(index, cfg.expectation_type, column,
-                              lambda bag, c=ctx.guard(dom, flag): c,
-                              lambda bag: F.col(column))
-            )
-        mostly = cfg.kwargs.get("mostly")
-
-        def finalize(bag: MetricBag) -> ExpectationValidationResult:
-            element_count = int(bag[ec_ref])
-            nonnull_count = int(bag[nn_ref])
-            unexpected_count = bag[m_ref]["unexpected_count"]
-            success = mostly_success(nonnull_count, unexpected_count, mostly)
-            lists = viol_lists(bag, index)
-            result = build_map_result(
-                element_count=element_count, nonnull_count=nonnull_count,
-                unexpected_count=unexpected_count, result_format=rf, **lists,
-            )
-            return ExpectationValidationResult(success=success, expectation_config=cfg, result=result)
-
-        return finalize
+            flag_key_set(ctx, cfg, index, f"__orph_{index}", [column], m_ref,
+                         lambda hit: ctx.guard(dom, hit), F.col(column))
+        return map_finalizer(cfg, rf, index, ec_ref, nn_ref,
+                             lambda bag: bag[m_ref]["unexpected_count"])
 
 
 @register_expectation("expect_query_to_return_no_rows")
@@ -177,12 +158,7 @@ class QueryReturnsNoRows:
 
         def finalize(bag: MetricBag) -> ExpectationValidationResult:
             m = bag[m_ref]
-            result = {} if rf == "BOOLEAN_ONLY" else {
-                "observed_value": m["unexpected_count"],
-                "details": {"sample_rows": m["sample"]},
-            }
-            return ExpectationValidationResult(
-                success=m["unexpected_count"] == 0, expectation_config=cfg, result=result
-            )
+            return agg_result(cfg, m["unexpected_count"] == 0, m["unexpected_count"],
+                              rf, {"sample_rows": m["sample"]})
 
         return finalize

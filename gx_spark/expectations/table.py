@@ -4,15 +4,9 @@ metadata-only — `df.schema` / `df.columns`, no Spark job."""
 
 from __future__ import annotations
 
-from ..model import ExpectationValidationResult
 from ..registry import register_expectation
 from ..result_format import between_success
-from .base import result_format_of
-
-
-def _evr(cfg, success, observed, rf):
-    result = {} if rf == "BOOLEAN_ONLY" else {"observed_value": observed}
-    return ExpectationValidationResult(success=bool(success), expectation_config=cfg, result=result)
+from .base import agg_result, result_format_of
 
 
 @register_expectation("expect_table_row_count_to_be_between")
@@ -30,7 +24,7 @@ class RowCountBetween:
             n = int(bag[ref])
             ok = between_success(n, k.get("min_value"), k.get("max_value"),
                                  bool(k.get("strict_min", False)), bool(k.get("strict_max", False)))
-            return _evr(cfg, ok, n, rf)
+            return agg_result(cfg, ok, n, rf)
 
         return finalize
 
@@ -48,7 +42,7 @@ class RowCountEqual:
 
         def finalize(bag):
             n = int(bag[ref])
-            return _evr(cfg, n == value, n, rf)
+            return agg_result(cfg, n == value, n, rf)
 
         return finalize
 
@@ -67,7 +61,7 @@ class RowCountEqualOtherTable:
 
         def finalize(bag):
             n, m = int(bag[ref]), int(bag[other_ref])
-            return _evr(cfg, n == m, {"self": n, "other": m}, rf)
+            return agg_result(cfg, n == m, {"self": n, "other": m}, rf)
 
         return finalize
 
@@ -86,7 +80,7 @@ class ColumnExists:
         rf = result_format_of(cfg, ctx.options)
 
         def finalize(bag):
-            return _evr(cfg, success, column if success else None, rf)
+            return agg_result(cfg, success, column if success else None, rf)
 
         return finalize
 
@@ -102,7 +96,7 @@ class ColumnsMatchOrderedList:
         rf = result_format_of(cfg, ctx.options)
 
         def finalize(bag):
-            return _evr(cfg, actual == expected, actual, rf)
+            return agg_result(cfg, actual == expected, actual, rf)
 
         return finalize
 
@@ -120,7 +114,7 @@ class ColumnsMatchSet:
         rf = result_format_of(cfg, ctx.options)
 
         def finalize(bag):
-            return _evr(cfg, success, sorted(actual), rf)
+            return agg_result(cfg, success, sorted(actual), rf)
 
         return finalize
 
@@ -137,7 +131,7 @@ class ColumnCountBetween:
         ok = between_success(n, k.get("min_value"), k.get("max_value"))
 
         def finalize(bag):
-            return _evr(cfg, ok, n, rf)
+            return agg_result(cfg, ok, n, rf)
 
         return finalize
 
@@ -152,6 +146,6 @@ class ColumnCountEqual:
         ok = n == int(cfg.kwargs["value"])
 
         def finalize(bag):
-            return _evr(cfg, ok, n, rf)
+            return agg_result(cfg, ok, n, rf)
 
         return finalize

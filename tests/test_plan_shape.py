@@ -251,3 +251,20 @@ def test_python_reaches_workers_through_row_udf_only():
     wrapper = re.compile(r"\b_on_" r"workers\b")
     assert not [rel for top in ("gx_spark", "tools", "tests", "perfbench")
                 for rel, src in _sources(top) if wrapper.search(src)]
+
+
+def test_map_results_built_in_base_only():
+    """Every map expectation finalizes through expectations/base.py
+    map_finalizer, so the map result builder and the mostly check are
+    called there only, and the key-set checks share one cap."""
+    import re
+
+    calls = re.compile(r"\b(build_map_result|mostly_success)\(")
+    sites = sorted({rel for rel, src in _sources("gx_spark")
+                    for line in src.splitlines()
+                    if calls.search(line) and not line.lstrip().startswith("def ")})
+    assert sites == [os.path.join("gx_spark", "expectations", "base.py")], sites
+    # split so this file does not match itself
+    caps = re.compile(r"\b_(DUP_VALUE|DUP_KEY|MISSING_VALUE)" r"_CAP\b")
+    assert not [rel for top in ("gx_spark", "tools", "tests", "perfbench")
+                for rel, src in _sources(top) if caps.search(src)]
