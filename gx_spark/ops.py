@@ -19,6 +19,8 @@ Scale notes are in each docstring; everything runs on the driver-provided
 
 from __future__ import annotations
 
+from collections import Counter
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
@@ -1021,11 +1023,7 @@ def train_ivf_centroids(
     extra count() job to size the fraction) — a bare limit() would take the
     first partitions only and train a biased quantizer on data clustered or
     sorted by embedding, degrading IVF recall at scale."""
-    rows = _bounded_sample(
-        df.select(vec_col).filter(F.col(vec_col).isNotNull()),
-        sample_cap, seed)
-    M = np.stack([np.asarray(r[0], dtype=np.float64) for r in rows])
-    M /= np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
+    M = _training_vectors(df, vec_col, sample_cap, seed)
     k = min(n_centroids, len(M))
     rng = np.random.default_rng(seed)
     C = M[rng.choice(len(M), size=k, replace=False)]
@@ -1165,18 +1163,8 @@ def train_pq_codebooks(
     to m=8 one-byte codes — 32x smaller — so a 10^12-vector corpus's codes
     fit a fraction of the executors the raw vectors need, and every
     candidate scan streams codes, not vectors."""
-    rows = _bounded_sample(
-        df.select(vec_col).filter(F.col(vec_col).isNotNull()),
-        sample_cap, seed)
-    # ragged-safe: train on the first row's dimensionality; stray
-    # wrong-length vectors are skipped here and encode to null downstream
-    arrs = [np.asarray(r[0], dtype=np.float64) for r in rows]
-    dim = arrs[0].shape[0]
-    M = np.stack([a for a in arrs if a.shape == (dim,)])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    M /= np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-    return _pq_lloyd(M, m, k, iters, seed)
+    return _pq_lloyd(_training_vectors(df, vec_col, sample_cap, seed),
+                     m, k, iters, seed)
 
 
 def _pq_lloyd(
@@ -1349,6 +1337,21 @@ def train_pq_codebooks_residual(
         for r in rows if len(r["vec"]) == dim
     ])
     return _pq_lloyd(R, m, k, iters, seed)
+
+
+def _training_vectors(df: DataFrame, vec_col: str, cap: int, seed: int) -> np.ndarray:
+    """The quantizer trainers' input: a bounded sample of the non-null
+    vectors of `vec_col`, L2-normalized, as an (n, dim) matrix.  Ragged-
+    safe: only vectors of the most common length in the sample are kept;
+    a stray wrong-length vector is skipped here and gets no cell / code
+    downstream."""
+    rows = _bounded_sample(
+        df.select(vec_col).filter(F.col(vec_col).isNotNull()), cap, seed)
+    arrs = [np.asarray(r[0], dtype=np.float64) for r in rows]
+    dim = Counter(len(a) for a in arrs).most_common(1)[0][0]
+    M = np.stack([a for a in arrs if len(a) == dim])
+    M /= np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
+    return M
 
 
 def _bounded_sample(df: DataFrame, cap: int, seed: int) -> list:

@@ -131,3 +131,16 @@ def test_ivf_and_cosine_ops_survive_null_vectors(spark, emb):
     pairs = ops.cosine_near_dup_pairs(dirty.limit(200), "vec_id", "embedding",
                                       threshold=0.99, mode="exact")
     pairs.count()  # completes without raising
+
+
+def test_ragged_vector_in_training_sample(spark):
+    """The quantizer trains on the sample's most common vector length; a
+    wrong-length vector is skipped there and dropped from the index."""
+    rows = [(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0, 0.0]),
+            (3, [1.0, 0.0])]
+    df = spark.createDataFrame(rows, "id long, v array<double>")
+    C = ops.train_ivf_centroids(df, "v", n_centroids=2, iters=3)
+    assert C.shape == (2, 4)
+    got = ops.ann_topk_ivf(df, "id", "v", [1.0, 0.0, 0.0, 0.0], k=3,
+                           n_centroids=2, nprobe=2).collect()
+    assert [r["id"] for r in got] == [1, 2]

@@ -99,3 +99,17 @@ def test_trained_centroids_path_is_deterministic(spark):
     rb = sorted(map(tuple, b.collect()))
     assert ra == rb
     assert len(ra) == 40
+
+
+def test_trained_centroids_skip_a_ragged_vector(spark):
+    # the sample's minority vector length stays out of k-means training
+    # (it passes through untagged) instead of failing the stack
+    rows = [(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0, 0.0]),
+            (3, [1.0, 0.0])]
+    df = spark.createDataFrame(rows, "id long, v array<double>")
+    got = {r["id"]: (r["cluster"], r["removed"])
+           for r in ops.semdedup(df, "id", "v", n_clusters=2,
+                                 threshold=0.9).collect()}
+    assert got[3] == (None, False)
+    assert None not in (got[1][0], got[2][0]) and got[1][0] != got[2][0]
+    assert not got[1][1] and not got[2][1]
