@@ -582,28 +582,16 @@ def semdedup(
     if centroids is None:
         centroids = train_ivf_centroids(
             df, vec_col, n_clusters, sample_cap, iters, seed)
-    C = np.asarray(centroids, dtype=np.float64)
-    C = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-300)
+    C = _unit(centroids)
     dim = C.shape[1]
 
     @pandas_udf("struct<cluster:int, c_sim:double, nv:array<double>>")
     def tag(vecs):
-        import numpy as _np
-
         n = len(vecs)
-        M = _np.zeros((n, dim), dtype=_np.float64)
-        valid = _np.zeros(n, dtype=bool)
-        for i, v in enumerate(vecs):
-            if v is None:
-                continue
-            a = _np.asarray(v, dtype=_np.float64)
-            if a.shape == (dim,):
-                M[i] = a
-                valid[i] = True
-        M /= _np.maximum(_np.linalg.norm(M, axis=1, keepdims=True), 1e-300)
+        M, valid = _unit_rows(vecs, dim)
         # 6-dp rounding BEFORE argmax: assignment ties then break on the
         # lowest cell index on every engine, not on float noise
-        sims = _np.round(M @ C.T, 6)
+        sims = np.round(M @ C.T, 6)
         cells = sims.argmax(axis=1).astype("int32")
         best = sims.max(axis=1)
         cells[~valid] = -1  # sentinel; mapped to null below
@@ -714,7 +702,57 @@ def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # similarity search over embeddings
+#
+# One vector front end serves every embedding and ANN op.  The length rule:
+# the vector length `dim` is decided once per call, on the driver, from the
+# query (cosine_topk), the centroids (semdedup, build_ivf_index) or the
+# codebooks (pq_encode) when the op is given one; else it is the table's
+# modal non-null length, ties to the larger length (cosine_near_dup_pairs,
+# build_ann_index, and the quantizer trainers over their sample).  A null
+# row or a row of any other length is invalid, and each op gives it its
+# documented null / -1 / dropped result.  `_unit_rows` is the one fill of
+# an Arrow batch into unit rows, and `_NORM_FLOOR` the one floor of every
+# normalization: rows, centroids, queries and trainers.
 # ---------------------------------------------------------------------------
+
+_NORM_FLOOR = 1e-12
+
+
+def _unit(X) -> np.ndarray:
+    """X as float64, scaled to unit L2 length along its last axis; a norm
+    below _NORM_FLOOR divides by the floor, so a zero vector stays zero."""
+    X = np.asarray(X, dtype=np.float64)
+    return X / np.maximum(np.linalg.norm(X, axis=-1, keepdims=True),
+                          _NORM_FLOOR)
+
+
+def _unit_rows(vecs, dim: int) -> tuple[np.ndarray, np.ndarray]:
+    """The vector UDFs' one fill: a batch of array cells as an (n, dim)
+    matrix of unit rows, and the mask of valid rows (non-null and exactly
+    `dim` long).  Invalid rows stay zero."""
+    n = len(vecs)
+    valid = np.fromiter((v is not None and len(v) == dim for v in vecs),
+                        dtype=bool, count=n)
+    M = np.zeros((n, dim), dtype=np.float64)
+    if valid.any():
+        M[valid] = np.stack([np.asarray(v, dtype=np.float64)
+                             for v, ok in zip(vecs, valid) if ok])
+    return _unit(M), valid
+
+
+def _modal_length(counts: dict[int, int]) -> int | None:
+    """The length rule's table half: the most common length, ties to the
+    larger length (None for no lengths)."""
+    return max(counts, key=lambda n: (counts[n], n), default=None)
+
+
+def _table_dim(df: DataFrame, vec_col: str) -> int | None:
+    """The modal length of the non-null vectors of `vec_col`, or None when
+    there is none.  One aggregate over the lengths only (never the
+    vectors), exact at any table size, so independent of row order."""
+    rows = (df.filter(F.col(vec_col).isNotNull())
+            .groupBy(F.size(vec_col).alias("n")).count().collect())
+    return _modal_length({r["n"]: r["count"] for r in rows})
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -737,30 +775,16 @@ def cosine_topk(
     import pandas as pd  # noqa: F401
     from .row_udf import pandas_udf
 
-    qv = np.asarray(query, dtype=np.float64)
-    qn = qv / max(float(np.linalg.norm(qv)), 1e-300)
+    qn = _unit(query)
     dim = len(qn)
 
     @pandas_udf("double")
     def score(vecs):
-        import numpy as _np
-
-        # None-/ragged-safe: invalid rows score null (excluded from top-k),
-        # matching the old SQL-expression cosine's null semantics instead of
-        # failing the whole job on one bad vector
-        n = len(vecs)
-        M = _np.zeros((n, dim), dtype=_np.float64)
-        valid = _np.zeros(n, dtype=bool)
-        for i, v in enumerate(vecs):
-            if v is None:
-                continue
-            a = _np.asarray(v, dtype=_np.float64)
-            if a.shape == (dim,):
-                M[i] = a
-                valid[i] = True
-        norms = _np.maximum(_np.linalg.norm(M, axis=1), 1e-300)
-        vals = (M @ qn) / norms
-        return pd.Series(vals).where(valid, None).astype("Float64")
+        # invalid rows score null (excluded from top-k), matching the old
+        # SQL-expression cosine's null semantics instead of failing the
+        # whole job on one bad vector
+        M, valid = _unit_rows(vecs, dim)
+        return pd.Series(M @ qn).where(valid, None).astype("Float64")
 
     scored = df.select(
         F.col(id_col).alias("id"), score(F.col(vec_col)).alias("cosine")
@@ -782,54 +806,39 @@ def cosine_near_dup_pairs(
     the pair blow-up is per-bucket) and every surviving pair is exact-cosine
     verified, so precision is exact and recall is the OR-amplified
     sign-agreement probability — the 100 TB shape."""
-    import pandas as pd  # noqa: F401
     from .row_udf import pandas_udf
+
+    if mode not in ("exact", "lsh"):
+        raise ValueError(f"unknown mode: {mode!r}")
+    dim = _table_dim(df, vec_col)
+    if dim is None:
+        # no non-null vector: every row is a singleton, so no pairs
+        return df.select(
+            F.col(id_col).alias("id_a"), F.col(id_col).alias("id_b"),
+            F.lit(0.0).alias("cosine"),
+        ).limit(0)
 
     # normalize in one numpy pass per Arrow batch: the HOF formulation
     # transform(v, x -> x / sqrt(dot(v,v))) re-evaluates the interpreted
     # dot for EVERY element (dim^2 work per row)
     @pandas_udf("array<double>")
     def _nv(vecs):
-        import numpy as _np
-
-        # None-/ragged-safe: invalid rows emit null (their pairs then fail
-        # the `cosine >= threshold` filter) instead of failing the job
-        dims = [len(v) for v in vecs if v is not None]
-        if not dims:
-            return pd.Series([None] * len(vecs))
-        dim = dims[0]
-        n = len(vecs)
-        M = _np.zeros((n, dim), dtype=_np.float64)
-        valid = _np.zeros(n, dtype=bool)
-        for i, v in enumerate(vecs):
-            if v is None:
-                continue
-            a = _np.asarray(v, dtype=_np.float64)
-            if a.shape == (dim,):
-                M[i] = a
-                valid[i] = True
-        M /= _np.maximum(_np.linalg.norm(M, axis=1, keepdims=True), 1e-300)
-        return pd.Series([list(M[i]) if valid[i] else None for i in range(n)])
+        # invalid rows emit null (their pairs then fail the
+        # `cosine >= threshold` filter) instead of failing the job
+        M, valid = _unit_rows(vecs, dim)
+        return pd.Series([list(M[i]) if valid[i] else None
+                          for i in range(len(vecs))])
 
     base = df.select(F.col(id_col).alias("id"), _nv(F.col(vec_col)).alias("nv"))
     if mode == "exact":
         a = base.select(F.col("id").alias("id_a"), F.col("nv").alias("nv_a"))
         b = base.select(F.col("id").alias("id_b"), F.col("nv").alias("nv_b"))
         pairs = a.join(b, F.col("id_a") < F.col("id_b"))
-    elif mode == "lsh":
-        # isNotNull-filtered guard: a non-empty table whose vectors are
-        # ALL null must return empty pairs (null vectors are singleton
-        # clusters), not raise from build_ann_index's own guard
-        first = df.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
-        if first is None:
-            return base.limit(0).select(
-                F.col("id").alias("id_a"), F.col("id").alias("id_b"),
-                F.lit(0.0).alias("cosine"),
-            )
+    else:
         # all n_tables*n_planes projections in ONE numpy matmul per Arrow
-        # batch (build_ann_index) — per-plane `aggregate` expressions run
-        # interpreted and are ~10x slower at 96 projections
-        idx = build_ann_index(df, id_col, vec_col, n_planes, seed, n_tables)
+        # batch — per-plane `aggregate` expressions run interpreted and
+        # are ~10x slower at 96 projections
+        idx = _ann_index(df, id_col, vec_col, dim, n_planes, seed, n_tables)
         banded = idx.select(
             "id",
             F.explode(
@@ -855,8 +864,6 @@ def cosine_near_dup_pairs(
         va = base.select(F.col("id").alias("id_a"), F.col("nv").alias("nv_a"))
         vb = base.select(F.col("id").alias("id_b"), F.col("nv").alias("nv_b"))
         pairs = ids.join(va, "id_a").join(vb, "id_b")
-    else:
-        raise ValueError(f"unknown mode: {mode!r}")
     out = pairs.select(
         "id_a", "id_b", _dot(F.col("nv_a"), F.col("nv_b")).alias("cosine")
     )
@@ -866,23 +873,6 @@ def cosine_near_dup_pairs(
 def lsh_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     rng = np.random.default_rng(seed)
     return rng.standard_normal((n_planes, dim))
-
-
-def embedding_lsh_buckets(
-    df: DataFrame, id_col: str, vec_col: str, planes: np.ndarray
-) -> DataFrame:
-    """Random-hyperplane LSH bucket id per vector (sign bits packed into a
-    long) — the scale path for ANN: probe only the query's bucket (and
-    neighbors) instead of the full scan."""
-    v = F.col(vec_col).cast("array<double>")
-    bits = [
-        F.when(
-            _dot(v, F.array(*[F.lit(float(x)) for x in plane])) >= 0, F.lit(1)
-        ).otherwise(F.lit(0)).cast("long")
-        for plane in planes
-    ]
-    bucket = sum(b * F.lit(1 << i) for i, b in enumerate(bits))
-    return df.select(F.col(id_col).alias("id"), v.alias("vec"), bucket.alias("bucket"))
 
 
 def _stacked_planes(dim: int, n_planes: int, seed: int, n_tables: int) -> np.ndarray:
@@ -907,32 +897,29 @@ def build_ann_index(
     pandas UDF doing a single BLAS matmul per batch — array higher-order
     functions stay interpreted (no codegen), so at 96 projections the
     vectorized numpy path is the fast one."""
-    import pandas as pd  # noqa: F401
+    dim = _table_dim(df, vec_col)
+    if dim is None:
+        raise ValueError("no non-null vectors to index")
+    return _ann_index(df, id_col, vec_col, dim, n_planes, seed, n_tables)
+
+
+def _ann_index(
+    df: DataFrame, id_col: str, vec_col: str, dim: int,
+    n_planes: int, seed: int, n_tables: int,
+) -> DataFrame:
+    """build_ann_index's projection for an already decided `dim`; the LSH
+    mode of cosine_near_dup_pairs calls it with the `dim` it decided."""
     from .row_udf import pandas_udf
 
-    first = df.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
-    if first is None:
-        raise ValueError("no non-null vectors to index")
-    dim = len(first[0])
     P = _stacked_planes(dim, n_planes, seed, n_tables)  # (T*p, dim)
     weights = (1 << np.arange(n_planes)).astype(np.int64)
 
     @pandas_udf("array<long>")
     def buckets(vecs):
-        import numpy as _np
-
-        # None-/ragged-safe: invalid rows get bucket -1 in every table,
-        # which no query probe set ever contains (buckets are >= 0)
+        # invalid rows get bucket -1 in every table, which no query probe
+        # set ever contains (buckets are >= 0)
+        M, valid = _unit_rows(vecs, dim)
         n = len(vecs)
-        M = _np.zeros((n, dim), dtype=_np.float64)
-        valid = _np.zeros(n, dtype=bool)
-        for i, v in enumerate(vecs):
-            if v is None:
-                continue
-            a = _np.asarray(v, dtype=_np.float64)
-            if a.shape == (dim,):
-                M[i] = a
-                valid[i] = True
         signs = (M @ P.T) >= 0  # (n, T*p)
         bits = signs.reshape(n, -1, len(weights))  # (n, T, p)
         ids = (bits * weights).sum(axis=2)  # (n, T)
@@ -1033,7 +1020,7 @@ def train_ivf_centroids(
             members = M[assign == c]
             if len(members):
                 C[c] = members.sum(axis=0)
-        C /= np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
+        C = _unit(C)
     return C
 
 
@@ -1053,21 +1040,9 @@ def build_ivf_index(
 
     @pandas_udf("struct<cell: int, nv: array<double>>")
     def assign(vecs):
-        import numpy as _np
-
         # ragged-length rows (nulls are filtered below) get cell -1 and are
         # dropped after the UDF instead of failing the job
-        n = len(vecs)
-        M = _np.zeros((n, dim), dtype=_np.float64)
-        valid = _np.zeros(n, dtype=bool)
-        for i, v in enumerate(vecs):
-            if v is None:
-                continue
-            a = _np.asarray(v, dtype=_np.float64)
-            if a.shape == (dim,):
-                M[i] = a
-                valid[i] = True
-        M /= _np.maximum(_np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
+        M, valid = _unit_rows(vecs, dim)
         cells = (M @ C.T).argmax(axis=1).astype("int32")
         cells[~valid] = -1
         return pd.DataFrame({"cell": cells, "nv": list(M)})
@@ -1095,25 +1070,32 @@ def write_ivf_index(
     C = train_ivf_centroids(df, vec_col, n_centroids, sample_cap, iters, seed)
     index = build_ivf_index(df, id_col, vec_col, C)
     index.write.mode("overwrite").partitionBy("cell").parquet(f"{path}/index")
-    spark = df.sparkSession
-    cdf = spark.createDataFrame(
+    _write_centroids(df.sparkSession, C, path)
+    return C
+
+
+def _write_centroids(spark, C: np.ndarray, path: str) -> None:
+    """The coarse quantizer's side table `<path>/centroids` (cell int,
+    centroid array<double>), shared by the IVF and IVF-PQ layouts."""
+    spark.createDataFrame(
         [(i, [float(x) for x in row]) for i, row in enumerate(C)],
         "cell int, centroid array<double>",
-    )
-    cdf.coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+
+
+def _read_centroids(spark, path: str) -> np.ndarray:
+    """The (n_cells, dim) centroid matrix of a `_write_centroids` table."""
+    crows = spark.read.parquet(f"{path}/centroids").collect()
+    C = np.zeros((len(crows), len(crows[0]["centroid"])), dtype=np.float64)
+    for r in crows:
+        C[int(r["cell"])] = r["centroid"]
     return C
 
 
 def read_ivf_index(spark, path: str) -> tuple[DataFrame, np.ndarray]:
     """Load a write_ivf_index() table: (index DataFrame with `cell` as a
     partition column, centroids array).  Feed both to ivf_query()."""
-    index = spark.read.parquet(f"{path}/index")
-    crows = spark.read.parquet(f"{path}/centroids").collect()
-    dim = len(crows[0]["centroid"])
-    C = np.zeros((len(crows), dim), dtype=np.float64)
-    for r in crows:
-        C[int(r["cell"])] = r["centroid"]
-    return index, C
+    return spark.read.parquet(f"{path}/index"), _read_centroids(spark, path)
 
 
 def ivf_query(
@@ -1124,8 +1106,7 @@ def ivf_query(
     scan only the nprobe best cells, exact cosine + top-k inside them.
     Recall is the probability the true neighbors' cells rank in the top
     nprobe — tune nprobe/n_centroids; nprobe == n_centroids is exact."""
-    q = np.asarray(query, dtype=np.float64)
-    q /= max(np.linalg.norm(q), 1e-12)
+    q = _unit(query)
     C = np.asarray(centroids, dtype=np.float64)
     order = np.argsort(-(C @ q))[:nprobe]
     cells = [int(c) for c in order]
@@ -1215,20 +1196,9 @@ def pq_encode(
 
     @pandas_udf("array<smallint>")
     def encode(vecs):
-        import numpy as _np
-
         n = len(vecs)
-        M = _np.zeros((n, dim), dtype=_np.float64)
-        valid = _np.zeros(n, dtype=bool)
-        for i, v in enumerate(vecs):
-            if v is None:
-                continue
-            a = _np.asarray(v, dtype=_np.float64)
-            if a.shape == (dim,):
-                M[i] = a
-                valid[i] = True
-        M /= _np.maximum(_np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-        codes = _np.empty((n, m), dtype=_np.int16)
+        M, valid = _unit_rows(vecs, dim)
+        codes = np.empty((n, m), dtype=np.int16)
         for j in range(m):
             X = M[:, j * d_sub:(j + 1) * d_sub]
             codes[:, j] = (X @ B[j].T + bias[j]).argmax(axis=1)
@@ -1242,6 +1212,33 @@ def pq_encode(
     )
 
 
+def _adc_scorer(codebooks: np.ndarray, q: np.ndarray):
+    """The ADC gather UDF of pq_query and ivfpq_query.  The (m, k) table
+    T[j][c] = q_j . codebook[j][c] is built once on the driver; a code
+    then scores sum_j T[j][code_j] with one numpy gather per subspace over
+    the Arrow batch.  A null code scores null."""
+    from .row_udf import pandas_udf
+
+    B = np.asarray(codebooks, dtype=np.float64)
+    m, _kk, d_sub = B.shape
+    T = np.stack([B[j] @ q[j * d_sub:(j + 1) * d_sub] for j in range(m)])
+
+    @pandas_udf("double")
+    def adc(code_col):
+        vals = np.full(len(code_col), np.nan)
+        ok = [i for i, c in enumerate(code_col) if c is not None]
+        if ok:
+            CM = np.stack([np.asarray(code_col[i], dtype=np.int64)
+                           for i in ok])
+            s = np.zeros(len(ok))
+            for j in range(m):
+                s += T[j][CM[:, j]]
+            vals[ok] = s
+        return pd.Series(vals).astype("Float64")
+
+    return adc
+
+
 def pq_query(
     codes: DataFrame, codebooks: np.ndarray, query: list[float], k: int = 10,
 ) -> DataFrame:
@@ -1253,32 +1250,7 @@ def pq_query(
     q · reconstruct(code) for the normalized query (pinned by test).
     orderBy+limit compiles to TakeOrderedAndProject: k rows per partition
     cross the wire, never the scores."""
-    import pandas as pd  # noqa: F401
-    from .row_udf import pandas_udf
-
-    B = np.asarray(codebooks, dtype=np.float64)
-    m, _kk, d_sub = B.shape
-    q = np.asarray(query, dtype=np.float64)
-    q /= max(np.linalg.norm(q), 1e-12)
-    # ADC table: T[j][c] = q_j . codebook[j][c]
-    T = np.stack([B[j] @ q[j * d_sub:(j + 1) * d_sub] for j in range(m)])
-
-    @pandas_udf("double")
-    def adc(code_col):
-        import numpy as _np
-
-        n = len(code_col)
-        vals = _np.full(n, _np.nan)
-        ok = [i for i, c in enumerate(code_col) if c is not None]
-        if ok:
-            CM = _np.stack([_np.asarray(code_col[i], dtype=_np.int64)
-                            for i in ok])
-            s = _np.zeros(len(ok))
-            for j in range(m):
-                s += T[j][CM[:, j]]
-            vals[ok] = s
-        return pd.Series(vals).astype("Float64")
-
+    adc = _adc_scorer(codebooks, _unit(query))
     scored = codes.select("id", adc(F.col("code")).alias("approx_cosine"))
     return (
         scored.filter(F.col("approx_cosine").isNotNull())
@@ -1342,16 +1314,13 @@ def train_pq_codebooks_residual(
 def _training_vectors(df: DataFrame, vec_col: str, cap: int, seed: int) -> np.ndarray:
     """The quantizer trainers' input: a bounded sample of the non-null
     vectors of `vec_col`, L2-normalized, as an (n, dim) matrix.  Ragged-
-    safe: only vectors of the most common length in the sample are kept;
-    a stray wrong-length vector is skipped here and gets no cell / code
-    downstream."""
-    rows = _bounded_sample(
-        df.select(vec_col).filter(F.col(vec_col).isNotNull()), cap, seed)
-    arrs = [np.asarray(r[0], dtype=np.float64) for r in rows]
-    dim = Counter(len(a) for a in arrs).most_common(1)[0][0]
-    M = np.stack([a for a in arrs if len(a) == dim])
-    M /= np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-    return M
+    safe: only vectors of the sample's modal length (the length rule of
+    `_modal_length`) are kept; a stray wrong-length vector is skipped
+    here and gets no cell / code downstream."""
+    vecs = [r[0] for r in _bounded_sample(
+        df.select(vec_col).filter(F.col(vec_col).isNotNull()), cap, seed)]
+    M, valid = _unit_rows(vecs, _modal_length(Counter(map(len, vecs))))
+    return M[valid]
 
 
 def _bounded_sample(df: DataFrame, cap: int, seed: int) -> list:
@@ -1408,10 +1377,7 @@ def write_ivfpq_index(
     coded = index.select("id", "cell", encode("vec", "cell").alias("code"))
     coded.write.mode("overwrite").partitionBy("cell").parquet(f"{path}/index")
     spark = df.sparkSession
-    spark.createDataFrame(
-        [(i, [float(x) for x in row]) for i, row in enumerate(C)],
-        "cell int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    _write_centroids(spark, C, path)
     spark.createDataFrame(
         [(j, c, [float(x) for x in B[j, c]])
          for j in range(mm) for c in range(B.shape[1])],
@@ -1426,11 +1392,7 @@ def read_ivfpq_index(
     """Load a write_ivfpq_index() layout: (codes DataFrame with `cell` as a
     Hive partition column, centroids, codebooks).  Feed to ivfpq_query()."""
     codes = spark.read.parquet(f"{path}/index")
-    crows = spark.read.parquet(f"{path}/centroids").collect()
-    dim = len(crows[0]["centroid"])
-    C = np.zeros((len(crows), dim), dtype=np.float64)
-    for r in crows:
-        C[int(r["cell"])] = r["centroid"]
+    C = _read_centroids(spark, path)
     brows = spark.read.parquet(f"{path}/codebooks").collect()
     m = 1 + max(int(r["subspace"]) for r in brows)
     k = 1 + max(int(r["code"]) for r in brows)
@@ -1452,29 +1414,11 @@ def ivfpq_query(
     The cell term is a CASE literal over nprobe values (codegen, no join);
     the code term is the same m-gather ADC as pq_query.  Only k rows per
     partition survive the TakeOrdered."""
-    import pandas as pd  # noqa: F401
-    from .row_udf import pandas_udf
-
     C = np.asarray(centroids, dtype=np.float64)
-    B = np.asarray(codebooks, dtype=np.float64)
-    m, _kk, d_sub = B.shape
-    q = np.asarray(query, dtype=np.float64)
-    q /= max(np.linalg.norm(q), 1e-12)
+    q = _unit(query)
     cell_dot = C @ q
     order = np.argsort(-cell_dot)[:nprobe]
-    T = np.stack([B[j] @ q[j * d_sub:(j + 1) * d_sub] for j in range(m)])
-
-    @pandas_udf("double")
-    def adc(code_col):
-        import numpy as _np
-
-        CM = _np.stack([_np.asarray(c, dtype=_np.int64) for c in code_col]) \
-            if len(code_col) else _np.zeros((0, m), dtype=_np.int64)
-        s = _np.zeros(len(code_col))
-        for j in range(m):
-            s += T[j][CM[:, j]]
-        return pd.Series(s)
-
+    adc = _adc_scorer(codebooks, q)
     cell_bias = F.lit(0.0)
     for c in order:
         cell_bias = F.when(F.col("cell") == int(c),

@@ -86,14 +86,6 @@ def build_violations_df(
     return out
 
 
-def empty_violations_df(spark) -> DataFrame:
-    schema = (
-        "row_ord long, index_json string, expectation_index int, "
-        "expectation_type string, column string, observed_json string"
-    )
-    return spark.createDataFrame([], schema)
-
-
 def violation_counts_df(viol_df: DataFrame) -> DataFrame:
     """Job A of the lists derivation: exact per-expectation violation counts
     (map-side partial agg, tiny result).  Exposed separately so the executor

@@ -135,12 +135,15 @@ def test_ivf_and_cosine_ops_survive_null_vectors(spark, emb):
 
 def test_ragged_vector_in_training_sample(spark):
     """The quantizer trains on the sample's most common vector length; a
-    wrong-length vector is skipped there and dropped from the index."""
-    rows = [(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0, 0.0]),
-            (3, [1.0, 0.0])]
-    df = spark.createDataFrame(rows, "id long, v array<double>")
-    C = ops.train_ivf_centroids(df, "v", n_centroids=2, iters=3)
-    assert C.shape == (2, 4)
-    got = ops.ann_topk_ivf(df, "id", "v", [1.0, 0.0, 0.0, 0.0], k=3,
-                           n_centroids=2, nprobe=2).collect()
-    assert [r["id"] for r in got] == [1, 2]
+    wrong-length vector is skipped there and dropped from the index.  A
+    tie between two lengths goes to the larger one, in either row order."""
+    tie = [(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0, 0.0]),
+           (3, [1.0, 0.0]), (4, [0.0, 1.0])]
+    for rows in ([(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0, 0.0]),
+                  (3, [1.0, 0.0])], tie, tie[::-1]):
+        df = spark.createDataFrame(rows, "id long, v array<double>")
+        C = ops.train_ivf_centroids(df, "v", n_centroids=2, iters=3)
+        assert C.shape == (2, 4), rows
+        got = ops.ann_topk_ivf(df, "id", "v", [1.0, 0.0, 0.0, 0.0], k=3,
+                               n_centroids=2, nprobe=2).collect()
+        assert [r["id"] for r in got] == [1, 2], rows

@@ -268,3 +268,29 @@ def test_map_results_built_in_base_only():
     caps = re.compile(r"\b_(DUP_VALUE|DUP_KEY|MISSING_VALUE)" r"_CAP\b")
     assert not [rel for top in ("gx_spark", "tools", "tests", "perfbench")
                 for rel, src in _sources(top) if caps.search(src)]
+
+
+def test_vector_ops_share_one_front_end():
+    """Every embedding and ANN op in gx_spark/ops.py fills its Arrow batch
+    through _unit_rows and normalizes with the one _NORM_FLOOR, and the
+    superseded LSH expression builder and empty-violations helper stay
+    gone.  The patterns are split so this file does not match itself."""
+    import ast
+
+    with open(os.path.join(REPO, "gx_spark", "ops.py")) as f:
+        src = f.read()
+    assert "a.shape " "== (dim,)" not in src
+    assert "1e-" "300" not in src
+    fill = "zeros(" "(n, dim)"
+    unit_rows = next(n for n in ast.parse(src).body
+                     if isinstance(n, ast.FunctionDef)
+                     and n.name == "_unit_rows")
+    assert src.count(fill) == 1
+    assert fill in ast.get_source_segment(src, unit_rows)
+    dead = ("embedding_" "lsh_buckets", "empty_" "violations_df")
+    sources = [s for top in ("gx_spark", "tests", "tools", "perfbench")
+               for _, s in _sources(top)]
+    for fn in ("bench.py", "__spark_entry__.py"):
+        with open(os.path.join(REPO, fn)) as f:
+            sources.append(f.read())
+    assert not [d for d in dead for s in sources if d in s]
