@@ -37,10 +37,10 @@ Supported:
 Also supported (round 3): metadata-only `add_files`/`create_from_parquet`
 migration of existing parquet (manifests point at files in place, no data
 rewrite) and v2 row-level deletes of BOTH kinds: positional (parquet
-(file_path, pos) keyed on the reader's `_metadata.row_index`, applied at
-read as a broadcast anti-join) and equality (content=2 files storing key
-tuples + field ids, null-safe matching, strict sequence scoping via era
-grouping).
+(file_path, pos) keyed on the reader's `_metadata.row_index`) and
+equality (content=2 files storing key tuples + field ids, null-safe
+matching, strict sequence scoping via era grouping); every scan applies
+each delete set through one size-gated join (`_join_delete_set`).
 
 Also supported (round 5): MERGE INTO (`merge_into` — single-snapshot MoR
 upsert: an equality-delete manifest + a data manifest committed atomically
@@ -523,6 +523,10 @@ class DataFileInfo:
     equality_ids: list[int] | None = None
     bounds: dict[str, list] | None = None  # col -> [min, max] from footers
     spec_id: int = 0  # partition spec the file was written under
+
+
+# delete sets whose files (manifest sizes) sum below this are broadcast
+_BROADCAST_DELETES_BYTES = 64 * 1024 * 1024
 
 
 # ---------------------------------------------------------------------------
@@ -1148,14 +1152,15 @@ class IcebergLiteTable:
         return meta, seq, snap_id, now_ms
 
     def delete(self, spark, condition: str, now_ms: int | None = None) -> int | None:
-        """Positional row-level delete (Iceberg v2 delete files): rows of
-        the CURRENT snapshot matching `condition` (a Spark SQL predicate)
-        are recorded as (file_path, pos) pairs in parquet delete files and
-        committed under a content=1 (deletes) manifest.  No data file is
-        rewritten — readers apply the deletes as an anti-join (see read()).
-        Positions come from the parquet reader's `_metadata.row_index`, so
-        the whole delete scan is distributed; nothing rows through the
-        driver.  Returns the new snapshot id, or None if nothing matched.
+        """Positional row-level delete (Iceberg v2 delete files): rows
+        visible at the CURRENT snapshot matching `condition` (a Spark SQL
+        predicate) are recorded as (file_path, pos) pairs in parquet
+        delete files and committed under a content=1 (deletes) manifest.
+        No data file is rewritten — readers apply the deletes as an
+        anti-join (see read()).  Positions come from the parquet reader's
+        `_metadata.row_index`, so the whole delete scan is distributed;
+        nothing rows through the driver.  Returns the new snapshot id, or
+        None if no visible row matched.
 
         Spec notes (https://iceberg.apache.org/spec/#position-delete-files):
         files are sorted by (file_path, pos); a delete file written at
@@ -1178,7 +1183,7 @@ class IcebergLiteTable:
 
         meta, seq, snap_id, now_ms = self._begin(now_ms)
         matches = (
-            self._files_df(spark, files, with_position=True)
+            self._read_planned(spark, files, keep_position=True)
             .filter(condition)
             .select(F.col("_gx_file_path").alias("file_path"),
                     F.col("_gx_pos").alias("pos"))
@@ -1218,9 +1223,10 @@ class IcebergLiteTable:
         Keys are hash partitioned by the key columns, so a commit writes
         one delete file per non-empty partition (the spec allows any
         number per commit) — a billion-key delete distributes the
-        distinct + write instead of sorting in a single task.  read()
-        unions all files of one commit back into a single broadcast
-        anti-join, so commit fan-out never multiplies join count."""
+        distinct + write instead of sorting in a single task.  Readers
+        join all files of one commit as ONE delete set (one anti-join,
+        broadcast below the size gate), so commit fan-out never
+        multiplies join count."""
         meta, seq, snap_id, now_ms = self._begin(now_ms)
         entries = self._write_eq_delete_files(spark, keys_df, columns,
                                               snap_id, seq)
@@ -1844,8 +1850,10 @@ class IcebergLiteTable:
                 "deleted_rows_count": 0,
             })
             if content:
+                kind = ("equality" if entries[0]["data_file"]["content"] == 2
+                        else "position")
                 summary["added-delete-files"] = str(len(entries))
-                summary["added-position-deletes"] = str(total_rows)
+                summary[f"added-{kind}-deletes"] = str(total_rows)
             else:
                 summary["added-data-files"] = str(len(entries))
                 summary["added-records"] = str(total_rows)
@@ -2126,14 +2134,14 @@ class IcebergLiteTable:
     ):
         """Spark DataFrame over the planned files.  Partition columns are
         restored from the hive dirs via basePath (grouped per snapshot dir —
-        Spark allows one basePath per read).  Position deletes present in
-        the resolved snapshot are applied as a broadcast left_anti join on
-        (file path, row position) — delete sets are tiny relative to data,
-        so at scale this is a map-side filter, never a shuffle of the data
-        side.  `value_filter={col: (lo, hi)}` both PRUNES files via the
-        manifest column bounds (data skipping — excluded files are never
-        opened) and applies the equivalent row filter, so semantics are
-        exactly BETWEEN."""
+        Spark allows one basePath per read).  Deletes present in the
+        resolved snapshot apply as one left_anti join per delete set,
+        broadcast under the size gate (a map-side filter, never a shuffle
+        of the data side) and left to AQE above it.
+        `value_filter={col: (lo, hi)}` both PRUNES files via the manifest
+        column bounds (data skipping — excluded files are never opened)
+        and applies the equivalent row filter, so semantics are exactly
+        BETWEEN."""
         residual: dict[str, Any] = {}
         if partition_filter:
             # a raw derived-name key (e.g. 'k_bucket') can't be row-level
@@ -2189,14 +2197,13 @@ class IcebergLiteTable:
         - inserts of snapshot S = rows of the data files whose manifest
           entry carries S's snapshot id — a scan of exactly the files S
           added (appends, add_files imports, and merge_into's data leg);
-        - position deletes of S = its (file_path, pos) pairs inner-joined
-          (broadcast — delete sets are small) against the REFERENCED data
-          files read with row positions as visible at S's parent (prior
-          deletes applied via the planned read, so a pair aimed at an
-          already-dead row emits nothing);
-        - equality deletes of S = rows visible at S's parent matching the
-          key tuples null-safely (broadcast semi-join; sequence scoping is
-          free — every parent-visible file is strictly older than S).
+        - position deletes of S = the REFERENCED data files read with row
+          positions as visible at S's parent (prior deletes applied via
+          the planned read, so a pair aimed at an already-dead row emits
+          nothing), semi-joined against S's (file_path, pos) pairs;
+        - equality deletes of S = rows visible at S's parent semi-joined
+          null-safely against the key tuples (sequence scoping is free —
+          every parent-visible file is strictly older than S).
 
         'replace' snapshots (rewrite_data_files compaction) move bytes,
         not rows: they are skipped, exactly as Iceberg's changelog skips
@@ -2212,9 +2219,10 @@ class IcebergLiteTable:
 
         Scale notes: each commit's legs read only that commit's added
         files plus, for deletes, the files its delete keys reference (all
-        other files are never opened); delete pairs/keys ride broadcast
-        joins.  The parent-visible read behind an equality-delete commit
-        scans files older than the delete — the same cost real Iceberg
+        other files are never opened); both delete legs join through the
+        helper read() uses, so pairs and keys ride broadcast joins below
+        its size gate.  The parent-visible read behind an equality-delete
+        commit scans files older than the delete — the same cost real Iceberg
         changelog planning pays, because finding WHICH rows a key killed
         requires looking at them."""
         from functools import reduce
@@ -2276,19 +2284,11 @@ class IcebergLiteTable:
             if (pos or eqs) and parent is None:
                 continue  # deletes need a parent; none can exist without
             if pos:
-                # renamed so a user column called file_path/pos can't
-                # collide with the delete-pair side of the join
-                pairs = (spark.read.parquet(*[d.file_path for d in pos])
-                         .select(F.col("file_path").alias("_gx_dpath"),
-                                 F.col("pos").alias("_gx_dpos"))
-                         .distinct())
                 # referenced data files straight from the (small, local)
                 # delete parquets via one pyarrow column read — no extra
                 # Spark job, no second scan of the delete files.  Stored
                 # paths are the reader's `_metadata.file_path` URI
                 # (file:/...); manifests hold plain paths — normalize.
-                import pyarrow.parquet as pq
-
                 paths: set[str] = set()
                 for d in pos:
                     # .unique() dedups in Arrow (paths are dictionary-
@@ -2305,28 +2305,17 @@ class IcebergLiteTable:
                     visible = self._read_planned(
                         spark, targets, snapshot_id=parent,
                         keep_position=True)
-                    hit = visible.join(
-                        F.broadcast(pairs),
-                        (visible["_gx_file_path"] == pairs["_gx_dpath"])
-                        & (visible["_gx_pos"] == pairs["_gx_dpos"]),
-                        "inner")
-                    legs.append(stamp(hit.select(*names), "delete"))
+                    legs.append(stamp(self._join_delete_set(
+                        spark, visible, pos, "left_semi"), "delete"))
             if eqs:
                 groups: dict[tuple, list[DataFileInfo]] = {}
                 for d in eqs:
                     groups.setdefault(tuple(d.equality_ids or []),
                                       []).append(d)
                 parent_rows = self.read(spark, snapshot_id=parent)
-                for ids, dfiles in sorted(groups.items()):
-                    kn = [self._field_name(i) for i in ids]
-                    keys = spark.read.parquet(
-                        *[d.file_path for d in dfiles]).toDF(*kn).distinct()
-                    cond = reduce(
-                        lambda a, b: a & b,
-                        [parent_rows[c].eqNullSafe(keys[c]) for c in kn])
-                    legs.append(stamp(
-                        parent_rows.join(F.broadcast(keys), cond,
-                                         "left_semi"), "delete"))
+                for _, dfiles in sorted(groups.items()):
+                    legs.append(stamp(self._join_delete_set(
+                        spark, parent_rows, dfiles, "left_semi"), "delete"))
 
         if not legs:
             out = spark.createDataFrame([], empty_ddl)
@@ -2433,57 +2422,64 @@ class IcebergLiteTable:
                 spark, files, with_position=keep_position).select(*out_cols)
         from functools import reduce
 
-        from pyspark.sql import functions as F
-
         pos = [d for d in dels if d.content != 2]
-        eqs = [d for d in dels if d.content == 2]
-        if eqs:
-            # Sequence scoping: an equality delete applies only to data
-            # files STRICTLY older than it.  Group data files into eras by
-            # their applicable delete set so each era gets exactly the
-            # anti-joins the spec prescribes (#eras <= #eq-delete commits
-            # + 1, so the plan stays bounded).  A commit may carry MANY
-            # delete files (written partitioned); all files sharing a
-            # (sequence, equality_ids) group union into ONE broadcast
-            # anti-join, so commit fan-out never multiplies join count.
-            groups: dict[tuple, list[DataFileInfo]] = {}
-            for d in eqs:
+        # Sequence scoping: an equality delete applies only to data files
+        # STRICTLY older than it.  Group data files into eras by their
+        # applicable delete sets so each era gets exactly the anti-joins
+        # the spec prescribes (#eras <= #eq-delete commits + 1, so the
+        # plan stays bounded).  A commit may carry MANY delete files
+        # (written partitioned); all files sharing a (sequence,
+        # equality_ids) group form ONE delete set, so commit fan-out never
+        # multiplies join count.
+        groups: dict[tuple, list[DataFileInfo]] = {}
+        for d in dels:
+            if d.content == 2:
                 gk = (d.sequence_number, tuple(d.equality_ids or []))
                 groups.setdefault(gk, []).append(d)
-            eras: dict[tuple, list[DataFileInfo]] = {}
-            for f in files:
-                key = tuple(sorted(gk for gk in groups
-                                   if gk[0] > f.sequence_number))
-                eras.setdefault(key, []).append(f)
-            parts = []
-            for key in sorted(eras):
-                part = self._files_df(
-                    spark, eras[key],
-                    with_position=bool(pos) or keep_position)
-                for gk in key:
-                    names = [self._field_name(i) for i in gk[1]]
-                    keys = spark.read.parquet(
-                        *[d.file_path for d in groups[gk]]
-                    ).toDF(*names).distinct()
-                    cond = reduce(lambda a, b: a & b,
-                                  [part[c].eqNullSafe(keys[c]) for c in names])
-                    part = part.join(F.broadcast(keys), cond, "left_anti")
-                parts.append(part)
-            df = reduce(lambda a, b: a.unionByName(b), parts)
-        else:
-            df = self._files_df(spark, files, with_position=True)
+        eras: dict[tuple, list[DataFileInfo]] = {}
+        for f in files:
+            key = tuple(sorted(gk for gk in groups
+                               if gk[0] > f.sequence_number))
+            eras.setdefault(key, []).append(f)
+        parts = []
+        for key in sorted(eras):
+            part = self._files_df(spark, eras[key],
+                                  with_position=bool(pos) or keep_position)
+            for gk in key:
+                part = self._join_delete_set(spark, part, groups[gk],
+                                             "left_anti")
+            parts.append(part)
+        df = reduce(lambda a, b: a.unionByName(b), parts)
         if pos:
-            del_df = spark.read.parquet(*[d.file_path for d in pos]) \
-                .select("file_path", "pos")
-            if sum(d.file_size_in_bytes for d in pos) < 64 * 1024 * 1024:
-                del_df = F.broadcast(del_df)
-            df = df.join(
-                del_df,
-                (df["_gx_file_path"] == del_df["file_path"])
-                & (df["_gx_pos"] == del_df["pos"]),
-                "left_anti",
-            )
+            df = self._join_delete_set(spark, df, pos, "left_anti")
         return df.select(*out_cols)
+
+    def _join_delete_set(self, spark, df, dfiles: list[DataFileInfo],
+                         how: str):
+        """`df` joined (`how` = "left_anti" | "left_semi") against ONE
+        delete set: one equality group's files (key tuples matched
+        null-safely) or position-delete files (matched on `_gx_file_path`
+        / `_gx_pos`).  Broadcast below _BROADCAST_DELETES_BYTES, else left
+        to AQE: an explicit hint never falls back, even when it OOMs."""
+        from pyspark.sql import functions as F
+
+        dset = spark.read.parquet(*[d.file_path for d in dfiles])
+        if dfiles[0].content == 2:
+            # stored under the key names at write time: rename by position
+            # onto the current names (the field ids survive renames)
+            names = [self._field_name(i) for i in dfiles[0].equality_ids]
+            dset = dset.toDF(*names)
+            conds = [df[c].eqNullSafe(dset[c]) for c in names]
+        else:
+            # renamed so a user column called file_path/pos can't collide
+            dset = dset.select(F.col("file_path").alias("_gx_dpath"),
+                               F.col("pos").alias("_gx_dpos"))
+            conds = [df["_gx_file_path"] == dset["_gx_dpath"],
+                     df["_gx_pos"] == dset["_gx_dpos"]]
+        size = sum(d.file_size_in_bytes for d in dfiles)
+        if size < _BROADCAST_DELETES_BYTES:
+            dset = F.broadcast(dset)
+        return df.join(dset, conds, how)
 
     def _field_name(self, field_id: int) -> str:
         for f in self.schema_fields:

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 
 import pytest
@@ -281,8 +282,50 @@ def test_positional_delete_roundtrip(spark, tmp_path):
     # plan shape: deletes apply as a broadcast anti-join — the data side
     # never shuffles (the at-scale contract)
     plan = back._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin LeftAnti" in plan or "BroadcastNestedLoop" not in plan
+    assert re.search(r"BroadcastHashJoin \[.*\], LeftAnti, BuildRight",
+                     plan), plan
+    assert "BroadcastNestedLoop" not in plan
     assert "Exchange hashpartitioning" not in plan
+
+
+def test_delete_summaries_name_the_delete_kind(spark, tmp_path):
+    t = IcebergLiteTable.create(str(tmp_path / "tbl"),
+                                _clips_df(spark, 0, 10).schema)
+    t.append(_clips_df(spark, 0, 10).coalesce(1))
+    t.equality_delete(spark, spark.createDataFrame(
+        [("clip_00002",), ("clip_00005",)], "clip_id string"))
+    summary = t.snapshots()[-1]["summary"]
+    assert summary["added-equality-deletes"] == "2"
+    assert "added-position-deletes" not in summary
+    # merge_into's delete group is an equality delete too
+    t.merge_into(spark, _clips_df(spark, 8, 4), on=["clip_id"])
+    summary = t.snapshots()[-1]["summary"]
+    assert summary["added-equality-deletes"] == "4"
+    assert "added-position-deletes" not in summary
+
+
+def test_repeated_delete_commits_nothing(spark, tmp_path):
+    t = IcebergLiteTable.create(str(tmp_path / "tbl"),
+                                _clips_df(spark, 0, 10).schema)
+    t.append(_clips_df(spark, 0, 10).coalesce(1))
+    assert t.delete(spark, "score < 3") is not None
+    n_snaps = len(t.snapshots())
+    # every row the condition matches is already deleted
+    assert t.delete(spark, "score < 3") is None
+    assert len(t.snapshots()) == n_snaps
+    assert t.read(spark).count() == 7
+
+
+def test_delete_of_equality_deleted_row_commits_nothing(spark, tmp_path):
+    t = IcebergLiteTable.create(str(tmp_path / "tbl"),
+                                _clips_df(spark, 0, 10).schema)
+    t.append(_clips_df(spark, 0, 10).coalesce(1))
+    t.equality_delete(spark, spark.createDataFrame(
+        [("clip_00005",)], "clip_id string"))
+    n_snaps = len(t.snapshots())
+    assert t.delete(spark, "clip_id = 'clip_00005'") is None
+    assert len(t.snapshots()) == n_snaps
+    assert t.read(spark).count() == 9
 
 
 def test_delete_then_append_and_more_deletes(spark, tmp_path):

@@ -65,9 +65,9 @@ def test_position_delete_emits_deleted_rows(spark, table):
 
 
 def test_position_delete_of_already_dead_row_emits_nothing(spark, table):
-    # kill k=7 twice: the second delete's pair targets a dead position
-    # (delete() plans matches without applying prior deletes), so the
-    # changelog must not re-emit it — parent-visible rows only
+    # kill k=7 twice: delete() matches only rows visible at the current
+    # snapshot, so the second delete names no pair for k=7, and the
+    # changelog, which reads parent-visible rows only, must not re-emit it
     table.delete(spark, "k = 7")
     s1 = table.current_snapshot_id()
     table.delete(spark, "k >= 7")

@@ -57,7 +57,10 @@ def _run_sequence(spark, tmp_path, seed: int, n_ops: int = 8):
             model.update(rows)
         elif op == "pos_delete":
             cut = rng.randint(0, max(next_k - 1, 0))
-            t.delete(spark, f"k = {cut}")
+            snap = t.delete(spark, f"k = {cut}")
+            # a delete commits exactly when a visible row matches
+            assert (snap is None) == all(kv[0] != cut for kv in model), (
+                f"seed={seed} step={step} cut={cut} history={ops_run}")
             model = Counter({kv: n for kv, n in model.items()
                              if kv[0] != cut})
         elif op == "eq_delete":

@@ -212,6 +212,66 @@ def test_changelog_delete_legs_broadcast_never_sortmerge(spark, tmp_path):
     assert ch.count() == 60
 
 
+def test_delete_sets_broadcast_only_under_the_size_gate(
+        spark, tmp_path, monkeypatch):
+    """read() and changes() hint a broadcast of a delete set only while
+    its files, as the manifests size them, sum below the 64 MiB gate;
+    above it the plain join is left to AQE, and the rows are the same."""
+    import dataclasses
+
+    from pyspark.sql import functions as F
+
+    from gx_spark.iceberg import IcebergLiteTable
+
+    base = spark.range(20).select(
+        F.col("id").alias("k"), (F.col("id") * 10).alias("v"))
+    eq = IcebergLiteTable.create(str(tmp_path / "eq"), base.schema)
+    eq.append(base.coalesce(1))
+    s_eq = eq.current_snapshot_id()
+    eq.equality_delete(
+        spark, spark.createDataFrame([(1,), (2,)], "k long"), ["k"])
+    pos = IcebergLiteTable.create(str(tmp_path / "pos"), base.schema)
+    pos.append(base.coalesce(1))
+    s_pos = pos.current_snapshot_id()
+    pos.delete(spark, "k >= 15")
+
+    def frames():
+        return [eq.read(spark), pos.read(spark),
+                eq.changes(spark, from_snapshot_id=s_eq),
+                pos.changes(spark, from_snapshot_id=s_pos)]
+
+    def hinted(df):
+        analyzed = df._jdf.queryExecution().analyzed().toString()
+        return "ResolvedHint (strategy=broadcast)" in analyzed
+
+    small = frames()
+    assert all(hinted(df) for df in small)
+    planned = IcebergLiteTable.plan_delete_files
+    monkeypatch.setattr(
+        IcebergLiteTable, "plan_delete_files",
+        lambda self, *a, **kw: [
+            dataclasses.replace(d, file_size_in_bytes=65 << 20)
+            for d in planned(self, *a, **kw)])
+    large = frames()
+    assert not any(hinted(df) for df in large)
+    for a, b in zip(small, large):
+        assert sorted(a.collect()) == sorted(b.collect())
+
+
+def test_iceberg_broadcasts_in_one_place():
+    """Every delete join in gx_spark/iceberg.py goes through
+    _join_delete_set, the one broadcast decision of the module."""
+    import ast
+
+    with open(os.path.join(REPO, "gx_spark", "iceberg.py")) as f:
+        src = f.read()
+    assert src.count("F.broadcast(") == 1
+    helper = next(n for n in ast.walk(ast.parse(src))
+                  if isinstance(n, ast.FunctionDef)
+                  and n.name == "_join_delete_set")
+    assert "F.broadcast(" in ast.get_source_segment(src, helper)
+
+
 def _sources(top: str):
     for d, _, files in os.walk(os.path.join(REPO, top)):
         for fn in sorted(files):
