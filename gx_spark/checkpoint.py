@@ -9,9 +9,16 @@ Manifest: append-only JSONL log at <results_dir>/_checkpoint_manifest.json,
 one line per (snapshot_id, partition_id) status change (last line wins;
 fsync per mark; torn tail lines ignored on load) — O(1) I/O per partition
 instead of a full-document rewrite, so a 10k-partition run writes O(P)
-manifest bytes.  Legacy whole-dict JSON manifests are migrated in place.  Validation outputs append to
-<results_dir>/_validation_results and <results_dir>/_violations parquet
-tables (partition lineage columns included in every row).
+manifest bytes.  Legacy whole-dict JSON manifests are migrated in place.
+
+Every incremental runner (this one and the streaming sinks in
+streaming.py) takes one per-batch step, `validated_batch`: transform,
+validate, write the bundle and the extra outputs, release the caches.
+Each output is written by `write_slice`, which overwrites one
+deterministic hive-style directory per batch,
+<results_dir>/<table>/snapshot_id=S/partition_id=P here and
+<results_dir>/<table>/batch_id=N for a stream, so a re-run batch replaces
+its own slice; readers recover the lineage columns from the path.
 """
 
 from __future__ import annotations
@@ -19,15 +26,67 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .executor import ValidationRun
+from .executor import ValidationBundle, ValidationRun
 from .model import EngineOptions, ExpectationSuite
 from .table_provider import PartitionRef, TableProvider
+
+
+def write_slice(df: DataFrame, results_dir: str, table: str, sub: str) -> None:
+    """Overwrite <results_dir>/<table>/<sub>.  The columns that a `k=v`
+    segment of `sub` names are dropped first: the reader gets them back
+    from the path."""
+    named = [seg.split("=", 1)[0] for seg in sub.split("/") if "=" in seg]
+    df.drop(*named).write.mode("overwrite").parquet(
+        os.path.join(results_dir, table, sub))
+
+
+def write_bundle(spark: SparkSession, bundle: ValidationBundle,
+                 results_dir: str, sub: str) -> None:
+    """Write a bundle's `_validation_results` and `_violations` slices."""
+    write_slice(bundle.results_df(spark), results_dir, "_validation_results", sub)
+    vt = bundle.violations_table()
+    if vt is not None:
+        write_slice(vt, results_dir, "_violations", sub)
+
+
+@contextmanager
+def validated_batch(run: ValidationRun, df: DataFrame, results_dir: str | None,
+                    sub: str, *, run_id: str, partition_id: int,
+                    snapshot_id: str | None = None, transform=None,
+                    extra_outputs: dict | None = None):
+    """The per-batch step of every incremental runner: apply `transform`,
+    validate, write the bundle and each extra output under `sub` (when
+    `results_dir` is set), yield the bundle, and release the cached
+    violations and transformed frame on the way out.
+
+    With a transform and extra outputs, the transformed batch is persisted
+    once across the suite and every extra write, so an expensive transform
+    (audio decode) runs once per batch."""
+    persisted = bundle = None
+    try:
+        if transform is not None:
+            df = transform(df)
+            if extra_outputs:
+                df = persisted = df.persist()
+        bundle = run.validate(df, run_id=run_id, partition_id=partition_id,
+                              snapshot_id=snapshot_id)
+        if results_dir:
+            write_bundle(run.spark, bundle, results_dir, sub)
+            for name, fn in (extra_outputs or {}).items():
+                write_slice(fn(df), results_dir, name, sub)
+        yield bundle
+    finally:
+        if bundle is not None:
+            bundle.unpersist()
+        if persisted is not None:
+            persisted.unpersist()
 
 
 class CheckpointManifest:
@@ -174,58 +233,31 @@ class CheckpointRunner:
         snapshot = self.provider.snapshot_id()
         df = self.provider.load(self.spark)
         parts = self.provider.partitions(self.spark)
+        run = ValidationRun(self.spark, self.suite, self.options, self.tables)
+        n_rows = len(self.suite.expectations)
         validated, skipped = [], []
         all_success = True
-        done_count = 0
         for p in parts:
             if self.manifest.is_done(snapshot, p.partition_id):
                 skipped.append(p.partition_id)
                 continue
-            if max_partitions is not None and done_count >= max_partitions:
+            if max_partitions is not None and len(validated) >= max_partitions:
                 break
             self.manifest.mark(snapshot, p.partition_id, "pending", run_id)
-            # partition predicate pushes down into the parquet/Iceberg scan
-            pdf = df.filter(p.predicate)
-            persisted_tdf = None
-            if self.transform is not None:
-                pdf = self.transform(pdf)
-                if self.extra_outputs:
-                    # one materialization of the transformed partition
-                    # serves the suite AND every extra write — the
-                    # expensive transform (audio decode) runs once
-                    persisted_tdf = pdf.persist()
-                    pdf = persisted_tdf
-            bundle = ValidationRun(
-                self.spark, self.suite, self.options, self.tables
-            ).validate(pdf, run_id=run_id, partition_id=p.partition_id,
-                       snapshot_id=snapshot)
-            # Exactly-once on resume: each (snapshot, partition) writes to a
-            # deterministic hive-style subpath with OVERWRITE, so a job killed
-            # after the write but before manifest.mark('done') re-runs the
-            # partition idempotently — no double-counted appends.  The
-            # key=value dirs are recovered as partition columns on read.
+            # Exactly-once on resume: each (snapshot, partition) overwrites
+            # its own slice, so a job killed after the write but before
+            # manifest.mark('done') re-runs the partition idempotently.
+            # The partition predicate pushes down into the scan.
             sub = f"snapshot_id={snapshot}/partition_id={p.partition_id}"
-            rdf = bundle.results_df(self.spark).drop("snapshot_id", "partition_id")
-            rdf.write.mode("overwrite").parquet(
-                os.path.join(self.results_dir, "_validation_results", sub)
-            )
-            n_rows = len(self.suite.expectations)
-            vt = bundle.violations_table()
-            if vt is not None:
-                vt.write.mode("overwrite").parquet(
-                    os.path.join(self.results_dir, "_violations", sub)
-                )
-            for name, fn in self.extra_outputs.items():
-                fn(pdf).write.mode("overwrite").parquet(
-                    os.path.join(self.results_dir, name, sub)
-                )
-            bundle.unpersist()
-            if persisted_tdf is not None:
-                persisted_tdf.unpersist()
-            all_success = all_success and bundle.success
+            with validated_batch(run, df.filter(p.predicate), self.results_dir,
+                                 sub, run_id=run_id,
+                                 partition_id=p.partition_id,
+                                 snapshot_id=snapshot,
+                                 transform=self.transform,
+                                 extra_outputs=self.extra_outputs) as bundle:
+                all_success = all_success and bundle.success
             self.manifest.mark(snapshot, p.partition_id, "done", run_id, n_rows)
             validated.append(p.partition_id)
-            done_count += 1
             if self.actions:
                 from .actions import fire_actions
 
@@ -250,11 +282,7 @@ class CheckpointRunner:
         return CheckpointResult(run_id, snapshot, validated, skipped, all_success)
 
     def results(self) -> DataFrame:
-        return self.spark.read.option("basePath",
-                                      os.path.join(self.results_dir, "_validation_results")
-                                      ).parquet(
-            os.path.join(self.results_dir, "_validation_results")
-        )
+        return self.extra("_validation_results")
 
     def publish(self, iceberg_location: str, now_ms: int | None = None) -> int:
         """Append the accumulated validation-results rows to an Iceberg-lite
@@ -276,12 +304,10 @@ class CheckpointRunner:
         return t.append(df, now_ms=now_ms)
 
     def extra(self, name: str) -> DataFrame:
-        """Read back an extra_outputs table across all partitions (lineage
-        dirs recovered as snapshot_id/partition_id columns)."""
+        """Read back an output table across all partitions (lineage dirs
+        recovered as snapshot_id/partition_id columns)."""
         root = os.path.join(self.results_dir, name)
         return self.spark.read.option("basePath", root).parquet(root)
 
     def violations(self) -> DataFrame:
-        return self.spark.read.option("basePath",
-                                      os.path.join(self.results_dir, "_violations")
-                                      ).parquet(os.path.join(self.results_dir, "_violations"))
+        return self.extra("_violations")

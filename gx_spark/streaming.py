@@ -2,9 +2,10 @@
 streaming support whatsoever, SURVEY.md §2.10; this wraps per-batch
 validation in foreachBatch, the one idiomatic bridge).
 
-Each micro-batch is validated as a normal batch; results and violations
-append to the same `_validation_results` / `_violations` parquet tables as
-the checkpoint runner, keyed by (run_id, batch_id).  Use watermarking /
+Each micro-batch is validated as a normal batch through the checkpoint
+runner's per-batch step (`checkpoint.validated_batch`); results and
+violations land in the same `_validation_results` / `_violations` parquet
+tables, one overwritten `batch_id=N` slice per micro-batch.  Use watermarking /
 windowing upstream of the validated stream as usual — the engine only sees
 the materialized micro-batch DataFrame.
 
@@ -35,8 +36,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from .checkpoint import validated_batch, write_bundle, write_slice
 from .executor import ValidationRun
+from .expectations.base import _KEY_SET_CAP
 from .model import EngineOptions, ExpectationSuite
+
+
+def _start(writer, checkpoint_location: str | None,
+           trigger_available_now: bool):
+    """Start a streaming query, checkpointed when a location is given;
+    available-now drains what is there and stops."""
+    if checkpoint_location:
+        writer = writer.option("checkpointLocation", checkpoint_location)
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def validate_stream(
@@ -58,7 +72,7 @@ def validate_stream(
 
     `transform`/`extra_outputs` mirror CheckpointRunner's: the micro-batch
     is transformed before validation (e.g. validate_and_extract_audio so
-    the suite checks flag columns) and each extra table gets an appended
+    the suite checks flag columns) and each extra table gets its own
     per-batch slice from the SAME transformed DataFrame — persisted across
     the suite and the writes, so an expensive transform (audio decode)
     runs once per micro-batch.  `actions` (gx_spark.actions callables)
@@ -67,58 +81,29 @@ def validate_stream(
     at-least-once action semantics."""
     os.makedirs(results_dir, exist_ok=True)
     run_id = uuid.uuid4().hex[:12]
-    spark = stream_df.sparkSession
-    opts = options or EngineOptions()
-    extras = extra_outputs or {}
+    run = ValidationRun(stream_df.sparkSession, suite, options or EngineOptions())
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        persisted = None
-        tdf = batch_df
-        if transform is not None:
-            tdf = transform(batch_df)
-            if extras:
-                persisted = tdf.persist()
-                tdf = persisted
-        bundle = ValidationRun(spark, suite, opts).validate(
-            tdf, run_id=f"{run_id}-b{batch_id}", partition_id=int(batch_id)
-        )
-        # Exactly-once under foreachBatch's at-least-once replay: every
-        # write lands in a deterministic batch_id=N subdir with OVERWRITE
-        # (same discipline as checkpoint.py), so a retried/restarted batch
-        # rewrites its own output instead of appending duplicates; readers
-        # recover batch_id as a hive partition column.
-        sub = f"batch_id={int(batch_id)}"
-        bundle.results_df(spark).write.mode("overwrite").parquet(
-            os.path.join(results_dir, "_validation_results", sub)
-        )
-        vt = bundle.violations_table()
-        if vt is not None:
-            vt.write.mode("overwrite").parquet(
-                os.path.join(results_dir, "_violations", sub))
-        for name, fn in extras.items():
-            fn(tdf).write.mode("overwrite").parquet(
-                os.path.join(results_dir, name, sub))
-        success = bundle.success
-        bundle.unpersist()
-        if persisted is not None:
-            persisted.unpersist()
-        if actions:
-            from .actions import fire_actions
+        # Exactly-once under foreachBatch's at-least-once replay: a
+        # retried or restarted batch overwrites its own batch_id=N slice
+        # instead of appending duplicates.
+        with validated_batch(run, batch_df, results_dir, f"batch_id={batch_id}",
+                             run_id=f"{run_id}-b{batch_id}",
+                             partition_id=int(batch_id), transform=transform,
+                             extra_outputs=extra_outputs) as bundle:
+            if actions:
+                from .actions import fire_actions
 
-            fire_actions(actions, {
-                "event": "batch_validated", "run_id": run_id,
-                "batch_id": int(batch_id), "suite_name": suite.name,
-                "success": success,
-            })
+                fire_actions(actions, {
+                    "event": "batch_validated", "run_id": run_id,
+                    "batch_id": int(batch_id), "suite_name": suite.name,
+                    "success": bundle.success,
+                })
 
-    writer = stream_df.writeStream.foreachBatch(process_batch)
-    if checkpoint_location:
-        writer = writer.option("checkpointLocation", checkpoint_location)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df.writeStream.foreachBatch(process_batch),
+                  checkpoint_location, trigger_available_now)
 
 
 def detect_cross_batch_duplicates(
@@ -175,11 +160,7 @@ def detect_cross_batch_duplicates(
             .write.mode("append").parquet(out_dir)
         )
     )
-    if checkpoint_location:
-        writer = writer.option("checkpointLocation", checkpoint_location)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(writer, checkpoint_location, trigger_available_now)
 
 
 #: windowed-aggregate expectation types supported by validate_stream_windowed
@@ -221,7 +202,7 @@ def validate_stream_windowed(
     window state is still live are merged — Spark's watermark guarantees
     state cleanup, it is not a strict input filter.  Append output mode ⇒
     each window's verdict is emitted exactly once.  Windows still open
-    when an availableNow run drains stay in the (checkpointed) state store
+    when an available-now run drains stay in the (checkpointed) state store
     and emit on a later run once the watermark passes them — feed a final
     high-timestamp batch (or keep the stream running) to flush."""
     os.makedirs(results_dir, exist_ok=True)
@@ -295,12 +276,9 @@ def validate_stream_windowed(
     writer = verdicts.writeStream.outputMode("append").format("parquet").option(
         "path", out_dir
     )
-    if checkpoint_location is None:
-        checkpoint_location = os.path.join(results_dir, "_window_ckpt")
-    writer = writer.option("checkpointLocation", checkpoint_location)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(writer,
+                  checkpoint_location or os.path.join(results_dir, "_window_ckpt"),
+                  trigger_available_now)
 
 
 def stream_to_iceberg(
@@ -389,6 +367,13 @@ def stream_to_iceberg(
         stream_key = run_id
     if results_dir:
         os.makedirs(results_dir, exist_ok=True)
+    run = ValidationRun(spark, suite, opts) if suite is not None else None
+
+    def land(t, good: DataFrame, batch_id: int) -> None:
+        if not good.isEmpty():
+            # operation-id makes the Iceberg append a no-op on replay —
+            # exactly-once landing under at-least-once foreachBatch
+            t.append(good, operation_id=f"stream-{stream_key}-b{batch_id}")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -397,7 +382,7 @@ def stream_to_iceberg(
             t = IcebergLiteTable(table_location).refresh()
         else:
             t = IcebergLiteTable.create(table_location, batch_df.schema)
-        sub = f"batch_id={int(batch_id)}"
+        sub = f"batch_id={batch_id}"
         if gate == "batch":
             from .wap import validate_and_publish
 
@@ -405,29 +390,21 @@ def stream_to_iceberg(
                 spark, t, batch_df, suite, opts,
                 audit_branch=f"audit-{stream_key}-b{batch_id}",
                 operation_id=f"stream-{stream_key}-b{batch_id}")
-            if r.bundle is not None and results_dir:
-                r.bundle.results_df(spark).write.mode("overwrite").parquet(
-                    os.path.join(results_dir, "_validation_results", sub))
-                vt = r.bundle.violations_table()
-                if vt is not None:
-                    vt.write.mode("overwrite").parquet(
-                        os.path.join(results_dir, "_violations", sub))
-                r.bundle.unpersist()
+            if r.bundle is not None:
+                try:
+                    if results_dir:
+                        write_bundle(spark, r.bundle, results_dir, sub)
+                finally:
+                    r.bundle.unpersist()
             return
-        good = batch_df
-        if suite is not None:
-            bundle = ValidationRun(spark, suite, opts).validate(
-                batch_df, run_id=f"{run_id}-b{batch_id}",
-                partition_id=int(batch_id))
-            # deterministic batch subdir + overwrite = idempotent under
-            # foreachBatch's at-least-once replay (see validate_stream)
-            if results_dir:
-                bundle.results_df(spark).write.mode("overwrite").parquet(
-                    os.path.join(results_dir, "_validation_results", sub))
+        if suite is None:
+            return land(t, batch_df, batch_id)
+        # a replayed batch overwrites its own slices (see validate_stream)
+        with validated_batch(run, batch_df, results_dir, sub,
+                             run_id=f"{run_id}-b{batch_id}",
+                             partition_id=int(batch_id)) as bundle:
+            good = batch_df
             vt = bundle.violations_table()
-            if results_dir and vt is not None:
-                vt.write.mode("overwrite").parquet(
-                    os.path.join(results_dir, "_violations", sub))
             if quarantine and vt is not None:
                 keys = list(opts.unexpected_index_column_names)
                 bad = vt.select(
@@ -440,19 +417,10 @@ def stream_to_iceberg(
                     lambda a, b: a & b,
                     [batch_df[c].cast("string").eqNullSafe(F.col(f"_bad_{c}"))
                      for c in keys])
-                quar = batch_df.join(F.broadcast(bad), cond, "left_semi")
-                quar.write.mode("overwrite").parquet(os.path.join(
-                    results_dir or table_location, "_quarantine", sub))
+                write_slice(batch_df.join(F.broadcast(bad), cond, "left_semi"),
+                            results_dir or table_location, "_quarantine", sub)
                 good = batch_df.join(F.broadcast(bad), cond, "left_anti")
-            bundle.unpersist()
-        if not good.isEmpty():
-            # operation-id makes the Iceberg append a no-op on replay —
-            # exactly-once landing under at-least-once foreachBatch
-            t.append(good, operation_id=f"stream-{stream_key}-b{batch_id}")
+            land(t, good, batch_id)
 
-    writer = stream_df.writeStream.foreachBatch(process_batch)
-    if checkpoint_location:
-        writer = writer.option("checkpointLocation", checkpoint_location)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df.writeStream.foreachBatch(process_batch),
+                  checkpoint_location, trigger_available_now)

@@ -206,6 +206,21 @@ def test_batch_outputs_digest(spark, tmp_path, name):
     assert RUNS[name](spark, str(tmp_path)) == GOLDEN[name]
 
 
+def test_batch_gate_releases_every_micro_batch(spark, tmp_path):
+    """With no results_dir to write, the batch gate still unpersists each
+    micro-batch's audit violations."""
+    from gx_spark.streaming import stream_to_iceberg
+
+    cached = spark.sparkContext._jsc.sc().getPersistentRDDs
+    before = cached().size()
+    stream = _file_stream(spark, str(tmp_path / "src"),
+                          [_rows(3 * i, 3) for i in range(4)])
+    stream_to_iceberg(stream, str(tmp_path / "landed"), _suite(), OPTS,
+                      checkpoint_location=str(tmp_path / "chk"),
+                      gate="batch").awaitTermination(180)
+    assert cached().size() == before
+
+
 if __name__ == "__main__":
     from pyspark.sql import SparkSession
 
