@@ -124,12 +124,12 @@ def detect_cross_batch_duplicates(
     Scale: state is one long per DISTINCT key, hash-partitioned by key —
     the same layout a batch two-stage groupBy uniqueness check shuffles,
     but maintained incrementally.  Output mode is `update` (violations
-    re-emit with their growing count).  Violations append to
-    `<results_dir>/_dup_violations` as parquet."""
+    re-emit with their growing count).  Each micro-batch's violations
+    overwrite `<results_dir>/_dup_violations/batch_id=N`, so a replayed
+    batch replaces its slice; readers get `batch_id` back from the path."""
     import pandas as pd
 
     os.makedirs(results_dir, exist_ok=True)
-    out_dir = os.path.join(results_dir, "_dup_violations")
     key_fields = [stream_df.schema[c] for c in key_cols]
     out_schema = StructType(
         list(key_fields)
@@ -153,13 +153,10 @@ def detect_cross_batch_duplicates(
     dups = stream_df.groupBy(*key_cols).applyInPandasWithState(
         track, out_schema, state_schema, "update", "NoTimeout"
     )
-    writer = (
-        dups.writeStream.outputMode("update").foreachBatch(
-            lambda bdf, bid: None if bdf.isEmpty() else
-            bdf.withColumn("batch_id", F.lit(int(bid)))
-            .write.mode("append").parquet(out_dir)
-        )
-    )
+    # a replayed batch overwrites its own batch_id=N slice
+    writer = dups.writeStream.outputMode("update").foreachBatch(
+        lambda bdf, bid: None if bdf.isEmpty() else
+        write_slice(bdf, results_dir, "_dup_violations", f"batch_id={bid}"))
     return _start(writer, checkpoint_location, trigger_available_now)
 
 

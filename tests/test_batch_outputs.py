@@ -197,13 +197,37 @@ GOLDEN = {
     'validate_stream': {'dirs': '6ba10d9131a80b2a78594f93157ef967', '_extra': '01be3de1376f07ac2a18c73069224290', '_validation_results': '6ccadd26322858f6f33808dcb9a12200', '_violations': 'e1b1f53d5b16bc742acbd57d67ee5639'},
     'rows_gate': {'dirs': '4cf25b2b2d36227af1c479cacde109b2', '_quarantine': 'f6f45aacbe1d46eacb5a2de858abb55e', '_validation_results': '7ee6bb187d3bdf15ab068f97e21f0932', '_violations': 'f1ef1483c2ac78ecb99cc5265c623459', 'landed': '4cd472120f7a4e35d3eed99402c2333a'},
     'batch_gate': {'dirs': 'fca2f2bd85982c9c63162b1a9cc4f398', '_validation_results': 'ef8c137f0bbefdfb70a259856a9214cd', '_violations': '7dd28445b00d447074f0473f3151cc56', 'landed': 'f787eb2ddc2b6b7309be3365dad15ce1'},
-    'cross_batch_dups': {'dirs': '4cf1f19817b2f306cbd6a6ce8b3f639a', '_dup_violations': '570f599fc2ded8b104b0e96372a5c054'},
+    'cross_batch_dups': {'dirs': '7bf0c6899fd6c8cf35b4bb61c13f752e', '_dup_violations': '570f599fc2ded8b104b0e96372a5c054'},
 }
 
 
 @pytest.mark.parametrize("name", list(RUNS))
 def test_batch_outputs_digest(spark, tmp_path, name):
     assert RUNS[name](spark, str(tmp_path)) == GOLDEN[name]
+
+
+def test_dup_violations_replay_overwrites_its_batch(spark, tmp_path):
+    """A micro-batch replayed after its commit was lost rewrites its own
+    _dup_violations slice instead of appending a second copy."""
+    from gx_spark.streaming import detect_cross_batch_duplicates
+
+    src, out, chk = (str(tmp_path / d) for d in ("src", "out", "chk"))
+    batches = [[("a", 1), ("a", 2), ("b", 3)], [("c", 4)], [("a", 5), ("c", 6)]]
+
+    def run(batches):
+        stream = _file_stream(spark, src, batches, "clip_id string, v long")
+        detect_cross_batch_duplicates(
+            stream, ["clip_id"], out, checkpoint_location=chk
+        ).awaitTermination(180)
+        dup = spark.read.parquet(os.path.join(out, "_dup_violations"))
+        return sorted(tuple(r) for r in dup.collect())
+
+    first = run(batches)
+    assert len(first) == 3
+    for name in ("2", ".2.crc"):
+        if os.path.exists(os.path.join(chk, "commits", name)):
+            os.remove(os.path.join(chk, "commits", name))
+    assert run([]) == first
 
 
 def test_batch_gate_releases_every_micro_batch(spark, tmp_path):
