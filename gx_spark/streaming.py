@@ -29,6 +29,7 @@ after the watermark passes its end).
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import uuid
 
@@ -388,11 +389,16 @@ def stream_to_iceberg(
                 audit_branch=f"audit-{stream_key}-b{batch_id}",
                 operation_id=f"stream-{stream_key}-b{batch_id}")
             if r.bundle is not None:
+                # the audit bundle carries the stream's identity, as the
+                # rows gate's bundles do
+                bundle = dataclasses.replace(
+                    r.bundle, run_id=f"{run_id}-b{batch_id}",
+                    partition_id=int(batch_id))
                 try:
                     if results_dir:
-                        write_bundle(spark, r.bundle, results_dir, sub)
+                        write_bundle(spark, bundle, results_dir, sub)
                 finally:
-                    r.bundle.unpersist()
+                    bundle.unpersist()
             return
         if suite is None:
             return land(t, batch_df, batch_id)

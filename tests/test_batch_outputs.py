@@ -196,7 +196,7 @@ GOLDEN = {
     'checkpoint': {'dirs': 'c805daee97cff148da75efecfb7d3dff', '_extra': '1a68d4c7ea9f06927d4cac3963c6440b', '_validation_results': '5a3bd774dbb8eeebb9c91b3ba533ae87', '_violations': '866059e80975312fbbf72bf5f3fb2efe'},
     'validate_stream': {'dirs': '6ba10d9131a80b2a78594f93157ef967', '_extra': '01be3de1376f07ac2a18c73069224290', '_validation_results': '6ccadd26322858f6f33808dcb9a12200', '_violations': 'e1b1f53d5b16bc742acbd57d67ee5639'},
     'rows_gate': {'dirs': '4cf25b2b2d36227af1c479cacde109b2', '_quarantine': 'f6f45aacbe1d46eacb5a2de858abb55e', '_validation_results': '7ee6bb187d3bdf15ab068f97e21f0932', '_violations': 'f1ef1483c2ac78ecb99cc5265c623459', 'landed': '4cd472120f7a4e35d3eed99402c2333a'},
-    'batch_gate': {'dirs': 'fca2f2bd85982c9c63162b1a9cc4f398', '_validation_results': 'ef8c137f0bbefdfb70a259856a9214cd', '_violations': '7dd28445b00d447074f0473f3151cc56', 'landed': 'f787eb2ddc2b6b7309be3365dad15ce1'},
+    'batch_gate': {'dirs': 'fca2f2bd85982c9c63162b1a9cc4f398', '_validation_results': 'c77e238feba700701d6b7954a42e419f', '_violations': '7dd28445b00d447074f0473f3151cc56', 'landed': 'f787eb2ddc2b6b7309be3365dad15ce1'},
     'cross_batch_dups': {'dirs': '7bf0c6899fd6c8cf35b4bb61c13f752e', '_dup_violations': '570f599fc2ded8b104b0e96372a5c054'},
 }
 
@@ -228,6 +228,31 @@ def test_dup_violations_replay_overwrites_its_batch(spark, tmp_path):
         if os.path.exists(os.path.join(chk, "commits", name)):
             os.remove(os.path.join(chk, "commits", name))
     assert run([]) == first
+
+
+def test_batch_gate_stamps_the_stream_identity(spark, tmp_path):
+    """The batch gate's results and violations carry the stream's run id
+    `<run>-b<batch_id>` and partition_id = batch_id, as the rows gate's."""
+    from gx_spark.streaming import stream_to_iceberg
+
+    out = str(tmp_path / "out")
+    stream = _file_stream(spark, str(tmp_path / "src"),
+                          [_rows(0, 3), _rows(3, 3, bad=(4,))])
+    stream_to_iceberg(stream, str(tmp_path / "landed"), _suite(), OPTS,
+                      results_dir=out,
+                      checkpoint_location=str(tmp_path / "chk"),
+                      gate="batch").awaitTermination(180)
+    results = spark.read.parquet(os.path.join(out, "_validation_results"))
+    ids = {r.batch_id: (r.run_id, r.partition_id) for r in
+           results.select("batch_id", "run_id", "partition_id").distinct()
+           .collect()}
+    assert sorted(ids) == [0, 1]
+    assert len({run.rsplit("-b", 1)[0] for run, _ in ids.values()}) == 1
+    for batch_id, (run, partition_id) in ids.items():
+        assert run.endswith(f"-b{batch_id}") and partition_id == batch_id
+    viol = spark.read.parquet(os.path.join(out, "_violations"))
+    assert {tuple(r) for r in viol.select("batch_id", "run_id").distinct()
+            .collect()} == {(1, ids[1][0])}
 
 
 def test_batch_gate_releases_every_micro_batch(spark, tmp_path):
