@@ -412,6 +412,10 @@ def stream_to_iceberg(
                 keys = list(opts.unexpected_index_column_names)
                 bad = vt.select(
                     *[F.col(c).alias(f"_bad_{c}") for c in keys]).distinct()
+                # broadcast the bad keys only under the cap the violations
+                # pass uses for its key sets; past it AQE picks the join
+                if bad.limit(_KEY_SET_CAP + 1).count() <= _KEY_SET_CAP:
+                    bad = F.broadcast(bad)
                 # eqNullSafe: a violating row whose key column is NULL
                 # (e.g. a not_be_null violation on the key itself) must
                 # still be quarantined and excluded from the landed table —
@@ -420,9 +424,9 @@ def stream_to_iceberg(
                     lambda a, b: a & b,
                     [batch_df[c].cast("string").eqNullSafe(F.col(f"_bad_{c}"))
                      for c in keys])
-                write_slice(batch_df.join(F.broadcast(bad), cond, "left_semi"),
+                write_slice(batch_df.join(bad, cond, "left_semi"),
                             results_dir or table_location, "_quarantine", sub)
-                good = batch_df.join(F.broadcast(bad), cond, "left_anti")
+                good = batch_df.join(bad, cond, "left_anti")
             land(t, good, batch_id)
 
     return _start(stream_df.writeStream.foreachBatch(process_batch),

@@ -255,6 +255,42 @@ def test_batch_gate_stamps_the_stream_identity(spark, tmp_path):
             .collect()} == {(1, ids[1][0])}
 
 
+def test_quarantine_broadcasts_only_under_the_key_cap(
+        spark, tmp_path, monkeypatch):
+    """The rows gate hints a broadcast of a micro-batch's bad keys only
+    while they number at most _KEY_SET_CAP; above it the plain join is
+    left to AQE, and the landed and quarantined rows are the same."""
+    from gx_spark import streaming
+
+    write_slice, hinted = streaming.write_slice, []
+
+    def spy(df, results_dir, table, sub):
+        if table == "_quarantine":
+            plan = df._jdf.queryExecution().analyzed().toString()
+            hinted.append("ResolvedHint (strategy=broadcast)" in plan)
+        write_slice(df, results_dir, table, sub)
+
+    monkeypatch.setattr(streaming, "write_slice", spy)
+
+    def run(name):
+        out, loc = str(tmp_path / name / "out"), str(tmp_path / name / "landed")
+        stream = _file_stream(spark, str(tmp_path / name / "src"),
+                              [_rows(0, 6, bad=(1, 4)), _rows(6, 6, bad=(9,))])
+        streaming.stream_to_iceberg(
+            stream, loc, _suite(), OPTS, results_dir=out, quarantine=True,
+            checkpoint_location=str(tmp_path / name / "chk"),
+        ).awaitTermination(180)
+        return _outputs(spark, out), _landed(spark, loc)
+
+    default = run("default")
+    assert hinted == [True, True]
+    # batch 0 has two bad keys, batch 1 one: only batch 1 is under the cap
+    monkeypatch.setattr(streaming, "_KEY_SET_CAP", 1)
+    hinted.clear()
+    assert run("capped") == default
+    assert hinted == [False, True]
+
+
 def test_batch_gate_releases_every_micro_batch(spark, tmp_path):
     """With no results_dir to write, the batch gate still unpersists each
     micro-batch's audit violations."""
