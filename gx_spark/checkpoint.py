@@ -11,14 +11,11 @@ fsync per mark; torn tail lines ignored on load) — O(1) I/O per partition
 instead of a full-document rewrite, so a 10k-partition run writes O(P)
 manifest bytes.  Legacy whole-dict JSON manifests are migrated in place.
 
-Every incremental runner (this one and the streaming sinks in
-streaming.py) takes one per-batch step, `validated_batch`: transform,
-validate, write the bundle and the extra outputs, release the caches.
-Each output is written by `write_slice`, which overwrites one
-deterministic hive-style directory per batch,
-<results_dir>/<table>/snapshot_id=S/partition_id=P here and
-<results_dir>/<table>/batch_id=N for a stream, so a re-run batch replaces
-its own slice; readers recover the lineage columns from the path.
+Every incremental runner (this one and the streaming sinks) takes one
+per-batch step, `validated_batch`.  Each output overwrites one hive-style
+slice per batch (`write_slice`): <results_dir>/<table>/snapshot_id=S/
+partition_id=P here, <table>/batch_id=N for a stream, so a re-run batch
+replaces its own slice; readers recover the lineage columns from the path.
 """
 
 from __future__ import annotations
@@ -33,6 +30,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .actions import fire_actions
 from .executor import ValidationBundle, ValidationRun
 from .model import EngineOptions, ExpectationSuite
 from .table_provider import PartitionRef, TableProvider
@@ -259,8 +257,6 @@ class CheckpointRunner:
             self.manifest.mark(snapshot, p.partition_id, "done", run_id, n_rows)
             validated.append(p.partition_id)
             if self.actions:
-                from .actions import fire_actions
-
                 fire_actions(self.actions, {
                     "event": "partition_validated",
                     "run_id": run_id, "snapshot_id": snapshot,
@@ -270,8 +266,6 @@ class CheckpointRunner:
                     "n_expectations": n_rows,
                 })
         if self.actions:
-            from .actions import fire_actions
-
             fire_actions(self.actions, {
                 "event": "run_end", "run_id": run_id,
                 "snapshot_id": snapshot, "suite_name": self.suite.name,

@@ -5,9 +5,10 @@ validation in foreachBatch, the one idiomatic bridge).
 Each micro-batch is validated as a normal batch through the checkpoint
 runner's per-batch step (`checkpoint.validated_batch`); results and
 violations land in the same `_validation_results` / `_violations` parquet
-tables, one overwritten `batch_id=N` slice per micro-batch.  Use watermarking /
-windowing upstream of the validated stream as usual — the engine only sees
-the materialized micro-batch DataFrame.
+tables, one overwritten `batch_id=N` slice per micro-batch, so a replayed
+batch replaces its own slice.  Use watermarking / windowing upstream of
+the validated stream as usual — the engine only sees the materialized
+micro-batch DataFrame.
 
 Semantics caveat (inherent to per-batch validation, not this adapter):
 GLOBAL expectations — uniqueness, compound uniqueness, row_count vs other
@@ -37,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from .actions import fire_actions
 from .checkpoint import validated_batch, write_bundle, write_slice
 from .executor import ValidationRun
 from .expectations.base import _KEY_SET_CAP
@@ -95,8 +97,6 @@ def validate_stream(
                              partition_id=int(batch_id), transform=transform,
                              extra_outputs=extra_outputs) as bundle:
             if actions:
-                from .actions import fire_actions
-
                 fire_actions(actions, {
                     "event": "batch_validated", "run_id": run_id,
                     "batch_id": int(batch_id), "suite_name": suite.name,

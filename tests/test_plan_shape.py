@@ -354,3 +354,28 @@ def test_vector_ops_share_one_front_end():
         with open(os.path.join(REPO, fn)) as f:
             sources.append(f.read())
     assert not [d for d in dead for s in sources if d in s]
+
+
+def test_incremental_runners_share_one_batch_step():
+    """The checkpoint runner and the streaming sinks write every output
+    through checkpoint.write_slice, flatten a bundle's results only in
+    write_bundle, and start every streaming query through one _start."""
+    import ast
+
+    def source(name):
+        with open(os.path.join(REPO, "gx_spark", name)) as f:
+            return f.read()
+
+    def body(src, fn):
+        node = next(n for n in ast.walk(ast.parse(src))
+                    if isinstance(n, ast.FunctionDef) and n.name == fn)
+        return ast.get_source_segment(src, node)
+
+    ckpt, stream = source("checkpoint.py"), source("streaming.py")
+    for needle, fn in ((".write.mode(", "write_slice"),
+                       ("results_df(", "write_bundle")):
+        assert stream.count(needle) == 0, needle
+        assert ckpt.count(needle) == 1, needle
+        assert needle in body(ckpt, fn), needle
+    assert stream.count("availableNow") == 1
+    assert "availableNow" in body(stream, "_start")
