@@ -38,9 +38,10 @@ from pyspark.sql import functions as F  # noqa: E402
 from gx_spark import EngineOptions, ExpectationSuite  # noqa: E402
 from gx_spark.table_provider import PartitionRef, TableProvider  # noqa: E402
 
+from tests.test_streaming_state import _write_batches  # noqa: E402
+
 SCHEMA = "k int, p int, v double"
 OPTS = EngineOptions(unexpected_index_column_names=("k",))
-_MTIME0 = 1_700_000_000
 
 
 def _rows(lo: int, n: int, bad: tuple = ()) -> list[tuple]:
@@ -79,16 +80,9 @@ class _TwoParts(TableProvider):
 
 
 def _file_stream(spark, src, batches, schema=SCHEMA):
-    """One parquet file per batch with strictly increasing mtimes, read
-    back at one file per micro-batch."""
-    os.makedirs(src, exist_ok=True)
-    for i, rows in enumerate(batches):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append").parquet(src)
-        newest = max((os.path.getmtime(os.path.join(src, f)), f)
-                     for f in os.listdir(src) if f.endswith(".parquet"))[1]
-        t = _MTIME0 + i * 10
-        os.utime(os.path.join(src, newest), (t, t))
+    """`batches` appended one parquet file each, read back at one file
+    per micro-batch."""
+    _write_batches(spark, src, batches, schema)
     return (spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1).parquet(src))
 
